@@ -9,10 +9,26 @@ Output: {"metric": "kg_pipeline_sec", "value": <sec>, "unit": "sec",
          "parallelism": <cores>, "triples_emitted": N,
          "triples_per_sec": N, "canonical_triples": N}
 
-"triples emitted" counts relationship rows produced by the extraction
-stage (entity rels + FROM_CHUNK lineage edges) — the unit the north rule's
-throughput metric is defined over; "canonical_triples" is the distinct
-(subj, pred, obj) count after pruning + resolution.
+The pipeline rows time the library entry points a user calls —
+``run_kg_pipeline`` (``collect_metrics=True``), then
+``triples_view(...).count()``, then ``run_similarity_resolution`` — and
+read the rest from ``KGResult.metrics``:
+
+* ``kg_pipeline_total``: assemble → triples count (wall);
+* ``kg_emit_fused``: ``metrics["extract_s"]``, assemble + fused
+  split/extract up to the eager graph-rows boundary;
+* ``kg_prune_resolve``: ``kg_pipeline_total − extract_s`` (chunks view,
+  lexical graph, prune, resolve, triples count);
+* ``kg_fuzzy_resolve``: the fuzzy second pass, outside the total;
+* ``triples_emitted``: ``metrics["edges_emitted"]``, the relationship rows
+  the extraction stage produced (entity rels + FROM_CHUNK lineage edges);
+  ``triples_per_sec`` = ``edges_emitted / extract_s``;
+* ``canonical_triples``: distinct (subj, pred, obj) after pruning and
+  resolution.
+
+With ``BENCH_SKIP_RESOLVE=1`` the pipeline runs with
+``create_lexical_graph=False`` and ``perform_entity_resolution=False``
+and stops after extraction (no triples count, no fuzzy pass).
 
 Scaling evidence (N vs 4N cores) is produced by scripts/bench_scaling.py,
 which runs this file at two parallelism levels in fresh JVMs.
@@ -32,25 +48,21 @@ sys.path.insert(0, str(REPO))
 from pyspark.sql import functions as F  # noqa: E402
 
 from neo4j_graphrag_python_spark import transcripts as tr  # noqa: E402
-from neo4j_graphrag_python_spark.operators.assemble import (  # noqa: E402
-    assemble_documents,
-)
 from neo4j_graphrag_python_spark.operators.extractor import (  # noqa: E402
-    chunks_view,
     demo_rules,
-    extract_from_documents,
     regex_extractor,
-    split_graph_rows,
 )
-from neo4j_graphrag_python_spark.operators.lexical import (  # noqa: E402
-    build_lexical_graph,
+from neo4j_graphrag_python_spark.plans.pipeline import (  # noqa: E402
+    run_kg_pipeline,
+    run_similarity_resolution,
+    triples_view,
 )
-from neo4j_graphrag_python_spark.operators.pruning import prune_graph  # noqa: E402
-from neo4j_graphrag_python_spark.operators.resolver import resolve_exact  # noqa: E402
-from neo4j_graphrag_python_spark.plans.pipeline import triples_view  # noqa: E402
 from neo4j_graphrag_python_spark.schema import demo_schema  # noqa: E402
 from neo4j_graphrag_python_spark.session import build_spark  # noqa: E402
-from neo4j_graphrag_python_spark.types import SplitterConfig  # noqa: E402
+from neo4j_graphrag_python_spark.types import (  # noqa: E402
+    PipelineConfig,
+    SplitterConfig,
+)
 
 
 def main() -> None:
@@ -76,96 +88,41 @@ def main() -> None:
     repeats = int(os.environ.get("BENCH_REPEATS", "1" if skip_resolve else "2"))
 
     transcripts = spark.read.parquet(fixture)
-    splitter_cfg = SplitterConfig(600, 200, approximate=True)
+    config = PipelineConfig(
+        splitter=SplitterConfig(600, 200, approximate=True),
+        extract_partitions=4 * cpus,
+        collect_metrics=True,
+        create_lexical_graph=not skip_resolve,
+        perform_entity_resolution=not skip_resolve,
+    )
 
     def one_attempt() -> tuple[dict, int, int | None]:
-        timings: dict[str, float] = {}
-
-        def timed(name: str, fn):
-            t0 = time.perf_counter()
-            out = fn()
-            timings[name] = round(time.perf_counter() - t0, 3)
-            return out
-
-        # --- headline: triple emission (assemble → fused split+extract) ---
-        # one shuffle (conv_id) + one Python pass; the staged
-        # split→cache→extract path exists for checkpointed lineage /
-        # extreme skew and is exercised by the pipeline tests.
-        t_pipeline0 = time.perf_counter()
-        documents = assemble_documents(transcripts)
-        # emit_chunk_rows: the chunks table comes out of the SAME fused
-        # pass (kind='chunk' rows → chunks_view) — the corpus is split
-        # once, not once for extraction and once for the lineage table.
-        # Scaling runs (BENCH_SKIP_RESOLVE) keep chunk emission off so the
-        # triples/sec metric definition stays comparable across rounds.
-        graph_rows = extract_from_documents(
-            documents,
-            regex_extractor(demo_rules()),
-            splitter_config=splitter_cfg,
-            num_partitions=4 * cpus,
-            emit_chunk_rows=not skip_resolve,
-        ).persist()
-        caches = [graph_rows]
-        n_emitted = timed(
-            "kg_emit_fused",
-            lambda: graph_rows.where(F.col("kind") == "edge").count(),
+        t0 = time.perf_counter()
+        result = run_kg_pipeline(
+            transcripts, regex_extractor(demo_rules()), demo_schema(), config
         )
-
-        post_resolve = {}
-
-        def finish():
-            # chunks come from the cached fused output; persist the typed
-            # projection — three lexical consumers read it, and re-deriving
-            # from the (map-typed, bigger) graph_rows cache per consumer
-            # costs more than one small materialization
-            chunks = chunks_view(graph_rows).persist()
-            caches.append(chunks)
-            timed("kg_split", lambda: chunks.count())
-            entity_nodes, entity_edges = split_graph_rows(graph_rows)
-            lex_nodes, lex_edges = build_lexical_graph(documents, chunks)
-            # graph_rows and chunks (the expensive Python stages) are
-            # cached; everything below re-reads cheap cache scans, so no
-            # further persists — an extra materialized copy of the unions
-            # costs more than it saves (measured ~1.5-3s of the sf0.1 tail)
-            nodes = lex_nodes.unionByName(entity_nodes)
-            edges = lex_edges.unionByName(
-                entity_edges, allowMissingColumns=True
-            )
-            nodes, edges, _, _ = prune_graph(nodes, edges, demo_schema())
-            structural = ("NEXT_CHUNK", "FROM_DOCUMENT")
-            # no standalone dedupe_edges: resolution ends in the same
-            # (start,type,end) min_by and min-of-mins == global min —
-            # matching plans/pipeline.py's skip of the duplicate shuffle
-            nodes, edges, _ = resolve_exact(
-                nodes, edges, untouched_edge_types=structural
-            )
-            post_resolve["nodes"], post_resolve["edges"] = nodes, edges
-            return triples_view(nodes, edges).count()
-
-        canon = None if skip_resolve else timed("kg_prune_resolve", finish)
-        timings["kg_pipeline_total"] = round(time.perf_counter() - t_pipeline0, 3)
+        canon = None
         if not skip_resolve:
+            canon = triples_view(result.nodes, result.edges).count()
+        total = time.perf_counter() - t0
+        extract_s = result.metrics["extract_s"]
+        timings = {
+            "kg_emit_fused": extract_s,
+            "kg_pipeline_total": round(total, 3),
+        }
+        if not skip_resolve:
+            timings["kg_prune_resolve"] = round(total - extract_s, 3)
             # second-pass fuzzy resolution (A2-A4: LSH blocking → WRatio →
-            # connected components → merge), timed OUTSIDE kg_pipeline_total
-            # so the headline stays comparable across rounds
-            from neo4j_graphrag_python_spark.operators.resolver import (
-                resolve_similarity,
-            )
-
-            timed(
-                "kg_fuzzy_resolve",
-                lambda: resolve_similarity(
-                    post_resolve["nodes"],
-                    post_resolve["edges"],
-                    method="fuzzy",
-                    similarity_threshold=0.9,
-                )[0]
-                .where(F.col("is_entity"))
-                .count(),
-            )
-        for c in caches:
-            c.unpersist()
-        return timings, n_emitted, canon
+            # connected components → merge), timed OUTSIDE
+            # kg_pipeline_total so the headline stays comparable across
+            # rounds
+            t0 = time.perf_counter()
+            run_similarity_resolution(
+                result, method="fuzzy", similarity_threshold=0.9
+            ).nodes.where(F.col("is_entity")).count()
+            timings["kg_fuzzy_resolve"] = round(time.perf_counter() - t0, 3)
+        spark.catalog.clearCache()
+        return timings, result.metrics["edges_emitted"], canon
 
     loadavgs = []
     attempts = []

@@ -948,7 +948,6 @@ def embedding_neardup_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     broadcast_rescore: bool = True,
-    rescore: str = "cells",
 ) -> DataFrame:
     """Embedding near-dup via k-means IVF cell blocking + exact cosine
     rescore — the scale path for MODERATE thresholds, where sign-LSH
@@ -975,9 +974,9 @@ def embedding_neardup_ivf(
 
     Plan shape mirrors the LSH path's vector-free discipline: one
     widened projection computes the probe array (JVM HOFs over one
-    array-literal codebook), the explode carries ONLY (id, cell), the
-    candidate equi-join runs on the cell key, and vectors join back once
-    per side for the rescore.  The codebook fit
+    array-literal codebook), the explode carries ONLY (id, cell), vectors
+    join those rows for the per-cell GEMM below, and join back once per
+    side for the canonical rescore.  The codebook fit
     (:func:`fit_kmeans_centroids`) is the one driver-side step —
     codebook-sized, seeded, shared with ``ann_topk_kmeans``.
 
@@ -988,14 +987,13 @@ def embedding_neardup_ivf(
     60k×64 vectors with a 5·10⁷ candidate set, versus two 30 MB
     broadcasts and a fully streaming rescore with it.  The hint is
     right whenever the corpus's (id, vector) projection fits executor
-    memory (up to ~10⁷ vectors); beyond that use ``rescore="cells"``.
+    memory (up to ~10⁷ vectors); beyond that pass
+    ``broadcast_rescore=False``.
 
-    ``rescore="cells"`` (the default — output identical to the pairs
-    path by test, and measured 3× faster at bench scale because the
-    candidate pair set never materializes as rows and the per-pair
-    interpreted cosine folds become one numpy GEMM per cell): instead of
-    materializing candidate PAIRS at all, vectors are shipped to their
-    primary cell (residents) and ``nprobe−1`` probe cells (visitors),
+    Candidates are scored per cell, never materialized as PAIR rows
+    (measured 3× faster at bench scale than a probe⋈primary candidate
+    join with per-pair interpreted cosine folds): vectors are shipped to
+    their primary cell (residents) and ``nprobe−1`` probe cells (visitors),
     and each cell group runs a tiled numpy GEMM over its members —
     resident×resident and visitor×resident scores (visitor×visitor
     pairs are NOT candidates: such a pair qualifies only through one
@@ -1003,10 +1001,10 @@ def embedding_neardup_ivf(
     margin INSIDE the kernel.  Only survivors (output-sized) reach
     a shuffle; they are deduped (a pair can surface in ≤2 cells) and
     rescored with the canonical fold-order :func:`cosine_col`, so the
-    output is identical to the pairs path.  Shuffle volume is
-    nprobe·n vector rows (linear), never the candidate pair count;
-    per-task memory is the largest cell × dim, bounded by the tile
-    loop.  Same output, asserted by test.
+    output equals the candidate-join definition above (asserted by test
+    against a probe⋈primary reference).  Shuffle volume is nprobe·n
+    vector rows (linear), never the candidate pair count; per-task
+    memory is the largest cell × dim, bounded by the tile loop.
     """
     from neo4j_graphrag_python_spark.operators.similarity import (
         _centroid_topn,
@@ -1035,21 +1033,7 @@ def embedding_neardup_ivf(
         _centroid_topn(v, centroids, nprobe).alias("probes"),
     ).localCheckpoint(eager=False)
     base = embeddings.select(F.col(id_col).alias("id"), v.alias("v"))
-    if rescore == "cells":
-        cand = _ivf_cell_survivors(assigned, base, threshold)
-    else:
-        prim = assigned.select("id", F.element_at("probes", 1).alias("cell"))
-        probe = assigned.select("id", F.explode("probes").alias("cell"))
-        cand = (
-            probe.withColumnRenamed("id", "id_p")
-            .join(prim.withColumnRenamed("id", "id_q"), "cell")
-            .where(F.col("id_p") != F.col("id_q"))
-            .select(
-                F.least("id_p", "id_q").alias("id_a"),
-                F.greatest("id_p", "id_q").alias("id_b"),
-            )
-            .dropDuplicates(["id_a", "id_b"])
-        )
+    cand = _ivf_cell_survivors(assigned, base, threshold)
     va = base.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"))
     vb = base.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"))
     if broadcast_rescore:
@@ -1070,7 +1054,7 @@ def _ivf_cell_survivors(
     threshold: float,
     tile_rows: int = 4096,
 ) -> DataFrame:
-    """Per-cell GEMM candidate survivors for ``rescore="cells"``.
+    """Per-cell GEMM candidate survivors for :func:`embedding_neardup_ivf`.
 
     One vector-carrying exchange (explode probes → repartition by cell:
     nprobe·n rows, linear in the corpus), then ``applyInPandas`` per
@@ -1281,7 +1265,7 @@ def embedding_neardup(
         n = embeddings.count()
         if n * dim <= broadcast_cells:
             for k in ("num_centroids", "nprobe", "sample_n", "centroids",
-                      "seed", "broadcast_rescore", "rescore"):
+                      "seed", "broadcast_rescore"):
                 kwargs.pop(k, None)
             return embedding_neardup_blocked_exact(
                 embeddings,
@@ -1292,12 +1276,10 @@ def embedding_neardup(
             )
         kwargs.pop("block_rows", None)
         # beyond the broadcast tier the rescore sides can't broadcast by
-        # definition — per-cell GEMM is the only coherent rescore there,
-        # and the final canonical rescore must SHUFFLE-join the
+        # definition — the final canonical rescore must SHUFFLE-join the
         # output-sized survivors rather than broadcast the full
         # (id, vector) projection (which is exactly what doesn't fit in
         # this tier) — so broadcast_rescore is forced off, not defaulted
-        kwargs.setdefault("rescore", "cells")
         kwargs["broadcast_rescore"] = False
         return embedding_neardup_ivf(
             embeddings,
@@ -1309,7 +1291,7 @@ def embedding_neardup(
     # strip every non-LSH kwarg so a caller's IVF/GEMM tuning knobs don't
     # make valid kwargs threshold-dependent (seed is shared: LSH takes it)
     for k in ("num_centroids", "nprobe", "sample_n", "centroids",
-              "block_rows", "rescore", "broadcast_rescore",
+              "block_rows", "broadcast_rescore",
               "broadcast_cells"):
         kwargs.pop(k, None)
     return embedding_neardup_lsh(

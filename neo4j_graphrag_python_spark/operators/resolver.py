@@ -180,48 +180,14 @@ def resolve_exact(
       proportional to the corpus.
     * **mapping path** — the generic fallback (edges from storage, custom
       resolve property): mention-id mapping + apply_merge_mapping.
+
+    Callers pass materialized ``nodes``/``edges``: resolution reads both
+    frames several times (entity scope, canonical join-back, non-entity
+    complement; edge passthrough and both endpoint re-pointings), so an
+    unmaterialized input re-runs its whole upstream lineage per
+    consumer.  ``run_kg_pipeline`` materializes them at the
+    pre-resolve stage boundary (``checkpoint_stage``) before calling in.
     """
-    # materialize the resolve inputs once (MEMORY_AND_DISK, spillable):
-    # resolution fans out into several consumers of both frames (entity
-    # scope, canonical join-back, non-entity complement; edge
-    # passthrough + entity-adjacent splits), and each consumer would
-    # otherwise re-traverse the whole upstream union+prune lineage —
-    # measured 7 full re-scans of the extraction cache in the one
-    # triples-view query at sf0.1.  This is the stage-boundary
-    # materialization the checkpointed pipeline gets from its
-    # ResultStore; callers that already persisted these frames see a
-    # cache-manager no-op.
-    # coalesce to the session parallelism before the checkpoint: the
-    # graph frames are unions of wide upstream caches (333/660
-    # partitions at bench scale), and checkpointed RDD partition counts
-    # cascade into every downstream join/union (measured ~2000-task jobs
-    # for a 500-row distinct).  coalesce is narrow — the materialization
-    # does the same work in cores-many tasks.
-    sc = nodes.sparkSession.sparkContext
-    prefetch_edges = False
-    if not nodes.is_cached:
-        nodes = nodes.coalesce(sc.defaultParallelism).localCheckpoint(eager=False)
-    if not edges.is_cached:
-        edges = edges.coalesce(sc.defaultParallelism).localCheckpoint(eager=False)
-        prefetch_edges = True
-    if prefetch_edges:
-        # overlap the edges materialization with the canonical-winner
-        # computation below (guide-§2.6 back-fill): the two are
-        # independent one-pass jobs over the upstream caches, and
-        # running them sequentially left most of the cluster idle during
-        # each one's tail.  Best-effort — a failure here simply
-        # resurfaces in the first real edges consumer.
-        from pyspark import InheritableThread
-
-        _edges = edges
-
-        def _materialize():
-            try:
-                _edges.count()
-            except Exception:
-                pass
-
-        InheritableThread(target=_materialize, daemon=True).start()
     carried = (
         resolve_property == "name"
         and "start_name" in edges.columns

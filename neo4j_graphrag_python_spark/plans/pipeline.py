@@ -196,21 +196,22 @@ def _collect_metrics(
     """Run-health metrics from already-materialized stage frames.
 
     Both aggregations scan the eager checkpoint/persist of their stage
-    (no recompute): the status breakdown is one map-side-combinable
-    groupBy over graph_rows, the chunk count a cached count.  Combined
-    with the per-chunk (conv_id, chunk_uid, status) lineage columns the
-    extractor emits (north-rule metrics surface: what failed, where, and
-    how long each eager stage took)."""
-    by_status = {
-        r["status"]: r["n"]
-        for r in graph_rows.groupBy("status")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    n_errors = sum(n for s, n in by_status.items() if s != "ok")
+    (no recompute): the (kind, status) breakdown is one
+    map-side-combinable groupBy over graph_rows, the chunk count a cached
+    count.  ``edges_emitted`` counts the extracted relationship rows
+    (entity rels + FROM_CHUNK lineage edges) before pruning and
+    resolution.  Combined with the per-chunk (conv_id, chunk_uid, status)
+    lineage columns the extractor emits (north-rule metrics surface: what
+    failed, where, and how long each eager stage took)."""
+    counts = graph_rows.groupBy("kind", "status").count().collect()
     metrics: dict = dict(walls)
-    metrics["rows_ok"] = int(by_status.get("ok", 0))
-    metrics["rows_error"] = int(n_errors)
+    metrics["rows_ok"] = sum(r["count"] for r in counts if r["status"] == "ok")
+    metrics["rows_error"] = sum(
+        r["count"] for r in counts if r["status"] != "ok"
+    )
+    metrics["edges_emitted"] = sum(
+        r["count"] for r in counts if r["kind"] == "edge"
+    )
     if chunks is not None:
         metrics["n_chunks"] = int(chunks.count())
     if stats is not None:

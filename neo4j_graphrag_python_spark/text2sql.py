@@ -139,18 +139,18 @@ def assert_read_only_plan(spark, sql: str) -> str:
             f"Failed to get search result: {e}"
         ) from e
     jvm = spark._jvm
-    banned = []
-    for cls in (
-        # every DDL/DML/side-effect plan extends one of these two
-        "org.apache.spark.sql.catalyst.plans.logical.Command",
-        "org.apache.spark.sql.catalyst.plans.logical.ParsedStatement",
-        # arbitrary shell execution
-        "org.apache.spark.sql.catalyst.plans.logical.ScriptTransformation",
-    ):
-        try:
-            banned.append(jvm.java.lang.Class.forName(cls))
-        except Exception:  # pragma: no cover - class moved between versions
-            pass
+    # fail closed: a class missing from this Spark build raises here
+    # rather than silently shrinking the banned list
+    banned = [
+        jvm.java.lang.Class.forName(cls)
+        for cls in (
+            # every DDL/DML/side-effect plan extends one of these two
+            "org.apache.spark.sql.catalyst.plans.logical.Command",
+            "org.apache.spark.sql.catalyst.plans.logical.ParsedStatement",
+            # arbitrary shell execution
+            "org.apache.spark.sql.catalyst.plans.logical.ScriptTransformation",
+        )
+    ]
     # walk the parsed tree (children() covers the main plan; WITH ctes and
     # nested queries are ordinary children at parse time)
     stack = [jplan]

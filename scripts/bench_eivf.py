@@ -54,7 +54,6 @@ def main() -> None:
             num_centroids=k,
             nprobe=nprobe,
             sample_n=50_000,
-            rescore=os.environ.get("EIVF_RESCORE", "pairs"),
         )
         rows = out.count()
         walls.append(round(time.time() - t0, 2))

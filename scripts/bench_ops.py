@@ -131,34 +131,34 @@ def main() -> None:
     if with_fuzzy:
         # build the KG once, untimed — the operator under test is the
         # similarity-resolution pass, not the pipeline in front of it
-        from neo4j_graphrag_python_spark.operators.assemble import (
-            assemble_documents,
-        )
         from neo4j_graphrag_python_spark.operators.extractor import (
             demo_rules,
-            extract_from_documents,
             regex_extractor,
-            split_graph_rows,
         )
-        from neo4j_graphrag_python_spark.operators.pruning import prune_graph
         from neo4j_graphrag_python_spark.operators.resolver import (
-            resolve_exact,
             resolve_similarity,
         )
+        from neo4j_graphrag_python_spark.plans.pipeline import (
+            run_kg_pipeline,
+        )
         from neo4j_graphrag_python_spark.schema import demo_schema
-        from neo4j_graphrag_python_spark.types import SplitterConfig
+        from neo4j_graphrag_python_spark.types import (
+            PipelineConfig,
+            SplitterConfig,
+        )
 
         transcripts = spark.read.parquet(f"{sf_dir}/transcripts.parquet")
-        g = extract_from_documents(
-            assemble_documents(transcripts),
+        kg = run_kg_pipeline(
+            transcripts,
             regex_extractor(demo_rules()),
-            splitter_config=SplitterConfig(600, 200, approximate=True),
-            num_partitions=4 * cpus,
+            demo_schema(),
+            PipelineConfig(
+                splitter=SplitterConfig(600, 200, approximate=True),
+                extract_partitions=4 * cpus,
+                create_lexical_graph=False,
+            ),
         )
-        nodes, edges = split_graph_rows(g)
-        nodes, edges, _, _ = prune_graph(nodes, edges, demo_schema())
-        nodes, edges, _ = resolve_exact(nodes, edges)
-        nodes, edges = nodes.persist(), edges.persist()
+        nodes, edges = kg.nodes.persist(), kg.edges.persist()
         rows["entities"] = nodes.where(F.col("is_entity")).count()
         edges.count()
         fuzzy_inputs["nodes"], fuzzy_inputs["edges"] = nodes, edges

@@ -460,15 +460,22 @@ def test_embedding_ivf_explode_is_vector_free(spark) -> None:
             assert "embedding" not in line and ", v" not in line, line
 
 
-def test_embedding_ivf_cell_rescore_equals_pairs_path(spark) -> None:
-    """rescore="cells" (per-cell GEMM, the beyond-broadcast-tier shape:
-    candidates never exist as rows) must produce EXACTLY the pairs
-    path's output — same candidate semantics (primary(b) ∈ probes(a) ∨
-    primary(a) ∈ probes(b)), same fold-order cosine on survivors."""
+def test_embedding_ivf_cells_equal_candidate_join_reference(spark) -> None:
+    """The per-cell GEMM (candidates never exist as rows) must produce
+    EXACTLY the candidate-join definition, built here as the reference:
+    probe⋈primary on the ``_centroid_topn`` cells (candidate (a, b) iff
+    primary(b) ∈ probes(a) ∨ primary(a) ∈ probes(b)), then the
+    fold-order ``cosine_col`` ≥ threshold."""
     import random
 
     from neo4j_graphrag_python_spark.operators.dedup import (
         embedding_neardup_ivf,
+    )
+    from neo4j_graphrag_python_spark.operators.similarity import (
+        _centroid_topn,
+        cosine_col,
+        fit_kmeans_centroids,
+        sample_vectors,
     )
 
     for emb, thr, k, npb in [
@@ -499,23 +506,46 @@ def test_embedding_ivf_cell_rescore_equals_pairs_path(spark) -> None:
             2,
         ),
     ]:
-        pairs = {
+        cents = fit_kmeans_centroids(sample_vectors(emb), num_centroids=k)
+        v = F.col("embedding").cast("array<double>")
+        base = emb.select(F.col("vec_id").alias("id"), v.alias("v"))
+        assigned = base.select(
+            "id", _centroid_topn(F.col("v"), cents, npb).alias("probes")
+        )
+        prim = assigned.select(
+            F.col("id").alias("id_q"), F.element_at("probes", 1).alias("cell")
+        )
+        probe = assigned.select(
+            F.col("id").alias("id_p"), F.explode("probes").alias("cell")
+        )
+        va = base.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"))
+        vb = base.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"))
+        ref = {
             tuple(r)
-            for r in embedding_neardup_ivf(
-                emb, threshold=thr, num_centroids=k, nprobe=npb
-            ).collect()
+            for r in probe.join(prim, "cell")
+            .where(F.col("id_p") != F.col("id_q"))
+            .select(
+                F.least("id_p", "id_q").alias("id_a"),
+                F.greatest("id_p", "id_q").alias("id_b"),
+            )
+            .distinct()
+            .join(va, "id_a")
+            .join(vb, "id_b")
+            .select(
+                "id_a",
+                "id_b",
+                cosine_col(F.col("v_a"), F.col("v_b")).alias("cosine"),
+            )
+            .where(F.col("cosine") >= thr)
+            .collect()
         }
         cells = {
             tuple(r)
             for r in embedding_neardup_ivf(
-                emb,
-                threshold=thr,
-                num_centroids=k,
-                nprobe=npb,
-                rescore="cells",
+                emb, threshold=thr, nprobe=npb, centroids=cents
             ).collect()
         }
-        assert cells == pairs
+        assert ref and cells == ref
 
 
 def test_embedding_neardup_dispatcher_routes_by_noise_collision(spark) -> None:
@@ -819,10 +849,6 @@ def test_embedding_neardup_paths_handle_empty_corpus(spark) -> None:
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
     assert embedding_neardup_blocked_exact(empty, threshold=0.4).count() == 0
     assert embedding_neardup_ivf(empty, threshold=0.4).count() == 0
-    assert (
-        embedding_neardup_ivf(empty, threshold=0.4, rescore="cells").count()
-        == 0
-    )
     assert embedding_neardup(empty, dim=4, threshold=0.4).count() == 0
     assert embedding_neardup(empty, dim=4, threshold=0.95).count() == 0
 
@@ -837,14 +863,14 @@ def test_dispatcher_kwargs_not_threshold_dependent(spark) -> None:
     dim = len(emb.select("embedding").head()["embedding"])
     knobs = dict(
         num_centroids=8, nprobe=2, sample_n=256, seed=1,
-        block_rows=2048, rescore="pairs", broadcast_rescore=True,
+        block_rows=2048, broadcast_rescore=True,
         broadcast_cells=50_000_000,
     )
     # high threshold → LSH route must tolerate IVF/GEMM knobs
     assert embedding_neardup(emb, dim=dim, threshold=0.95, **knobs).count() >= 0
     # moderate threshold, broadcast tier → blocked-exact route ditto
     assert embedding_neardup(emb, dim=dim, threshold=0.4, **knobs).count() >= 0
-    # beyond-broadcast tier: rescore must be forced to the cells shape
-    # with a shuffle-join rescore (broadcast_rescore pinned False)
+    # beyond-broadcast tier: IVF with a shuffle-join rescore
+    # (broadcast_rescore pinned False)
     small = dict(knobs, broadcast_cells=1)
     assert embedding_neardup(emb, dim=dim, threshold=0.4, **small).count() >= 0

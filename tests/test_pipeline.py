@@ -257,6 +257,8 @@ def test_metrics_collection_and_log(spark, transcripts_df, tmp_path) -> None:
     assert m["extract_s"] > 0 and "prune_s" in m
     assert m["rows_ok"] > 0 and m["rows_error"] == 0
     assert m["n_chunks"] > 0
+    graph_rows = spark.read.parquet(str(Path(ckpt) / "graph_rows"))
+    assert m["edges_emitted"] == graph_rows.where("kind = 'edge'").count() > 0
     assert m["nodes_to_resolve"] > m["nodes_created"] > 0
     log = spark.read.parquet(str(Path(ckpt) / "metrics_log"))
     assert log.columns == ["run_ts", "metric", "value"]
@@ -269,7 +271,7 @@ def test_metrics_collection_and_log(spark, transcripts_df, tmp_path) -> None:
     assert log2.count() == len(m) + len(r2.metrics)
     assert log2.select("run_ts").distinct().count() == 2
     # same counts both attempts (idempotent resume), only walls differ
-    for key in ("rows_ok", "n_chunks", "nodes_created"):
+    for key in ("rows_ok", "n_chunks", "nodes_created", "edges_emitted"):
         assert r2.metrics[key] == m[key]
 
 
