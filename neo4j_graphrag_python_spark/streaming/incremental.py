@@ -17,9 +17,10 @@ in one pass):
   ord_id)``.  ``canonical_id`` is the CONTENT hash of (label, key) —
   never a mention id — so the id a key resolves to is independent of
   arrival order by construction.
-* per batch: the batch's entity mentions (already in-batch resolved by
-  the pipeline) group to one row per (label, key); keys already in the
-  map ADOPT the stored canonical id (one equi-join); optionally, keys
+* per batch: the batch's entity mentions (in-batch resolved or not —
+  the streaming sink skips the pipeline's exact tier, which this
+  grouping subsumes) group to one row per (label, key); keys already in
+  the map ADOPT the stored canonical id (one equi-join); optionally, keys
   with no exact match are FUZZY-matched against the stored keys (the
   same LSH blocking + WRatio scorer as the batch resolver) and adopt the
   best stored canonical ≥ threshold, registering their key as an ALIAS
@@ -42,17 +43,19 @@ order, and the per-batch job never retroactively merges two existing
 canonicals — that consolidation is :func:`compact_canonicals`, the
 periodic offline job at the bottom of this module.
 
-Scale shape: the per-batch work is one groupBy of the batch's mentions,
-one equi-join against the canonical map (Iceberg MERGE touches only
-key-overlapping files; AQE broadcasts the batch side), and bounded
-min-wins MERGEs.  The optional fuzzy tier blocks two-sided against a
-MAINTAINED feature table (``{target}_canon_feats``): stored keys are
-tokenized/hashed once at registration (staging is stateless and the
-MinHash model is seed-only — resolver.stage_lsh_features), so per-batch
-fuzzy cost is the batch side's staging plus the join, independent of
-how much TEXT the canonical map holds; gaps self-heal via one narrow
-anti-join per batch, and compaction rebuilds the table (its row ids
-embed canonical ids).
+Scale shape: one resolution pass per batch — one groupBy of the
+batch's mentions, ONE checkpointed key assignment against the canonical
+map (tier, bag-improvement flag and canonical id per key; the counters
+and the node/canon/edge deltas are projections of it), and bounded
+min-wins MERGEs (Iceberg MERGE touches only key-overlapping files; AQE
+broadcasts the batch side).  The optional fuzzy tier blocks two-sided
+against a MAINTAINED feature table (``{target}_canon_feats``): stored
+keys are tokenized/hashed once at registration (staging is stateless
+and the MinHash model is seed-only — resolver.stage_lsh_features), so
+per-batch fuzzy cost is the batch side's staging plus the join,
+independent of how much TEXT the canonical map holds; gaps self-heal
+via one narrow anti-join per batch, and compaction rebuilds the table
+(its row ids embed canonical ids).
 """
 
 from __future__ import annotations
@@ -89,21 +92,24 @@ def resolve_batch_incremental(
     fuzzy_threshold: float | None = None,
     file_format: str = "parquet",
     untouched_edge_types: tuple[str, ...] = ("NEXT_CHUNK", "FROM_DOCUMENT"),
-    use_feature_cache: bool = True,
 ) -> dict:
     """Resolve one micro-batch's graph against the persistent canonical
     map and MERGE the results into ``{target}_nodes`` / ``_edges`` /
     ``_canon``.  Returns counters.
 
-    ``nodes``/``edges`` are a batch pipeline output (in-batch resolved).
-    Entity mentions re-point to stable canonical ids; non-entity nodes
-    (chunks/documents — already content-addressed) pass through.
+    ``nodes``/``edges`` are a batch pipeline output, in-batch resolved or
+    not: the per-(label, key) min-ord grouping below picks the same
+    winner as the batch exact resolver, and the edge re-pointing dedupes
+    by the same min (chunk_uid, conv_id), so an unresolved batch gives
+    identical tables.  Entity mentions re-point to stable canonical ids;
+    non-entity nodes (chunks/documents — already content-addressed) pass
+    through.
 
-    ``use_feature_cache`` (fuzzy tier only): stored keys' LSH features
-    are staged ONCE at registration into ``{target}_canon_feats`` and
-    every later batch blocks against the persisted table — per-batch
-    fuzzy cost stops depending on the size of the canonical map's text
-    (only the batch side is re-staged).
+    With ``fuzzy_threshold`` set, stored keys' LSH features are staged
+    ONCE at registration into ``{target}_canon_feats`` and every later
+    batch blocks against the persisted table — per-batch fuzzy cost stops
+    depending on the size of the canonical map's text (only the batch
+    side is re-staged).
     """
     spark = nodes.sparkSession
     canon_tbl = f"{target}_canon"
@@ -121,12 +127,12 @@ def resolve_batch_incremental(
         .agg(
             F.min_by(F.struct(*nodes.columns), "_ord").alias("_row"),
             F.min("_ord").alias("_ord"),
-            F.count("*").alias("_n"),
         )
         .localCheckpoint(eager=True)
     )
 
-    if spark.catalog.tableExists(canon_tbl):
+    has_canon = spark.catalog.tableExists(canon_tbl)
+    if has_canon:
         stored = spark.read.table(canon_tbl)
     else:
         stored = spark.createDataFrame(
@@ -142,36 +148,20 @@ def resolve_batch_incremental(
         F.col("ord_id").alias("_sord_id"),
         F.col("is_alias").alias("_salias"),
     )
-    assigned = batch.join(st, ["label", "_k"], "left")
-    exact = assigned.where(F.col("_scid").isNotNull())
-    missing = assigned.where(F.col("_scid").isNull()).drop(
-        "_scid", "_sord_ci", "_sord_id", "_salias"
-    )
 
-    n_fuzzy = 0
-    fuzzy_adopt = None
-    if fuzzy_threshold is not None and not stored.isEmpty():
-        staged_stored = None
+    fuzzy_adopt = spark.createDataFrame(
+        [], "label string, _k string, _scid string"
+    )
+    if fuzzy_threshold is not None and has_canon:
         feats_tbl = f"{target}_canon_feats"
-        if use_feature_cache:
-            if not spark.catalog.tableExists(feats_tbl):
-                # bootstrap: stage the whole (so-far) map once — covers
-                # keys registered before fuzzy/the cache was enabled
-                ensure_canon_features(
-                    spark,
-                    target,
-                    stored.select("label", "key", "canonical_id"),
-                    file_format,
-                )
-            # replays append identical rows — dedupe on the synthetic id
-            staged_stored = spark.read.table(feats_tbl).dropDuplicates(["id"])
-            # self-heal: keys registered while the cache was off (or by
-            # an external writer) are staged and appended now — one
+        if spark.catalog.tableExists(feats_tbl):
+            # self-heal: keys registered while fuzzy was off (or by an
+            # external writer) are staged and appended now — one
             # anti-join of the (narrow) canonical map per batch
             gap = stored.join(
-                staged_stored.select(
-                    "label", F.col("text").alias("key")
-                ).dropDuplicates(["label", "key"]),
+                spark.read.table(feats_tbl)
+                .select("label", F.col("text").alias("key"))
+                .dropDuplicates(["label", "key"]),
                 ["label", "key"],
                 "left_anti",
             )
@@ -182,117 +172,120 @@ def resolve_batch_incremental(
                     gap.select("label", "key", "canonical_id"),
                     file_format,
                 )
-                staged_stored = spark.read.table(feats_tbl).dropDuplicates(
-                    ["id"]
-                )
-        fuzzy_adopt = _fuzzy_adopt(
-            missing, stored, fuzzy_threshold, staged_stored
-        )
-        if fuzzy_adopt is not None:
-            fuzzy_adopt = fuzzy_adopt.localCheckpoint(eager=True)
-            n_fuzzy = fuzzy_adopt.count()
-            missing = missing.join(
-                fuzzy_adopt.select("label", "_k"), ["label", "_k"], "left_anti"
+        else:
+            # bootstrap: stage the whole (so-far) map once — covers keys
+            # registered before fuzzy was enabled
+            ensure_canon_features(
+                spark,
+                target,
+                stored.select("label", "key", "canonical_id"),
+                file_format,
             )
+        # replays append identical rows — dedupe on the synthetic id
+        staged_stored = spark.read.table(feats_tbl).dropDuplicates(["id"])
+        missing = batch.join(st, ["label", "_k"], "left_anti")
+        fuzzy_adopt = _fuzzy_adopt(
+            missing, staged_stored, fuzzy_threshold
+        ).localCheckpoint(eager=True)
 
-    new = missing.withColumn(
-        "_cid", canonical_entity_id(F.col("label"), F.col("_k"))
-    ).localCheckpoint(eager=True)
-    # exact adopters whose batch mention precedes the stored one take over
-    # the canonical node's property bag (global keep-first, incremental).
-    # Alias keys never do: they point at a canonical whose bag belongs to
-    # its PRIMARY key's min mention — an alias mention beating the alias
-    # SENTINEL ord says nothing about the primary key's order
-    improved = exact.where(
-        ~F.col("_salias")
-        & (
-            F.struct(F.col("_ord.ci"), F.col("_ord.id"))
-            < F.struct(F.col("_sord_ci"), F.col("_sord_id"))
+    # ONE key assignment per batch key: exact (stored key) > fuzzy
+    # (adopted stored canonical) > new (content-hash id).  Exact adopters
+    # whose batch mention precedes the stored one take over the canonical
+    # node's property bag (global keep-first, incremental).  Alias keys
+    # never do: they point at a canonical whose bag belongs to its PRIMARY
+    # key's min mention — an alias mention beating the alias SENTINEL ord
+    # says nothing about the primary key's order
+    exact = F.col("_scid").isNotNull()
+    fuzzy = F.col("_fcid").isNotNull()
+    assigned = (
+        batch.join(st, ["label", "_k"], "left")
+        .join(
+            fuzzy_adopt.withColumnRenamed("_scid", "_fcid"),
+            ["label", "_k"],
+            "left",
         )
-    ).localCheckpoint(eager=True)
-
-    node_cols = nodes.columns
-
-    def _canon_rows(df: DataFrame, cid: F.Column) -> DataFrame:
-        return df.select(
-            *[
-                cid.alias("id") if c == "id" else F.col(f"_row.{c}").alias(c)
-                for c in node_cols
-            ]
+        .select(
+            "label",
+            "_k",
+            "_row",
+            "_ord",
+            F.when(exact, "exact")
+            .when(fuzzy, "fuzzy")
+            .otherwise("new")
+            .alias("_tier"),
+            F.coalesce(
+                exact
+                & ~F.col("_salias")
+                & (
+                    F.struct(F.col("_ord.ci"), F.col("_ord.id"))
+                    < F.struct(F.col("_sord_ci"), F.col("_sord_id"))
+                ),
+                F.lit(False),
+            ).alias("_improved"),
+            F.coalesce(
+                F.col("_scid"),
+                F.col("_fcid"),
+                canonical_entity_id(F.col("label"), F.col("_k")),
+            ).alias("_cid"),
         )
-
-    nodes_delta = (
-        others.unionByName(_canon_rows(new, F.col("_cid")))
-        .unionByName(_canon_rows(improved, F.col("_scid")))
         .localCheckpoint(eager=True)
     )
 
-    canon_delta_parts = [
-        new.select(
-            "label",
-            F.col("_k").alias("key"),
-            F.col("_cid").alias("canonical_id"),
-            F.col("_ord.ci").alias("ord_ci"),
-            F.col("_ord.id").alias("ord_id"),
-            F.lit(False).alias("is_alias"),
-        ),
-        improved.select(
-            "label",
-            F.col("_k").alias("key"),
-            F.col("_scid").alias("canonical_id"),
-            F.col("_ord.ci").alias("ord_ci"),
-            F.col("_ord.id").alias("ord_id"),
-            F.lit(False).alias("is_alias"),
-        ),
-    ]
-    if fuzzy_adopt is not None and n_fuzzy:
-        canon_delta_parts.append(
-            fuzzy_adopt.select(
-                "label",
-                F.col("_k").alias("key"),
-                F.col("_scid").alias("canonical_id"),
-                F.lit(_ALIAS_ORD_CI).alias("ord_ci"),
-                F.lit(_ALIAS_ORD_ID).alias("ord_id"),
-                F.lit(True).alias("is_alias"),
-            )
-        )
-    canon_delta = canon_delta_parts[0]
-    for p in canon_delta_parts[1:]:
-        canon_delta = canon_delta.unionByName(p)
-    canon_delta = canon_delta.localCheckpoint(eager=True)
+    counts = assigned.groupBy("_tier", "_improved").count().collect()
+    n = {
+        t: sum(r["count"] for r in counts if r["_tier"] == t)
+        for t in ("exact", "fuzzy", "new")
+    }
+    n_improved = sum(r["count"] for r in counts if r["_improved"])
+    stats = {
+        "batch_entity_keys": sum(n.values()),
+        "exact_adopted": n["exact"],
+        "fuzzy_adopted": n["fuzzy"],
+        "new_canonicals": n["new"],
+    }
 
+    # canonical rows the batch writes: new keys mint one, improved exact
+    # keys replace the stored bag (fuzzy adopters leave the node alone)
+    tier = F.col("_tier")
+    owners = assigned.where((tier == "new") | F.col("_improved"))
+    nodes_delta = others.unionByName(
+        owners.select(
+            *[
+                F.col("_cid").alias("id") if c == "id"
+                else F.col(f"_row.{c}").alias(c)
+                for c in nodes.columns
+            ]
+        )
+    )
+    alias = tier == "fuzzy"
+    canon_delta = assigned.where(
+        (tier != "exact") | F.col("_improved")
+    ).select(
+        "label",
+        F.col("_k").alias("key"),
+        F.col("_cid").alias("canonical_id"),
+        F.when(alias, F.lit(_ALIAS_ORD_CI))
+        .otherwise(F.col("_ord.ci"))
+        .alias("ord_ci"),
+        F.when(alias, F.lit(_ALIAS_ORD_ID))
+        .otherwise(F.col("_ord.id"))
+        .alias("ord_id"),
+        alias.alias("is_alias"),
+    )
     # (batch mention id → canonical id), one row per batch ENTITY KEY,
     # expanded to mentions by the same (label, key) equi-join the batch
     # resolver's carried-key path uses
-    parts = [
-        exact.select("label", "_k", F.col("_scid").alias("_cid")),
-        new.select("label", "_k", "_cid"),
-    ]
-    if fuzzy_adopt is not None and n_fuzzy:
-        parts.append(fuzzy_adopt.select("label", "_k", F.col("_scid").alias("_cid")))
-    keymap = parts[0]
-    for p in parts[1:]:
-        keymap = keymap.unionByName(p)
-
     mapping = (
         scoped.select("id", "label", key.alias("_k"))
-        .join(keymap, ["label", "_k"])
+        .join(assigned.select("label", "_k", "_cid"), ["label", "_k"])
         .select("id", F.col("_cid").alias("canonical_id"))
     )
+    edges_delta = _repoint_edges(edges, mapping, untouched_edge_types)
 
-    edges_delta = _repoint_edges(
-        edges, mapping, untouched_edge_types
-    ).localCheckpoint(eager=True)
-
-    stats = {
-        "batch_entity_keys": batch.count(),
-        "exact_adopted": exact.count(),
-        "fuzzy_adopted": n_fuzzy,
-        "new_canonicals": new.count(),
-    }
-
-    # all deltas are materialized above — safe to rewrite the tables they
-    # were derived from (the V1 fallback is drop+create)
+    # every delta derives from the batch frames and the checkpoints above
+    # (the key assignment read ``_canon``, the fuzzy adoptions
+    # ``_canon_feats``), never from a live table — safe to rewrite the
+    # tables (the V1 fallback is drop+create)
     merge_upsert(
         spark,
         canon_delta,
@@ -312,11 +305,7 @@ def resolve_batch_incremental(
     )
     for t in (canon_tbl, f"{target}_nodes", f"{target}_edges"):
         spark.catalog.refreshTable(t)
-    if (
-        use_feature_cache
-        and fuzzy_threshold is not None
-        and not canon_delta.isEmpty()
-    ):
+    if fuzzy_threshold is not None and (n["new"] or n["fuzzy"] or n_improved):
         # register the NEW keys' features once, at registration time
         ensure_canon_features(
             spark,
@@ -371,17 +360,15 @@ def ensure_canon_features(
 
 
 def _fuzzy_adopt(
-    missing: DataFrame,
-    stored: DataFrame,
-    threshold: float,
-    staged_stored: DataFrame | None = None,
-) -> DataFrame | None:
+    missing: DataFrame, staged_stored: DataFrame, threshold: float
+) -> DataFrame:
     """Batch keys with no exact match, fuzzy-matched against the STORED
     keys (primary AND alias spellings): two-sided LSH blocking
-    (label-prefixed 3-grams; the stored side pre-staged when a cached
-    feature table exists) + exact-UB prefilter + WRatio scorer — the
-    batch resolver's machinery with the pair universe restricted to
-    (batch × stored).  Returns (label, _k, _scid) adoptions or None."""
+    (label-prefixed 3-grams; the stored side pre-staged in the cached
+    feature table) + exact-UB prefilter + WRatio scorer — the batch
+    resolver's machinery with the pair universe restricted to
+    (batch × stored).  Returns (label, _k, _scid) adoptions, one per
+    adopted batch key (possibly none)."""
     # synthetic batch ids pack (label, key) with a NUL delimiter; a key
     # containing NUL survives the round trip via the limit-2 split in
     # the decode below, but a NUL-bearing LABEL would shift the
@@ -392,21 +379,17 @@ def _fuzzy_adopt(
         "label",
         F.col("_k").alias("text"),
     )
-    s_texts = _stored_key_texts(stored)
-    staged_b = stage_lsh_features(b)
-    if staged_stored is None:
-        staged_stored = stage_lsh_features(s_texts)
-    cross = candidate_pairs_lsh_between(staged_b, staged_stored)
+    cross = candidate_pairs_lsh_between(stage_lsh_features(b), staged_stored)
     from neo4j_graphrag_python_spark.functions.fuzz import HAVE_RAPIDFUZZ
 
     if not HAVE_RAPIDFUZZ:
         # exact WRatio upper-bound cut before the Python scorer (sound
         # only for the pure-Python wratio — see prefilter_fuzzy_pairs)
         cross = prefilter_fuzzy_pairs(
-            cross, b.unionByName(s_texts), threshold
+            cross,
+            b.unionByName(staged_stored.select("id", "label", "text")),
+            threshold,
         )
-    if cross.isEmpty():
-        return None
     scored = score_pairs_fuzzy(cross).where(
         F.col("similarity") >= F.lit(threshold)
     )
@@ -423,7 +406,7 @@ def _fuzzy_adopt(
     # limit-2 split: the key part keeps any embedded NULs intact (labels
     # with NUL never reach here — filtered at encode); the stored id's
     # canonical part is md5 hex, so its first NUL always delimits
-    decoded = best.select(
+    return best.select(
         F.split(F.expr("substring(_bid, 3)"), "\x00", 2).alias("_lk"),
         F.split(F.expr("substring(_sid, 3)"), "\x00", 2).getItem(0).alias("_scid"),
     ).select(
@@ -431,7 +414,6 @@ def _fuzzy_adopt(
         F.col("_lk").getItem(1).alias("_k"),
         "_scid",
     )
-    return decoded
 
 
 def _repoint_edges(

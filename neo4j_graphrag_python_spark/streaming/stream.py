@@ -22,6 +22,8 @@ Design:
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from neo4j_graphrag_python_spark.operators.extractor import ExtractorFn
@@ -31,6 +33,8 @@ from neo4j_graphrag_python_spark.types import (
     TRANSCRIPTS_SCHEMA,
     PipelineConfig,
 )
+
+_SINKS = ("parquet_append", "catalog_merge", "catalog_merge_incremental")
 
 
 def read_transcript_stream(
@@ -80,14 +84,31 @@ def stream_kg_pipeline(
         ids, min-wins merges (trigger-size-invariant for the exact tier,
         idempotent on replay), optional fuzzy adoption of new names
         against stored canonicals at ``incremental_fuzzy_threshold``.
+        The pipeline's in-batch exact tier is skipped on this sink: the
+        cross-batch tier groups on the same (label, ``resolve_property``)
+        key and keeps the same min-order winner, so running both would
+        resolve every batch twice for identical tables.
+
+    Raises ``ValueError`` for an unknown ``sink`` and for an
+    ``incremental_fuzzy_threshold`` given with a sink that ignores it.
     """
+    if sink not in _SINKS:
+        raise ValueError(f"unknown sink {sink!r}; expected one of {_SINKS}")
+    incremental = sink == "catalog_merge_incremental"
+    if incremental_fuzzy_threshold is not None and not incremental:
+        raise ValueError(
+            "incremental_fuzzy_threshold needs "
+            f"sink='catalog_merge_incremental', got sink={sink!r}"
+        )
     cfg = config or PipelineConfig()
+    if incremental:
+        cfg = dataclasses.replace(cfg, perform_entity_resolution=False)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         result = run_kg_pipeline(batch_df, extractor_fn, schema, cfg)
-        if sink == "catalog_merge_incremental":
+        if incremental:
             from neo4j_graphrag_python_spark.streaming.incremental import (
                 resolve_batch_incremental,
             )
@@ -96,6 +117,7 @@ def stream_kg_pipeline(
                 result.nodes,
                 result.edges,
                 output_dir,
+                resolve_property=cfg.resolve_property,
                 fuzzy_threshold=incremental_fuzzy_threshold,
             )
             return

@@ -304,6 +304,86 @@ def test_incremental_stream_trigger_sizes_converge(spark, fresh_db, tmp_path):
     assert len(results["small"]["_nodes"]) > 0
 
 
+def test_incremental_subsumes_in_batch_exact_tier(spark, fresh_db, tmp_path):
+    """The cross-batch tier subsumes the pipeline's in-batch exact tier
+    (same (label, key) groups, same min-order winner, same min edge
+    bag): a 3-batch feed gives identical tables and counters whether
+    each batch was exact-resolved in-batch or not — why the incremental
+    streaming sink skips the in-batch tier."""
+    import pandas as pd
+
+    from neo4j_graphrag_python_spark import transcripts as tr
+    from neo4j_graphrag_python_spark.operators.extractor import (
+        demo_rules,
+        regex_extractor,
+    )
+    from neo4j_graphrag_python_spark.plans.pipeline import run_kg_pipeline
+    from neo4j_graphrag_python_spark.schema import demo_schema
+    from neo4j_graphrag_python_spark.types import (
+        TRANSCRIPTS_SCHEMA,
+        PipelineConfig,
+        SplitterConfig,
+    )
+
+    whole = tmp_path / "all.parquet"
+    tr.write_transcripts(whole, 0.0001)
+    pdf = pd.read_parquet(whole)
+    convs = sorted(pdf["conv_id"].unique())
+    feed = []
+    for i in range(3):
+        path = tmp_path / f"b{i}.parquet"
+        pdf[pdf["conv_id"].isin(convs[i::3])].to_parquet(path, index=False)
+        feed.append(spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(str(path)))
+
+    stats = {}
+    for in_batch in (True, False):
+        cfg = PipelineConfig(
+            splitter=SplitterConfig(600, 200),
+            perform_entity_resolution=in_batch,
+        )
+        stats[in_batch] = []
+        for batch in feed:
+            res = run_kg_pipeline(
+                batch, regex_extractor(demo_rules()), demo_schema(), cfg
+            )
+            stats[in_batch].append(
+                resolve_batch_incremental(
+                    res.nodes, res.edges, f"{fresh_db}.kg_sub_{in_batch}",
+                    fuzzy_threshold=0.8,
+                )
+            )
+    assert stats[True] == stats[False]
+    # later batches re-mention names the first one stored
+    assert all(s["exact_adopted"] > 0 for s in stats[False][1:])
+    for suffix in ("_nodes", "_edges", "_canon"):
+        assert _table_rows(spark, f"{fresh_db}.kg_sub_True{suffix}") == (
+            _table_rows(spark, f"{fresh_db}.kg_sub_False{suffix}")
+        ), suffix
+
+
+def test_stream_rejects_unknown_sink(spark, tmp_path):
+    from neo4j_graphrag_python_spark.streaming.stream import stream_kg_pipeline
+
+    with pytest.raises(ValueError, match="unknown sink"):
+        stream_kg_pipeline(
+            spark.range(1), lambda text: "", output_dir=str(tmp_path / "o"),
+            checkpoint_dir=str(tmp_path / "c"), sink="catalog_merge_incremantal",
+        )
+
+
+def test_stream_rejects_fuzzy_threshold_without_incremental_sink(
+    spark, tmp_path
+):
+    from neo4j_graphrag_python_spark.streaming.stream import stream_kg_pipeline
+
+    with pytest.raises(ValueError, match="incremental_fuzzy_threshold"):
+        stream_kg_pipeline(
+            spark.range(1), lambda text: "", output_dir=str(tmp_path / "o"),
+            checkpoint_dir=str(tmp_path / "c"), sink="catalog_merge",
+            incremental_fuzzy_threshold=0.8,
+        )
+
+
 def test_compact_canonicals_merges_and_is_idempotent(spark, fresh_db):
     """Two fuzzy-equivalent names that became SEPARATE canonicals (they
     arrived in different batches with fuzzy adoption off) consolidate in
@@ -371,31 +451,37 @@ def test_compact_canonicals_merges_and_is_idempotent(spark, fresh_db):
 
 
 def test_fuzzy_feature_cache_equivalent_and_covers_aliases(spark, fresh_db):
-    """With the cached feature table the fuzzy tier adopts identically
-    to re-staging per batch; the cache holds one row per stored key
-    (alias spellings included — they are fuzzy targets too)."""
-    t_c = f"{fresh_db}.kg_cache"
-    t_n = f"{fresh_db}.kg_nocache"
+    """The cached feature table equals staging the final canonical map
+    in one go: one row per stored key (alias spellings included — they
+    are fuzzy targets too), with the features a fresh staging
+    computes."""
+    from neo4j_graphrag_python_spark.operators.resolver import (
+        stage_lsh_features,
+    )
+    from neo4j_graphrag_python_spark.streaming.incremental import (
+        _stored_key_texts,
+    )
+
+    t = f"{fresh_db}.kg_cache"
     batches = [
         [("m1", "Person", True, "John Smith", 0, "c1", "u1")],
         [("m2", "Person", True, "Jon Smith", 0, "c2", "u2")],   # fuzzy alias
         [("m3", "Person", True, "Jonny Smith", 0, "c3", "u3")], # matches either
     ]
-    for tgt, cache in ((t_c, True), (t_n, False)):
-        for i, rows in enumerate(batches):
-            resolve_batch_incremental(
-                _nodes(spark, rows), _edges(spark, []), tgt,
-                fuzzy_threshold=0.8, use_feature_cache=cache,
-            )
-    for s in ("_nodes", "_edges", "_canon"):
-        assert _table_rows(spark, t_c + s) == _table_rows(spark, t_n + s), s
-    feats = spark.read.table(f"{t_c}_canon_feats").collect()
-    canon = spark.read.table(f"{t_c}_canon").collect()
-    assert {(r.label, r.text) for r in feats} == {
-        (r.label, r.key) for r in canon
-    }
+    for rows in batches:
+        resolve_batch_incremental(
+            _nodes(spark, rows), _edges(spark, []), t, fuzzy_threshold=0.8
+        )
+    canon = spark.read.table(f"{t}_canon")
+    fresh = stage_lsh_features(_stored_key_texts(canon))
+    feats = spark.read.table(f"{t}_canon_feats").select(*fresh.columns)
+
+    def rows(df):
+        return sorted(tuple(str(v) for v in r) for r in df.collect())
+
+    assert rows(feats) == rows(fresh)
     # all three spellings resolved to ONE canonical
-    assert len({r.canonical_id for r in canon}) == 1
+    assert canon.select("canonical_id").distinct().count() == 1
 
 
 def test_fuzzy_feature_cache_self_heals_gap(spark, fresh_db):
