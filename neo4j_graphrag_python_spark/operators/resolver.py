@@ -22,14 +22,17 @@ Spark-first re-design (SURVEY.md §2.3 A1-A4, §2.4 J3-J4):
     normalized-key prematch), pair scoring in an Arrow-batched pandas UDF,
     then connected components via iterative min-id propagation (clusters
     are tiny after blocking, so few iterations);
-  * merging is one shared primitive: a (node_id → canonical_id) mapping
-    applied to nodes (keep canonical row) and edges (two hash joins +
-    dropDuplicates for mergeRels semantics).
+  * one merge core for the batch and streaming resolvers:
+    :func:`score_candidate_pairs` is the only comparison step,
+    :func:`fuzzy_merge_mapping` the only blocking → comparison →
+    clustering chain (the caller's ``_ord`` picks each keeper), and
+    :func:`merge_parallel_edges` the only mergeRels rule (behind the
+    writer's dedupe, :func:`repoint_edges` and the exact carried path).
 """
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Iterator
+from typing import TYPE_CHECKING, Callable, Iterator
 
 if TYPE_CHECKING:
     from pyspark.sql import Column
@@ -52,79 +55,99 @@ from neo4j_graphrag_python_spark.types import ResolutionStats
 # ---------------------------------------------------------------------------
 
 
+def merge_parallel_edges(
+    edges: DataFrame,
+    structural_types: tuple[str, ...] | None = None,
+    repoint: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """The one parallel-edge rule (apoc ``mergeRels:true``): one edge per
+    (start, type, end), the min-(chunk_uid, conv_id) property bag wins.
+
+    ``structural_types`` (NEXT_CHUNK, FROM_DOCUMENT: unique by
+    construction, never entity-adjacent) pass through untouched — they
+    dominate the edge count, so this keeps the shuffles to the
+    entity-edge minority.  ``repoint`` rewrites the endpoints of the
+    remaining edges before they merge; structural edges never reach it.
+    """
+    passthrough = None
+    if structural_types:
+        passthrough = edges.where(F.col("type").isin(list(structural_types)))
+        edges = edges.where(~F.col("type").isin(list(structural_types)))
+    if repoint is not None:
+        edges = repoint(edges)
+    merged = (
+        edges.groupBy("start_node_id", "type", "end_node_id")
+        .agg(
+            F.min_by(
+                F.struct("properties", "conv_id", "chunk_uid"),
+                F.struct("chunk_uid", "conv_id"),
+            ).alias("_f")
+        )
+        .select(
+            "start_node_id",
+            "end_node_id",
+            "type",
+            F.col("_f.properties").alias("properties"),
+            F.col("_f.conv_id").alias("conv_id"),
+            F.col("_f.chunk_uid").alias("chunk_uid"),
+        )
+    )
+    if passthrough is not None:
+        merged = merged.unionByName(
+            passthrough.select(
+                "start_node_id", "end_node_id", "type",
+                "properties", "conv_id", "chunk_uid",
+            )
+        )
+    return merged
+
+
+def repoint_edges(
+    edges: DataFrame,
+    mapping: DataFrame,
+    untouched_types: tuple[str, ...] | None = None,
+) -> DataFrame:
+    """Re-point edge endpoints through (id → canonical_id) — two equi
+    joins (J3) — and merge the parallel edges that creates
+    (:func:`merge_parallel_edges`).  ``untouched_types`` skip both."""
+    non_identity = mapping.where(F.col("id") != F.col("canonical_id"))
+
+    def repoint(edges: DataFrame) -> DataFrame:
+        for endpoint in ("start_node_id", "end_node_id"):
+            m = non_identity.select(
+                F.col("id").alias("_from"), F.col("canonical_id").alias("_to")
+            )
+            edges = (
+                edges.join(m, edges[endpoint] == m._from, "left")
+                .withColumn(endpoint, F.coalesce(F.col("_to"), F.col(endpoint)))
+                .drop("_from", "_to")
+            )
+        return edges
+
+    return merge_parallel_edges(edges, untouched_types, repoint)
+
+
 def apply_merge_mapping(
     nodes: DataFrame,
     edges: DataFrame,
     mapping: DataFrame,
     untouched_types: tuple[str, ...] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Apply (id → canonical_id) to the graph.
-
-    * nodes whose id maps to a different canonical_id are dropped (they
-      merged into the canonical row);
-    * edge endpoints are re-pointed (two equi joins — J3);
-    * parallel edges with same (start, type, end) are merged keeping the
-      first property bag by chunk order (apoc mergeRels:true analog).
+    """Apply (id → canonical_id) to the graph: nodes whose id maps to a
+    different canonical_id are dropped (they merged into the canonical
+    row); edges go through :func:`repoint_edges`.
 
     ``untouched_types``: edge types whose endpoints can never be entities
-    (NEXT_CHUNK, FROM_DOCUMENT) skip re-pointing and dedupe entirely —
-    they dominate the edge count, so this keeps both shuffles to the
-    entity-adjacent minority (FROM_CHUNK starts at an entity and IS
-    re-pointed).
+    (NEXT_CHUNK, FROM_DOCUMENT) skip re-pointing and dedupe entirely
+    (FROM_CHUNK starts at an entity and IS re-pointed).
     """
-    non_identity = mapping.where(F.col("id") != F.col("canonical_id"))
-    merged_away = non_identity.select(F.col("id").alias("_mid"))
+    merged_away = mapping.where(F.col("id") != F.col("canonical_id")).select(
+        F.col("id").alias("_mid")
+    )
     new_nodes = nodes.join(
         merged_away, nodes.id == merged_away._mid, "left_anti"
     )
-
-    passthrough = None
-    if untouched_types:
-        passthrough = edges.where(F.col("type").isin(list(untouched_types)))
-        edges = edges.where(~F.col("type").isin(list(untouched_types)))
-
-    for endpoint in ("start_node_id", "end_node_id"):
-        m = non_identity.select(
-            F.col("id").alias("_from"), F.col("canonical_id").alias("_to")
-        )
-        edges = (
-            edges.join(m, edges[endpoint] == m._from, "left")
-            .withColumn(endpoint, F.coalesce(F.col("_to"), F.col(endpoint)))
-            .drop("_from", "_to")
-        )
-    new_edges = (
-        edges.groupBy("start_node_id", "type", "end_node_id")
-        .agg(
-            F.min_by(
-                F.struct("properties", "conv_id", "chunk_uid"),
-                F.struct("chunk_uid", "conv_id"),
-            ).alias("_first")
-        )
-        .select(
-            "start_node_id",
-            "end_node_id",
-            "type",
-            F.col("_first.properties").alias("properties"),
-            F.col("_first.conv_id").alias("conv_id"),
-            F.col("_first.chunk_uid").alias("chunk_uid"),
-        )
-    )
-    if passthrough is not None:
-        new_edges = new_edges.unionByName(
-            passthrough.select(
-                "start_node_id", "end_node_id", "type",
-                "properties", "conv_id", "chunk_uid",
-            )
-        )
-    return new_nodes, new_edges
-
-
-def _entity_scope(nodes: DataFrame, resolve_property: str) -> DataFrame:
-    """Entities eligible for resolution: is_entity with non-null property
-    (resolver.py:137-139 'WHERE prop IS NOT NULL')."""
-    return nodes.where(
-        F.col("is_entity") & F.col("properties").getItem(resolve_property).isNotNull()
-    )
+    return new_nodes, repoint_edges(edges, mapping, untouched_types)
 
 
 def _order_key() -> "Column":
@@ -141,22 +164,6 @@ def _order_key() -> "Column":
 # ---------------------------------------------------------------------------
 # exact-match resolver
 # ---------------------------------------------------------------------------
-
-
-def exact_match_mapping(
-    nodes: DataFrame, resolve_property: str = "name"
-) -> DataFrame:
-    """(id → canonical_id) for exact (label, property) groups."""
-    scoped = _entity_scope(nodes, resolve_property).select(
-        "id",
-        "label",
-        F.col("properties").getItem(resolve_property).alias("_prop"),
-        _order_key().alias("_ord"),
-    )
-    canon = scoped.groupBy("label", "_prop").agg(
-        F.min_by("id", "_ord").alias("canonical_id")
-    )
-    return scoped.join(canon, ["label", "_prop"]).select("id", "canonical_id")
 
 
 def resolve_exact(
@@ -197,10 +204,21 @@ def resolve_exact(
         return _resolve_exact_carried(
             nodes, edges, resolve_property, untouched_edge_types
         )
-    # persist: the mapping feeds three joins (node anti-join + two edge
-    # re-pointings) plus the stats aggregate — without it the whole
-    # upstream extract/prune DAG re-executes per consumer.
-    mapping = exact_match_mapping(nodes, resolve_property).persist()
+    # (id → canonical_id) over entities with a non-null property
+    # (resolver.py:137-139 'WHERE prop IS NOT NULL').  persist: the
+    # mapping feeds three joins (node anti-join + two edge re-pointings)
+    # plus the stats aggregate — without it the whole upstream
+    # extract/prune DAG re-executes per consumer.
+    key = F.col("properties").getItem(resolve_property)
+    scoped = nodes.where(F.col("is_entity") & key.isNotNull()).select(
+        "id", "label", key.alias("_prop"), _order_key().alias("_ord")
+    )
+    canon = scoped.groupBy("label", "_prop").agg(
+        F.min_by("id", "_ord").alias("canonical_id")
+    )
+    mapping = (
+        scoped.join(canon, ["label", "_prop"]).select("id", "canonical_id").persist()
+    )
     stats_row = mapping.agg(
         F.count("*").alias("n"),
         F.countDistinct("canonical_id").alias("c"),
@@ -275,48 +293,23 @@ def _resolve_exact_carried(
         F.col("_cid").alias("_cid"),
     )
 
-    passthrough = None
-    if untouched_edge_types:
-        passthrough = edges.where(F.col("type").isin(list(untouched_edge_types)))
-        edges = edges.where(~F.col("type").isin(list(untouched_edge_types)))
-
-    for endpoint, lab, nm in (
-        ("start_node_id", "start_label", "start_name"),
-        ("end_node_id", "end_label", "end_name"),
-    ):
-        edges = (
-            edges.join(
-                cmap,
-                (F.col(lab) == F.col("_l")) & (F.col(nm) == F.col("_k")),
-                "left",
+    def repoint(edges: DataFrame) -> DataFrame:
+        for endpoint, lab, nm in (
+            ("start_node_id", "start_label", "start_name"),
+            ("end_node_id", "end_label", "end_name"),
+        ):
+            edges = (
+                edges.join(
+                    cmap,
+                    (F.col(lab) == F.col("_l")) & (F.col(nm) == F.col("_k")),
+                    "left",
+                )
+                .withColumn(endpoint, F.coalesce(F.col("_cid"), F.col(endpoint)))
+                .drop("_l", "_k", "_cid")
             )
-            .withColumn(endpoint, F.coalesce(F.col("_cid"), F.col(endpoint)))
-            .drop("_l", "_k", "_cid")
-        )
+        return edges
 
-    out_cols = [
-        "start_node_id", "end_node_id", "type",
-        "properties", "conv_id", "chunk_uid",
-    ]
-    new_edges = (
-        edges.groupBy("start_node_id", "type", "end_node_id")
-        .agg(
-            F.min_by(
-                F.struct("properties", "conv_id", "chunk_uid"),
-                F.struct("chunk_uid", "conv_id"),
-            ).alias("_f")
-        )
-        .select(
-            "start_node_id",
-            "end_node_id",
-            "type",
-            F.col("_f.properties").alias("properties"),
-            F.col("_f.conv_id").alias("conv_id"),
-            F.col("_f.chunk_uid").alias("chunk_uid"),
-        )
-    )
-    if passthrough is not None:
-        new_edges = new_edges.unionByName(passthrough.select(*out_cols))
+    new_edges = merge_parallel_edges(edges, untouched_edge_types, repoint)
     stats = ResolutionStats(
         number_of_nodes_to_resolve=stats_row["n"],
         number_of_created_nodes=stats_row["c"],
@@ -425,6 +418,18 @@ def _lsh_candidates_raw(
     )
 
 
+def _candidate_pairs(joined: DataFrame) -> DataFrame:
+    """approxSimilarityJoin rows → (label, id_a, id_b, text_a, text_b),
+    one per id pair (several hash tables can emit the same pair)."""
+    return joined.select(
+        F.col("datasetA.label").alias("label"),
+        F.col("datasetA.id").alias("id_a"),
+        F.col("datasetB.id").alias("id_b"),
+        F.col("datasetA.text").alias("text_a"),
+        F.col("datasetB.text").alias("text_b"),
+    ).dropDuplicates(["id_a", "id_b"])
+
+
 def candidate_pairs_lsh_between(
     staged_a: DataFrame,
     staged_b: DataFrame,
@@ -442,16 +447,8 @@ def candidate_pairs_lsh_between(
     joined = model.approxSimilarityJoin(
         staged_a, staged_b, jaccard_distance, distCol="jaccard_dist"
     )
-    return (
+    return _candidate_pairs(
         joined.where(F.col("datasetA.label") == F.col("datasetB.label"))
-        .select(
-            F.col("datasetA.label").alias("label"),
-            F.col("datasetA.id").alias("id_a"),
-            F.col("datasetB.id").alias("id_b"),
-            F.col("datasetA.text").alias("text_a"),
-            F.col("datasetB.text").alias("text_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
     )
 
 
@@ -476,19 +473,11 @@ def candidate_pairs_lsh(
     reach or the north-rule P/R target silently leaks here.
     """
     joined = _lsh_candidates_raw(texts, num_hash_tables, jaccard_distance)
-    return (
+    return _candidate_pairs(
         joined.where(
             (F.col("datasetA.label") == F.col("datasetB.label"))
             & (F.col("datasetA.id") < F.col("datasetB.id"))
         )
-        .select(
-            F.col("datasetA.label").alias("label"),
-            F.col("datasetA.id").alias("id_a"),
-            F.col("datasetB.id").alias("id_b"),
-            F.col("datasetA.text").alias("text_a"),
-            F.col("datasetB.text").alias("text_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
     )
 
 
@@ -533,8 +522,8 @@ def prefilter_fuzzy_pairs(
 
     ONLY sound for the pure-Python wratio (functions/fuzz.py): real
     rapidfuzz WRatio adds token_sort/token_set branches (0.95-scaled)
-    that this bound does not dominate — callers must bypass the
-    prefilter when rapidfuzz is installed (resolve_similarity does).
+    that this bound does not dominate — :func:`score_candidate_pairs`,
+    its only caller, bypasses it when rapidfuzz is installed.
     """
     counts, plen = _processed_char_counts(F.col("text"))
     cnt = texts.select(
@@ -657,8 +646,6 @@ def connected_components(
     ``df.checkpoint()`` with ``spark.sparkContext.setCheckpointDir`` so a
     lost block recomputes from HDFS instead of failing.
     """
-    from pyspark.sql import types as T
-
     spark = pairs.sparkSession
     id_type = pairs.schema["id_a"].dataType
     out_schema = T.StructType(
@@ -743,26 +730,52 @@ def connected_components(
     return labels.select("id", F.col("comp").alias("canonical_id"))
 
 
-def resolve_similarity(
-    nodes: DataFrame,
-    edges: DataFrame,
-    method: str = "fuzzy",
-    resolve_properties: list[str] | None = None,
-    similarity_threshold: float = 0.8,
-    lsh_jaccard_distance: float = 0.8,
-    untouched_edge_types: tuple[str, ...] | None = None,
-    prefilter: bool = True,
-) -> tuple[DataFrame, DataFrame, ResolutionStats]:
-    """Fuzzy / semantic resolution (resolver.py:179-313 pipeline shape).
+def _scorer(method: str) -> Callable[[DataFrame], DataFrame]:
+    """The pair scorer for ``method`` — read from the module globals at
+    call time, so a rebound scorer (perfbench's trace) is the one used."""
+    if method == "fuzzy":
+        return score_pairs_fuzzy
+    if method == "semantic":
+        return score_pairs_cosine
+    raise ValueError(f"unknown similarity method {method!r}: 'fuzzy' or 'semantic'")
 
-    ``prefilter`` (fuzzy method only): cut candidate pairs whose provable
-    WRatio upper bound is below the threshold before the Python scorer —
-    exact, zero recall loss (:func:`prefilter_fuzzy_pairs`).  Auto-
-    disabled when rapidfuzz is installed (the scorer then delegates to
-    real WRatio, whose token_sort/token_set branches the bound does not
-    dominate)."""
-    props = resolve_properties or ["name"]
-    sc = nodes.sparkSession.sparkContext
+
+def score_candidate_pairs(
+    pairs: DataFrame, texts: DataFrame, method: str, threshold: float
+) -> DataFrame:
+    """Candidate pairs → scored matches (``similarity ≥ threshold``): the
+    one comparison step of every fuzzy/semantic caller.
+
+    The fuzzy method first cuts pairs whose provable WRatio upper bound
+    misses the threshold (:func:`prefilter_fuzzy_pairs` over ``texts``'
+    (id, text) rows) — sound only for the pure-Python wratio, so it is
+    skipped when rapidfuzz is installed."""
+    score = _scorer(method)
+    if method == "fuzzy":
+        from neo4j_graphrag_python_spark.functions.fuzz import HAVE_RAPIDFUZZ
+
+        if not HAVE_RAPIDFUZZ:
+            pairs = prefilter_fuzzy_pairs(pairs, texts, threshold)
+    # repartition before the Python scorer: its cost is per PAIR, but
+    # AQE sizes post-join partitions by bytes, serialising the scorer
+    # onto a handful of tasks at 10^5-name scale (same fix as the
+    # minhash rescore)
+    pairs = pairs.repartition(pairs.sparkSession.sparkContext.defaultParallelism)
+    return score(pairs).where(F.col("similarity") >= threshold)
+
+
+def fuzzy_merge_mapping(
+    texts: DataFrame, method: str, threshold: float
+) -> tuple[DataFrame, int, int]:
+    """texts(id, label, text, _ord) → ((id, canonical_id) mapping, entities
+    in scope, entities merged away): LSH blocking → scoring
+    (:func:`score_candidate_pairs`) → connected components, keeping
+    ``min_by(id, _ord)`` per component.  The caller's ``_ord`` is the
+    keeper rule: chunk order for first-wins batch resolution, the id
+    itself for idempotent min-id compaction.  Raises ``ValueError`` for
+    an unknown ``method`` before any Spark job runs."""
+    _scorer(method)  # validate before the scope count below runs a job
+    sc = texts.sparkSession.sparkContext
     # coalesce caps the staged frame's partition count at the session's
     # parallelism: the entity scope inherits the full graph's partition
     # layout (unions of wide extraction caches — 384 partitions for a
@@ -777,43 +790,44 @@ def resolve_similarity(
     # fuzzy phase runs ~24 jobs and the repeated analysis showed up as
     # multi-second driver gaps with zero tasks running.  The checkpoint
     # truncates the plan to a flat RDD scan for every consumer.
-    texts = (
-        _resolve_texts(nodes, props)
-        .coalesce(sc.defaultParallelism)
-        .localCheckpoint(eager=False)
-    )
+    texts = texts.coalesce(sc.defaultParallelism).localCheckpoint(eager=False)
     n_scope = texts.count()
-    pairs = candidate_pairs_lsh(texts, jaccard_distance=lsh_jaccard_distance)
-    if method == "fuzzy" and prefilter:
-        from neo4j_graphrag_python_spark.functions.fuzz import HAVE_RAPIDFUZZ
-
-        if not HAVE_RAPIDFUZZ:
-            pairs = prefilter_fuzzy_pairs(pairs, texts, similarity_threshold)
-    # repartition before the Python scorer: its cost is per PAIR, but
-    # AQE sizes post-join partitions by bytes, serialising the scorer
-    # onto a handful of tasks at 10^5-name scale (same fix as the
-    # minhash rescore)
-    pairs = pairs.repartition(sc.defaultParallelism)
-    scored = (
-        score_pairs_fuzzy(pairs) if method == "fuzzy" else score_pairs_cosine(pairs)
+    matches = score_candidate_pairs(
+        candidate_pairs_lsh(texts), texts, method, threshold
     )
-    matches = scored.where(F.col("similarity") >= similarity_threshold)
     comp = connected_components(matches.select("id_a", "id_b"))
-    # canonical representative: first node (chunk order) within component,
-    # not min id — align with 'properties: discard' first-wins semantics.
     with_ord = comp.join(texts.select("id", "_ord"), "id")
     rep = with_ord.groupBy("canonical_id").agg(
         F.min_by("id", "_ord").alias("rep_id")
     )
-    # localCheckpoint: mapping feeds the stats count plus three joins in
-    # apply_merge_mapping — materializes once AND truncates the
-    # LSH/scorer lineage out of every downstream plan analysis
+    # localCheckpoint: the mapping feeds the merged count plus the
+    # callers' joins — materializes once AND truncates the LSH/scorer
+    # lineage out of every downstream plan analysis
     mapping = (
         with_ord.join(rep, "canonical_id")
         .select("id", F.col("rep_id").alias("canonical_id"))
         .localCheckpoint(eager=False)
     )
     n_merged = mapping.where(F.col("id") != F.col("canonical_id")).count()
+    return mapping, n_scope, n_merged
+
+
+def resolve_similarity(
+    nodes: DataFrame,
+    edges: DataFrame,
+    method: str = "fuzzy",
+    resolve_properties: list[str] | None = None,
+    similarity_threshold: float = 0.8,
+    untouched_edge_types: tuple[str, ...] | None = None,
+) -> tuple[DataFrame, DataFrame, ResolutionStats]:
+    """Fuzzy / semantic resolution (resolver.py:179-313 pipeline shape):
+    :func:`fuzzy_merge_mapping` over the entities' texts, whose
+    (chunk_index, id) ``_ord`` keeps the first mention of each cluster
+    ('properties: discard' first-wins), then :func:`apply_merge_mapping`."""
+    texts = _resolve_texts(nodes, resolve_properties or ["name"])
+    mapping, n_scope, n_merged = fuzzy_merge_mapping(
+        texts, method, similarity_threshold
+    )
     new_nodes, new_edges = apply_merge_mapping(
         nodes, edges, mapping, untouched_types=untouched_edge_types
     )

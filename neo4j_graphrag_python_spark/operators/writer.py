@@ -9,8 +9,8 @@ __Entity__, and relies on apoc.merge semantics for dedupe.  Spark-first:
   * the __Entity__ tag is the ``is_entity`` boolean column
     (kg_writer.py:135-147);
   * edge merge (same type + endpoints ⇒ one edge; neo4j_queries.py:88,102)
-    is ``dropDuplicates(["start_node_id","type","end_node_id"])`` — kept
-    the *first* by chunk order for determinism;
+    is the resolver's (start, type, end) aggregation — kept the *first*
+    by chunk order for determinism;
   * resume (north rule): writes go through a bucket manifest.  Rows are
     hash-bucketed by a deterministic key; each bucket is written to its own
     subdirectory and recorded in ``_manifest/<bucket>.json`` after the
@@ -29,42 +29,20 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from neo4j_graphrag_python_spark.operators.resolver import merge_parallel_edges
+
 
 def dedupe_edges(
     edges: DataFrame, skip_types: tuple[str, ...] | None = None
 ) -> DataFrame:
     """apoc.merge.relationship semantics (one edge per (start,type,end));
-    first property bag by (chunk_uid, conv_id) order wins.
+    first property bag by (chunk_uid, conv_id) order wins — the
+    resolver's :func:`merge_parallel_edges` with no re-pointing.
 
     ``skip_types``: structural edge types that are unique by construction
-    (NEXT_CHUNK, FROM_DOCUMENT: one per chunk) bypass the groupBy — they
-    usually dominate the edge count, so this keeps the shuffle to the
-    entity-edge minority.
+    (NEXT_CHUNK, FROM_DOCUMENT: one per chunk) bypass the groupBy.
     """
-    if skip_types:
-        passthrough = edges.where(F.col("type").isin(list(skip_types)))
-        rest = edges.where(~F.col("type").isin(list(skip_types)))
-        return passthrough.select(
-            "start_node_id", "end_node_id", "type",
-            "properties", "conv_id", "chunk_uid",
-        ).unionByName(dedupe_edges(rest))
-    return (
-        edges.groupBy("start_node_id", "type", "end_node_id")
-        .agg(
-            F.min_by(
-                F.struct("properties", "conv_id", "chunk_uid"),
-                F.struct("chunk_uid", "conv_id"),
-            ).alias("_f")
-        )
-        .select(
-            "start_node_id",
-            "end_node_id",
-            "type",
-            F.col("_f.properties").alias("properties"),
-            F.col("_f.conv_id").alias("conv_id"),
-            F.col("_f.chunk_uid").alias("chunk_uid"),
-        )
-    )
+    return merge_parallel_edges(edges, skip_types)
 
 
 def split_named_embeddings(

@@ -21,8 +21,8 @@ in one pass):
   the streaming sink skips the pipeline's exact tier, which this
   grouping subsumes) group to one row per (label, key); keys already in
   the map ADOPT the stored canonical id (one equi-join); optionally, keys
-  with no exact match are FUZZY-matched against the stored keys (the
-  same LSH blocking + WRatio scorer as the batch resolver) and adopt the
+  with no exact match are FUZZY-matched against the stored keys (LSH
+  blocking, then the batch resolver's own scoring step) and adopt the
   best stored canonical ≥ threshold, registering their key as an ALIAS
   row so later repeats exact-match cheaply; remaining keys mint new
   canonical rows.
@@ -35,6 +35,10 @@ in one pass):
   commutative, so for the exact tier the final (nodes, edges, canon)
   tables are IDENTICAL for any trigger size and any replay — the
   convergence/idempotence property the replay tests pin.
+
+Every merge rule is the batch resolver's (``score_candidate_pairs``,
+``repoint_edges``, ``fuzzy_merge_mapping``); this module owns only the
+canonical map, its feature table and the MERGEs.
 
 Honest limits (same as the reference's incremental resolver): fuzzy
 adoption matches new keys against what is ALREADY stored, so which of
@@ -64,13 +68,18 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from neo4j_graphrag_python_spark.operators.resolver import (
     _order_key,
-    candidate_pairs_lsh,
+    _resolve_texts,
+    apply_merge_mapping,
     candidate_pairs_lsh_between,
-    prefilter_fuzzy_pairs,
-    score_pairs_fuzzy,
+    fuzzy_merge_mapping,
+    repoint_edges,
+    score_candidate_pairs,
     stage_lsh_features,
 )
-from neo4j_graphrag_python_spark.sources.catalog import merge_upsert
+from neo4j_graphrag_python_spark.sources.catalog import (
+    merge_upsert,
+    write_catalog_table,
+)
 
 #: ord sentinel for alias rows — loses every min-wins comparison, so an
 #: alias key can never steal the canonical node's property bag
@@ -280,7 +289,7 @@ def resolve_batch_incremental(
         .join(assigned.select("label", "_k", "_cid"), ["label", "_k"])
         .select("id", F.col("_cid").alias("canonical_id"))
     )
-    edges_delta = _repoint_edges(edges, mapping, untouched_edge_types)
+    edges_delta = repoint_edges(edges, mapping, untouched_edge_types)
 
     # every delta derives from the batch frames and the checkpoints above
     # (the key assignment read ``_canon``, the fuzzy adoptions
@@ -365,10 +374,10 @@ def _fuzzy_adopt(
     """Batch keys with no exact match, fuzzy-matched against the STORED
     keys (primary AND alias spellings): two-sided LSH blocking
     (label-prefixed 3-grams; the stored side pre-staged in the cached
-    feature table) + exact-UB prefilter + WRatio scorer — the batch
-    resolver's machinery with the pair universe restricted to
-    (batch × stored).  Returns (label, _k, _scid) adoptions, one per
-    adopted batch key (possibly none)."""
+    feature table) + the batch resolver's scoring step
+    (``score_candidate_pairs``: exact-UB prefilter + WRatio scorer), with
+    the pair universe restricted to (batch × stored).  Returns (label,
+    _k, _scid) adoptions, one per adopted batch key (possibly none)."""
     # synthetic batch ids pack (label, key) with a NUL delimiter; a key
     # containing NUL survives the round trip via the limit-2 split in
     # the decode below, but a NUL-bearing LABEL would shift the
@@ -380,18 +389,11 @@ def _fuzzy_adopt(
         F.col("_k").alias("text"),
     )
     cross = candidate_pairs_lsh_between(stage_lsh_features(b), staged_stored)
-    from neo4j_graphrag_python_spark.functions.fuzz import HAVE_RAPIDFUZZ
-
-    if not HAVE_RAPIDFUZZ:
-        # exact WRatio upper-bound cut before the Python scorer (sound
-        # only for the pure-Python wratio — see prefilter_fuzzy_pairs)
-        cross = prefilter_fuzzy_pairs(
-            cross,
-            b.unionByName(staged_stored.select("id", "label", "text")),
-            threshold,
-        )
-    scored = score_pairs_fuzzy(cross).where(
-        F.col("similarity") >= F.lit(threshold)
+    scored = score_candidate_pairs(
+        cross,
+        b.unionByName(staged_stored.select("id", "label", "text")),
+        "fuzzy",
+        threshold,
     )
     # sides are fixed by the two-sided join: id_a = batch, id_b = stored
     norm = scored.select(
@@ -416,56 +418,6 @@ def _fuzzy_adopt(
     )
 
 
-def _repoint_edges(
-    edges: DataFrame,
-    mapping: DataFrame,
-    untouched_edge_types: tuple[str, ...],
-) -> DataFrame:
-    """Re-point entity-adjacent edge endpoints through (id →
-    canonical_id) and merge parallel edges keeping the min-(chunk_uid,
-    conv_id) property bag — the batch resolver's rule, applied before
-    the min-wins table MERGE extends it across batches."""
-    out_cols = [
-        "start_node_id", "end_node_id", "type",
-        "properties", "conv_id", "chunk_uid",
-    ]
-    edges = edges.select(*out_cols)
-    passthrough = None
-    if untouched_edge_types:
-        passthrough = edges.where(F.col("type").isin(list(untouched_edge_types)))
-        edges = edges.where(~F.col("type").isin(list(untouched_edge_types)))
-    non_identity = mapping.where(F.col("id") != F.col("canonical_id"))
-    for endpoint in ("start_node_id", "end_node_id"):
-        m = non_identity.select(
-            F.col("id").alias("_from"), F.col("canonical_id").alias("_to")
-        )
-        edges = (
-            edges.join(m, edges[endpoint] == m._from, "left")
-            .withColumn(endpoint, F.coalesce(F.col("_to"), F.col(endpoint)))
-            .drop("_from", "_to")
-        )
-    merged = (
-        edges.groupBy("start_node_id", "type", "end_node_id")
-        .agg(
-            F.min_by(
-                F.struct("properties", "conv_id", "chunk_uid"),
-                F.struct("chunk_uid", "conv_id"),
-            ).alias("_f")
-        )
-        .select(
-            "start_node_id",
-            "end_node_id",
-            "type",
-            F.col("_f.properties").alias("properties"),
-            F.col("_f.conv_id").alias("conv_id"),
-            F.col("_f.chunk_uid").alias("chunk_uid"),
-        )
-    )
-    if passthrough is not None:
-        merged = merged.unionByName(passthrough.select(*out_cols))
-    return merged
-
-
 def compact_canonicals(
     spark,
     target: str,
@@ -480,32 +432,22 @@ def compact_canonicals(
     batches are never re-merged per batch; the reference's DB resolver
     has the same property).
 
-    Runs the batch fuzzy machinery over the STORED canonical entity
-    nodes (LSH blocking → exact-UB prefilter → WRatio → connected
-    components), picks each cluster's keeper as the lexicographically
-    minimal canonical id (content hashes — deterministic, so compaction
-    commutes with itself), rewrites the nodes/edges tables through the
-    merge mapping, and re-points every canonical-map row of a merged-away
-    canonical to its keeper (the loser's keys become aliases of the
-    keeper, so FUTURE mentions of those names adopt the keeper
-    directly).  Returns counters; a second run is a no-op (idempotent —
-    asserted in tests).
+    Runs the batch resolver's :func:`fuzzy_merge_mapping` (LSH blocking →
+    exact-UB prefilter → WRatio → connected components) over the STORED
+    canonical entity nodes with ``_ord = id``, so each cluster's keeper
+    is its lexicographically minimal canonical id (content hashes —
+    deterministic, so compaction commutes with itself), rewrites the
+    nodes/edges tables through the merge mapping, and re-points every
+    canonical-map row of a merged-away canonical to its keeper (the
+    loser's keys become aliases of the keeper, so FUTURE mentions of
+    those names adopt the keeper directly).  Returns counters; a second
+    run is a no-op (idempotent — asserted in tests).
 
     Scale shape: input is the CANONICAL table (entities after
     dedup — orders of magnitude below mention count); blocking, scoring
     and components are the measured 10⁵-name pipeline; the table
     rewrite is one MERGE-shaped pass per table.
     """
-    from neo4j_graphrag_python_spark.functions.fuzz import HAVE_RAPIDFUZZ
-    from neo4j_graphrag_python_spark.operators.resolver import (
-        _resolve_texts,
-        apply_merge_mapping,
-        connected_components,
-    )
-    from neo4j_graphrag_python_spark.sources.catalog import (
-        write_catalog_table,
-    )
-
     nodes = spark.read.table(f"{target}_nodes")
     edges = spark.read.table(f"{target}_edges")
     canon = spark.read.table(f"{target}_canon")
@@ -513,26 +455,16 @@ def compact_canonicals(
     # thread the caller's resolve property through (default "name" for
     # parity with resolve_batch_incremental): compacting a corpus
     # resolved on a different property must score that property's text,
-    # not silently fall back to names
-    texts = _resolve_texts(nodes, resolve_properties or ["name"]).persist()
-    pairs = candidate_pairs_lsh(texts)
-    if not HAVE_RAPIDFUZZ:
-        pairs = prefilter_fuzzy_pairs(pairs, texts, similarity_threshold)
-    matches = score_pairs_fuzzy(pairs).where(
-        F.col("similarity") >= F.lit(similarity_threshold)
+    # not silently fall back to names.  _ord = id: the keeper is the min
+    # canonical id per component — content hashes carry no arrival
+    # order, so min() is the deterministic, idempotent choice
+    texts = _resolve_texts(nodes, resolve_properties or ["name"]).withColumn(
+        "_ord", F.col("id")
     )
-    comp = connected_components(matches.select("id_a", "id_b"))
-    # keeper = min canonical id per component: content hashes carry no
-    # arrival order, so min() is the deterministic, idempotent choice
-    rep = comp.groupBy("canonical_id").agg(F.min("id").alias("rep_id"))
-    mapping = (
-        comp.join(rep, "canonical_id")
-        .select("id", F.col("rep_id").alias("canonical_id"))
-        .localCheckpoint(eager=True)
+    mapping, _, n_merged = fuzzy_merge_mapping(
+        texts, "fuzzy", similarity_threshold
     )
-    n_merged = mapping.where(F.col("id") != F.col("canonical_id")).count()
     if n_merged == 0:
-        texts.unpersist()
         return {"merged_canonicals": 0}
 
     new_nodes, new_edges = apply_merge_mapping(
@@ -577,5 +509,4 @@ def compact_canonicals(
             feats_tbl
         )
         spark.catalog.refreshTable(feats_tbl)
-    texts.unpersist()
     return {"merged_canonicals": n_merged}

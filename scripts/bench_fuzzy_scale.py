@@ -1,7 +1,8 @@
 """Bench fuzzy entity resolution at high cardinality: 10⁵ entity names
 (datagen.entity_names, planted near-dup clusters) through the
-LSH-blocked pipeline — candidate_pairs_lsh → score_pairs_fuzzy →
-threshold → connected_components — vs the reference's all-pairs
+LSH-blocked library path — candidate_pairs_lsh → score_candidate_pairs
+(prefilter, scorer repartition, WRatio, threshold) →
+connected_components — vs the reference's all-pairs
 semantics (resolver.py:179-313, O(n²) at exactly this n: 5·10⁹ WRatio
 calls, infeasible).  Recall is measured two ways:
 
@@ -13,6 +14,9 @@ calls, infeasible).  Recall is measured two ways:
 
 Usage: python scripts/bench_fuzzy_scale.py [n] [sample_n] [jaccard_distance] [tables]
   (defaults 100000 1200 0.8 12)
+
+BENCH_FUZZY_COUNTS=1 adds the candidate counts before/after the
+prefilter, computed after the timed section.
 """
 
 from __future__ import annotations
@@ -34,7 +38,8 @@ from neo4j_graphrag_python_spark.functions.fuzz import similarity  # noqa: E402
 from neo4j_graphrag_python_spark.operators.resolver import (  # noqa: E402
     candidate_pairs_lsh,
     connected_components,
-    score_pairs_fuzzy,
+    prefilter_fuzzy_pairs,
+    score_candidate_pairs,
 )
 from neo4j_graphrag_python_spark.session import build_spark  # noqa: E402
 
@@ -57,34 +62,12 @@ def main() -> None:
         [(i, lab, nm) for i, lab, nm, _ in rows], ["id", "label", "text"]
     ).localCheckpoint()
 
-    prefilter = os.environ.get("BENCH_FUZZY_PREFILTER", "1") == "1"
     t0 = time.time()
     cands = candidate_pairs_lsh(
         texts, num_hash_tables=tables, jaccard_distance=jaccard_distance
     )
-    n_cands = None
-    n_kept = None
-    if prefilter:
-        # the library path (resolve_similarity): exact WRatio upper-bound
-        # cut before the Python scorer — zero recall loss by construction
-        from neo4j_graphrag_python_spark.operators.resolver import (
-            prefilter_fuzzy_pairs,
-        )
-
-        if os.environ.get("BENCH_FUZZY_COUNTS", "0") == "1":
-            # diagnostic pruning counts — materializes the full candidate
-            # stream twice, NOT part of the timed library path
-            cands = cands.localCheckpoint()
-            n_cands = cands.count()
-            cands = prefilter_fuzzy_pairs(
-                cands, texts, THRESHOLD
-            ).localCheckpoint()
-            n_kept = cands.count()
-        else:
-            cands = prefilter_fuzzy_pairs(cands, texts, THRESHOLD)
     matches = (
-        score_pairs_fuzzy(cands)
-        .where(F.col("similarity") >= THRESHOLD)
+        score_candidate_pairs(cands, texts, "fuzzy", THRESHOLD)
         .select("id_a", "id_b")
         .localCheckpoint()
     )
@@ -92,6 +75,12 @@ def main() -> None:
     comp = connected_components(matches)
     n_comp = comp.select("canonical_id").distinct().count()
     wall = round(time.time() - t0, 2)
+    n_cands = n_kept = None
+    if os.environ.get("BENCH_FUZZY_COUNTS", "0") == "1":
+        # diagnostic pruning counts, untimed: re-runs the blocking
+        cands = cands.localCheckpoint()
+        n_cands = cands.count()
+        n_kept = prefilter_fuzzy_pairs(cands, texts, THRESHOLD).count()
     got = {(r["id_a"], r["id_b"]) for r in matches.collect()}
 
     # planted truth: cluster pairs whose exact WRatio clears threshold
@@ -143,7 +132,6 @@ def main() -> None:
                 "num_hash_tables": tables,
                 "threshold": THRESHOLD,
                 "wall_s": wall,
-                "prefilter": prefilter,
                 "candidates": n_cands,
                 "candidates_after_prefilter": n_kept,
                 "matches": n_matches,

@@ -450,6 +450,59 @@ def test_compact_canonicals_merges_and_is_idempotent(spark, fresh_db):
     assert stats3["exact_adopted"] == 1 and stats3["new_canonicals"] == 0
 
 
+def test_compact_canonicals_consolidates_planted_clusters(spark, fresh_db):
+    """Names with planted near-duplicate clusters, loaded with fuzzy
+    adoption off (every spelling its own canonical), compact to one
+    canonical per matched component: each keeps its min canonical id,
+    every planted pair scoring ≥ 0.8 shares one, edges land on surviving
+    nodes, and a re-run merges nothing."""
+    from collections import defaultdict
+
+    from neo4j_graphrag_python_spark.datagen import entity_names
+    from neo4j_graphrag_python_spark.functions.fuzz import similarity
+    from neo4j_graphrag_python_spark.streaming.incremental import (
+        compact_canonicals,
+    )
+
+    t = f"{fresh_db}.kg_compact_many"
+    rows = entity_names(300, cluster_fraction=0.3)
+    resolve_batch_incremental(
+        _nodes(spark, [(f"m{i}", lab, True, nm, 0, "c", "u")
+                       for i, lab, nm, _ in rows]),
+        _edges(spark, [(f"m{i}", f"m{i - 1}", "NEAR", "c", "u")
+                       for i in range(1, len(rows))]),
+        t,
+    )
+
+    def canon():
+        return {(r.label, r.key): r.canonical_id
+                for r in spark.read.table(f"{t}_canon").collect()}
+
+    canon0 = canon()
+    stats = compact_canonicals(spark, t, similarity_threshold=0.8)
+    canon1 = canon()
+    members = defaultdict(set)
+    for k, cid in canon1.items():
+        members[cid].add(canon0[k])
+    assert all(cid == min(old) for cid, old in members.items())
+    assert stats["merged_canonicals"] == len(canon0) - len(members) > 5
+    assert any(len(old) > 2 for old in members.values())
+
+    clusters = defaultdict(list)
+    for _, lab, nm, c in rows:
+        if c >= 0:
+            clusters[c].append((lab, nm))
+    planted = [(a, b) for mem in clusters.values() for i, a in enumerate(mem)
+               for b in mem[i + 1:] if similarity(a[1], b[1]) >= 0.8]
+    assert planted and all(canon1[a] == canon1[b] for a, b in planted)
+
+    ids = {r.id for r in spark.read.table(f"{t}_nodes").collect()}
+    assert set(members) <= ids
+    assert all({e.start_node_id, e.end_node_id} <= ids
+               for e in spark.read.table(f"{t}_edges").collect())
+    assert compact_canonicals(spark, t)["merged_canonicals"] == 0
+
+
 def test_fuzzy_feature_cache_equivalent_and_covers_aliases(spark, fresh_db):
     """The cached feature table equals staging the final canonical map
     in one go: one row per stored key (alias spellings included — they

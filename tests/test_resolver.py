@@ -324,12 +324,15 @@ def test_prefilter_bound_dominates_wratio() -> None:
 
 def test_prefilter_spark_matches_replica_and_is_lossless(spark) -> None:
     """The Spark-side bound equals the replica per pair, and
-    resolve_similarity's result is IDENTICAL with the prefilter on/off
-    while the Python scorer sees strictly fewer pairs."""
+    resolve_similarity's result equals an in-test reference that scores
+    every blocked pair unfiltered, while the prefilter hands the Python
+    scorer strictly fewer pairs."""
     from neo4j_graphrag_python_spark.operators.resolver import (
         _resolve_texts,
+        apply_merge_mapping,
         candidate_pairs_lsh,
         prefilter_fuzzy_pairs,
+        score_pairs_fuzzy,
     )
 
     rows = [
@@ -356,14 +359,39 @@ def test_prefilter_spark_matches_replica_and_is_lossless(spark) -> None:
     assert got == exp
     assert len(got) < n_before  # it actually prunes something here
 
+    # reference: unfiltered scorer → components → first-mention keeper
+    matches = score_pairs_fuzzy(pairs).where(F.col("similarity") >= 0.8)
+    comp = connected_components(matches.select("id_a", "id_b")).join(
+        texts.select("id", "_ord"), "id"
+    )
+    keeper = comp.groupBy("canonical_id").agg(F.min_by("id", "_ord").alias("k"))
+    mapping = comp.join(keeper, "canonical_id").select(
+        "id", F.col("k").alias("canonical_id")
+    )
     edges = edges_df(spark, [("b:0", "c:0", "KNOWS")])
-    on = resolve_similarity(
-        nodes, edges, method="fuzzy", similarity_threshold=0.8, prefilter=True
+    ref = apply_merge_mapping(nodes, edges, mapping)
+    got = resolve_similarity(nodes, edges, method="fuzzy", similarity_threshold=0.8)
+    for r, g in zip(ref, got):
+        assert sorted(map(str, r.collect())) == sorted(map(str, g.collect()))
+    assert ref[0].count() < nodes.count()  # the reference merges something
+
+
+def test_unknown_similarity_method_raises_before_any_job(spark) -> None:
+    """A misspelled method must not fall through to a scorer: the
+    resolver rejects it before any Spark job runs."""
+    from neo4j_graphrag_python_spark.plans.pipeline import (
+        KGResult,
+        run_similarity_resolution,
     )
-    off = resolve_similarity(
-        nodes, edges, method="fuzzy", similarity_threshold=0.8, prefilter=False
-    )
-    assert sorted(r["id"] for r in on[0].collect()) == sorted(
-        r["id"] for r in off[0].collect()
-    )
-    assert sorted(map(str, on[1].collect())) == sorted(map(str, off[1].collect()))
+
+    nodes, edges = nodes_df(spark, [("a:0", "Person", "Al", 0)]), edges_df(spark, [])
+    sc = spark.sparkContext
+    sc.setJobGroup("bad-method", "")
+    try:
+        with pytest.raises(ValueError, match="fuzy"):
+            run_similarity_resolution(
+                KGResult(nodes, edges, nodes, nodes, edges), method="fuzy"
+            )
+        assert sc.statusTracker().getJobIdsForGroup("bad-method") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
