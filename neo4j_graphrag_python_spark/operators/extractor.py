@@ -361,6 +361,22 @@ def _with_sentinel(ctx: str) -> str:
     return ("\x00" + ctx) if ctx else ""
 
 
+def _extract_partitions(spark, num_partitions: int | None) -> int:
+    """Partition count for an extraction stage: the caller's, else
+    max(defaultParallelism, spark.sql.shuffle.partitions).
+
+    The count is pinned EXPLICITLY: a bare repartition lets AQE coalesce
+    by shuffle BYTES, and extraction is latency-bound model calls and
+    per-chunk Python, not byte-bound — measured at sf0.1 with a 20 ms-
+    latency gateway, AQE coalesced 38k chunks (a few MB) onto 4 of 32
+    workers and the extraction ran at 1/6th of the cluster's concurrency
+    budget."""
+    return num_partitions or max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
+    )
+
+
 def extract_graph_rows(
     chunks: DataFrame,
     extractor_fn: ExtractorFn,
@@ -412,19 +428,10 @@ def extract_graph_rows(
         input_cols.append("boundary_ctx")
     src = chunks.select(*input_cols)
     # hash-repartition on chunk_uid: size-bounded partitions regardless of
-    # conv_id skew (north-rule requirement).  The count is pinned
-    # EXPLICITLY: a bare repartition("chunk_uid") lets AQE coalesce by
-    # shuffle BYTES, and this stage is latency-bound model calls, not
-    # byte-bound — measured at sf0.1 with a 20 ms-latency gateway, AQE
-    # coalesced 38k chunks (a few MB) onto 4 of 32 workers and the
-    # extraction ran at 1/6th of the cluster's concurrency budget.
-    spark = chunks.sparkSession
-    if not num_partitions:
-        num_partitions = max(
-            spark.sparkContext.defaultParallelism,
-            int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-        )
-    src = src.repartition(num_partitions, "chunk_uid")
+    # conv_id skew (north-rule requirement)
+    src = src.repartition(
+        _extract_partitions(chunks.sparkSession, num_partitions), "chunk_uid"
+    )
     return src.mapInPandas(extract_batches, schema=GRAPH_ROWS_FIELDS)
 
 
@@ -436,10 +443,17 @@ def extract_from_documents(
     lexical_config: LexicalGraphConfig | None = None,
     create_from_chunk_edges: bool = True,
     num_partitions: int | None = None,
-    fuse_max_doc_chars: int | None = None,
     emit_chunk_rows: bool = False,
 ) -> DataFrame:
     """Fused split+extract: documents → graph rows in ONE Python pass.
+
+    This is the pipeline's only extraction chain, checkpointed or not:
+    chunk text never leaves the Python worker — splitting feeds
+    extraction in-process, exactly what whole-stage codegen would do for
+    JVM operators (Python UDF boundaries block that fusion, so we fuse
+    manually).  Same chunk uids and sentinel boundary-context semantics
+    as ``split_fixed_size`` → ``extract_graph_rows``
+    (tests/test_fused_extract.py asserts equal rows).
 
     With ``emit_chunk_rows=True`` the same pass also emits kind='chunk'
     rows (uid, index, char offsets and text in the properties map), so the
@@ -448,27 +462,18 @@ def extract_from_documents(
     the lexical/lineage table (the second splitting pass was ~10% of the
     sf3 pipeline wall).
 
-    The staged path (split_fixed_size → cache → extract_graph_rows) pays
-    two Arrow round trips and an extra shuffle so the chunks table can be
-    checkpointed and chunk work re-balanced under extreme conv_id skew.
-    When chunk lineage isn't being checkpointed, this fused operator is
-    the hot path: chunk text never leaves the Python worker — splitting
-    feeds extraction in-process, exactly what whole-stage codegen would do
-    for JVM operators (Python UDF boundaries block that fusion, so we fuse
-    manually).  Identical output to the staged path (same chunk uids, same
-    sentinel boundary-context semantics).
-
     Partitioning: documents are hash-repartitioned on conv_id; per-task
     work is bounded by document size.  A pathological mega-conversation
     would pin all of its (expensive) per-chunk model calls to ONE task, so
-    documents longer than ``fuse_max_doc_chars`` are routed through the
-    staged path instead: splitting stays sequential per doc (approximate
-    chunk boundaries are sequentially dependent — fixed_size_splitter.py's
-    start depends on the previous adjusted start, so a doc cannot be
-    sliced and split in parallel without changing reference semantics),
-    but the model calls spread over the salted chunk-hash repartition.
-    Output is identical either way (tests/test_fused_extract.py asserts
-    fused == staged row-for-row; the whale test asserts the spread).
+    documents longer than ``256 * (chunk_size - chunk_overlap)`` chars
+    (256 chunk steps) take the whale route instead: splitting stays
+    sequential per doc (approximate chunk boundaries are sequentially
+    dependent — fixed_size_splitter.py's start depends on the previous
+    adjusted start, so a doc cannot be sliced and split in parallel
+    without changing reference semantics), but the model calls spread
+    over ``extract_graph_rows``' salted chunk-hash repartition.  Output is
+    identical either way (tests/test_assemble.py's whale test asserts the
+    spread and the rows).
     """
     from neo4j_graphrag_python_spark.functions.splitting import split_text
     from neo4j_graphrag_python_spark.operators.splitter import _chunk_uid
@@ -531,21 +536,13 @@ def extract_from_documents(
             yield _to_pdf(out)
 
     src = documents.select("conv_id", "text")
-    if fuse_max_doc_chars is None:
-        # default: a doc whose chunk count rivals a whole task's fair
-        # share stops amortizing fusion and starts hoarding a core
-        fuse_max_doc_chars = 256 * (size - overlap)
-    is_whale = F.length(F.coalesce(F.col("text"), F.lit(""))) > fuse_max_doc_chars
-    small = src.where(~is_whale)
-    # pin the count (same AQE-coalesce trap as extract_graph_rows: model
-    # calls + per-chunk Python are core-seconds per MB, so partitioning
-    # by shuffle bytes starves the stage)
-    spark_ = documents.sparkSession
-    fuse_parts = num_partitions or max(
-        spark_.sparkContext.defaultParallelism,
-        int(spark_.conf.get("spark.sql.shuffle.partitions", "200")),
+    # a doc whose chunk count rivals a whole task's fair share stops
+    # amortizing fusion and starts hoarding a core
+    whale_chars = 256 * (size - overlap)
+    is_whale = F.length(F.coalesce(F.col("text"), F.lit(""))) > whale_chars
+    small = src.where(~is_whale).repartition(
+        _extract_partitions(documents.sparkSession, num_partitions), "conv_id"
     )
-    small = small.repartition(fuse_parts, "conv_id")
     fused = small.mapInPandas(fused_batches, schema=GRAPH_ROWS_FIELDS)
 
     whales = src.where(is_whale)

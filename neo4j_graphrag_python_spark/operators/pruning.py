@@ -26,8 +26,9 @@ relationships (:255-366):
     _enforce_properties); we reproduce that.
 
 Implementation is 100% built-in Catalyst expressions (when-chains,
-map_filter higher-order functions, one equi-join per edge endpoint to fetch
-kept-node labels).  Lexical-type edges never join — at transcript scale
+map_filter higher-order functions, one left join per edge endpoint against
+the pruned-node ids; endpoint labels are carried on the extracted edges).
+Lexical-type edges never join — at transcript scale
 FROM_CHUNK/NEXT_CHUNK/FROM_DOCUMENT edges dominate, so the join input is
 only the (far smaller) entity-entity edge set.
 """
@@ -117,86 +118,58 @@ def prune_nodes(
 
 def prune_edges(
     edges: DataFrame,
-    kept_nodes: DataFrame,
+    pruned_nodes: DataFrame,
     schema: GraphSchema,
     lexical_config: LexicalGraphConfig | None = None,
-    pruned_nodes: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """→ (kept_edges, pruned_edges[reason]).
 
-    ``kept_edges`` has directions corrected per the pattern rules.
+    ``edges`` has the extractor's edge shape (``split_graph_rows``):
+    besides the canonical edge columns it carries ``start_label`` /
+    ``end_label`` and ``start_name`` / ``end_name`` — the extractor knows
+    them because endpoints can only reference same-chunk nodes.  Lexical
+    edges carry NULLs there (they skip every check).
 
-    Two execution strategies, same semantics:
+    Endpoint validity needs NO join against the node set: a dangling
+    within-chunk reference arrives as a NULL label, and "endpoint kept"
+    reduces to two left joins against the *pruned*-node id set — normally
+    tiny, so AQE broadcasts it.  The edge table is never shuffled.
 
-    * **label-carrying fast path** — when edges already carry
-      ``start_label``/``end_label`` (the extractor knows them: endpoints
-      can only reference same-chunk nodes) and ``pruned_nodes`` is
-      provided, endpoint validity needs NO join against the node set:
-      a dangling within-chunk reference arrives as a NULL label, and
-      "endpoint kept" reduces to two joins against the *pruned*-node id
-      set — normally tiny, so AQE broadcasts it.  The edge table is never
-      shuffled.
-    * **legacy path** — label columns absent: two left joins against kept
-      nodes fetch the labels (the reference's valid_nodes dict, J2).
+    ``kept_edges`` has directions corrected per the pattern rules; the
+    carried label and name columns leave with their endpoints (swapped on
+    reversal), because resolution consumes the names (see
+    ``resolver.resolve_exact``).  ``pruned_edges`` has the canonical edge
+    columns plus ``pruned_reason``.
     """
     cfg = lexical_config or LexicalGraphConfig()
     declared = {rt.label: rt for rt in schema.relationship_types}
     lex_types = list(cfg.lexical_graph_relationship_types)
 
-    carries_labels = (
-        "start_label" in edges.columns
-        and "end_label" in edges.columns
-        and pruned_nodes is not None
-    )
-
     lex_edges = edges.where(F.col("type").isin(lex_types))
     rest = edges.where(~F.col("type").isin(lex_types))
 
-    if carries_labels:
-        pruned_ids = pruned_nodes.select(F.col("id").alias("_pid"))
-        rest = (
-            rest.join(
-                pruned_ids.select(F.col("_pid").alias("_ps")),
-                rest.start_node_id == F.col("_ps"),
-                "left",
-            )
-            .join(
-                pruned_ids.select(F.col("_pid").alias("_pe")),
-                F.col("end_node_id") == F.col("_pe"),
-                "left",
-            )
-            .withColumn(
-                "start_label",
-                F.when(F.col("_ps").isNull(), F.col("start_label")),
-            )
-            .withColumn(
-                "end_label",
-                F.when(F.col("_pe").isNull(), F.col("end_label")),
-            )
-            .drop("_ps", "_pe")
+    pruned_ids = pruned_nodes.select(F.col("id").alias("_pid"))
+    rest = (
+        rest.join(
+            pruned_ids.select(F.col("_pid").alias("_ps")),
+            rest.start_node_id == F.col("_ps"),
+            "left",
         )
-    else:
-        if "start_label" in rest.columns:
-            rest = rest.drop("start_label", "end_label")
-        node_labels = kept_nodes.select(F.col("id").alias("_nid"), F.col("label"))
-        rest = (
-            rest.join(
-                node_labels.select(
-                    F.col("_nid").alias("_sid"), F.col("label").alias("start_label")
-                ),
-                rest.start_node_id == F.col("_sid"),
-                "left",
-            )
-            .drop("_sid")
-            .join(
-                node_labels.select(
-                    F.col("_nid").alias("_eid"), F.col("label").alias("end_label")
-                ),
-                F.col("end_node_id") == F.col("_eid"),
-                "left",
-            )
-            .drop("_eid")
+        .join(
+            pruned_ids.select(F.col("_pid").alias("_pe")),
+            F.col("end_node_id") == F.col("_pe"),
+            "left",
         )
+        .withColumn(
+            "start_label",
+            F.when(F.col("_ps").isNull(), F.col("start_label")),
+        )
+        .withColumn(
+            "end_label",
+            F.when(F.col("_pe").isNull(), F.col("end_label")),
+        )
+        .drop("_ps", "_pe")
+    )
 
     etype = F.col("type")
     is_declared = etype.isin(list(declared)) if declared else F.lit(False)
@@ -245,29 +218,9 @@ def prune_edges(
     )
 
     annotated = rest.withColumn("pruned_reason", reason)
-    drop_cols = ["start_label", "end_label"] + (
-        ["start_name", "end_name"] if "start_name" in rest.columns else []
+    pruned = annotated.where(F.col("pruned_reason").isNotNull()).drop(
+        "start_label", "end_label", "start_name", "end_name"
     )
-    pruned = annotated.where(F.col("pruned_reason").isNotNull()).drop(*drop_cols)
-    # resolve-key columns (start_name/end_name) survive pruning when
-    # present — resolution consumes them (see resolver fast path), with
-    # direction reversal swapping names exactly like endpoint ids
-    carry = []
-    if "start_name" in rest.columns:
-        carry = [
-            F.when(F.col("_swap"), F.col("end_label"))
-            .otherwise(F.col("start_label"))
-            .alias("start_label"),
-            F.when(F.col("_swap"), F.col("start_label"))
-            .otherwise(F.col("end_label"))
-            .alias("end_label"),
-            F.when(F.col("_swap"), F.col("end_name"))
-            .otherwise(F.col("start_name"))
-            .alias("start_name"),
-            F.when(F.col("_swap"), F.col("start_name"))
-            .otherwise(F.col("end_name"))
-            .alias("end_name"),
-        ]
     kept_rest = (
         annotated.where(F.col("pruned_reason").isNull())
         .withColumn("_swap", reverse_valid)
@@ -282,12 +235,21 @@ def prune_edges(
             final_props.alias("properties"),
             "conv_id",
             "chunk_uid",
-            *carry,
+            F.when(F.col("_swap"), F.col("end_label"))
+            .otherwise(F.col("start_label"))
+            .alias("start_label"),
+            F.when(F.col("_swap"), F.col("start_label"))
+            .otherwise(F.col("end_label"))
+            .alias("end_label"),
+            F.when(F.col("_swap"), F.col("end_name"))
+            .otherwise(F.col("start_name"))
+            .alias("start_name"),
+            F.when(F.col("_swap"), F.col("start_name"))
+            .otherwise(F.col("end_name"))
+            .alias("end_name"),
         )
     )
-    if not carry and "start_label" in lex_edges.columns:
-        lex_edges = lex_edges.drop("start_label", "end_label")
-    kept = lex_edges.unionByName(kept_rest, allowMissingColumns=True)
+    kept = lex_edges.unionByName(kept_rest)
     return kept, pruned
 
 
@@ -317,7 +279,7 @@ def prune_graph(
         return nodes, edges, empty_n, empty_e
     kept_nodes, pruned_nodes = prune_nodes(nodes, schema, lexical_config)
     kept_edges, pruned_edges = prune_edges(
-        edges, kept_nodes, schema, lexical_config, pruned_nodes=pruned_nodes
+        edges, pruned_nodes, schema, lexical_config
     )
     return kept_nodes, kept_edges, pruned_nodes, pruned_edges
 

@@ -6,12 +6,16 @@ Orchestrator).  The reference needs a custom asyncio DAG scheduler
 (orchestrator.py) because plain Python has no dataflow engine; on Spark the
 DAG *is* the lazy plan — this module is just the linear composition
 
-    transcripts → assemble → split → [embed] → extract → prune
-                → materialize(nodes, edges) → resolve → canonical graph
+    transcripts → assemble → split+extract → [chunks → lexical graph, embed]
+                → prune → materialize(nodes, edges) → resolve → canonical graph
 
-with optional parquet checkpoints at stage boundaries (the distributed
-ResultStore; enables idempotent resume and ensures extraction executes
-once even though two outputs consume it).
+where split and extract are one fused Python pass
+(``extract_from_documents``), with optional parquet checkpoints at stage
+boundaries (the distributed ResultStore; enables idempotent resume and
+ensures extraction executes once even though two outputs consume it).
+The chunks table is a projection of the extracted rows, so a resume
+that finds ``graph_rows`` committed skips splitting and extraction
+together.
 """
 
 from __future__ import annotations
@@ -27,7 +31,6 @@ from neo4j_graphrag_python_spark.operators.extractor import (
     ExtractorFn,
     chunks_view,
     extract_from_documents,
-    extract_graph_rows,
     split_graph_rows,
 )
 from neo4j_graphrag_python_spark.operators.lexical import build_lexical_graph
@@ -36,7 +39,6 @@ from neo4j_graphrag_python_spark.operators.resolver import (
     resolve_exact,
     resolve_similarity,
 )
-from neo4j_graphrag_python_spark.operators.splitter import split_fixed_size
 from neo4j_graphrag_python_spark.operators.writer import (
     checkpoint_stage,
     dedupe_edges,
@@ -80,42 +82,24 @@ def run_kg_pipeline(
     chunks = None
     need_chunks = bool(ckpt or cfg.create_lexical_graph or embed_chunks)
 
-    # extraction — the expensive stage: one pass, checkpointed, then split.
-    # With a checkpoint_dir the staged path runs over the (checkpointed)
-    # chunks table so a resume skips straight to extraction; without one,
-    # the fused split+extract operator avoids a second Python round trip
-    # (identical output — tests/test_fused_extract.py) AND emits the
-    # chunks table rows in the same pass (kind='chunk' → chunks_view), so
-    # the corpus is split exactly once.
-    if ckpt:
-        chunks = split_fixed_size(documents, cfg.splitter)
-        chunks = checkpoint_stage(chunks, ckpt, "chunks")
-        if embed_chunks:
-            chunks = embed_column(chunks)
-        graph_rows = extract_graph_rows(
-            chunks,
-            extractor_fn,
-            on_error=cfg.on_error,
-            lexical_config=cfg.lexical,
-            num_partitions=cfg.extract_partitions,
-        )
-    else:
-        graph_rows = extract_from_documents(
-            documents,
-            extractor_fn,
-            splitter_config=cfg.splitter,
-            on_error=cfg.on_error,
-            lexical_config=cfg.lexical,
-            num_partitions=cfg.extract_partitions,
-            fuse_max_doc_chars=cfg.fuse_max_doc_chars,
-            emit_chunk_rows=need_chunks,
-        )
+    # extraction — the expensive stage: one fused split+extract pass that
+    # also emits the chunk rows (kind='chunk' → chunks_view), so the corpus
+    # is split exactly once; checkpointed, then split into nodes/edges
+    graph_rows = extract_from_documents(
+        documents,
+        extractor_fn,
+        splitter_config=cfg.splitter,
+        on_error=cfg.on_error,
+        lexical_config=cfg.lexical,
+        create_from_chunk_edges=cfg.create_lexical_graph,
+        num_partitions=cfg.extract_partitions,
+        emit_chunk_rows=need_chunks,
+    )
     graph_rows = checkpoint_stage(graph_rows, ckpt, "graph_rows")
     # checkpoint_stage is the eager boundary, so this wall covers
-    # everything up to and including extraction (split included on the
-    # fused path)
+    # everything up to and including split+extract
     walls["extract_s"] = round(time.monotonic() - t_start, 3)
-    if not ckpt and need_chunks:
+    if need_chunks:
         # persist the typed projection: the lexical builder reads chunks
         # three times (nodes, FROM_DOCUMENT, NEXT_CHUNK window) and
         # re-deriving from the map-typed graph_rows cache per consumer
@@ -198,16 +182,20 @@ def _collect_metrics(
     Both aggregations scan the eager checkpoint/persist of their stage
     (no recompute): the (kind, status) breakdown is one
     map-side-combinable groupBy over graph_rows, the chunk count a cached
-    count.  ``edges_emitted`` counts the extracted relationship rows
-    (entity rels + FROM_CHUNK lineage edges) before pruning and
-    resolution.  Combined with the per-chunk (conv_id, chunk_uid, status)
-    lineage columns the extractor emits (north-rule metrics surface: what
-    failed, where, and how long each eager stage took)."""
+    count.  ``rows_ok``/``rows_error`` count the extractor's node, edge and
+    status rows, not the kind='chunk' rows (those exist only when the
+    chunks table is needed, and are never extraction errors).
+    ``edges_emitted`` counts the extracted relationship rows (entity rels
+    + FROM_CHUNK lineage edges) before pruning and resolution.  Combined
+    with the per-chunk (conv_id, chunk_uid, status) lineage columns the
+    extractor emits (north-rule metrics surface: what failed, where, and
+    how long each eager stage took)."""
     counts = graph_rows.groupBy("kind", "status").count().collect()
+    extracted = [r for r in counts if r["kind"] != "chunk"]
     metrics: dict = dict(walls)
-    metrics["rows_ok"] = sum(r["count"] for r in counts if r["status"] == "ok")
+    metrics["rows_ok"] = sum(r["count"] for r in extracted if r["status"] == "ok")
     metrics["rows_error"] = sum(
-        r["count"] for r in counts if r["status"] != "ok"
+        r["count"] for r in extracted if r["status"] != "ok"
     )
     metrics["edges_emitted"] = sum(
         r["count"] for r in counts if r["kind"] == "edge"

@@ -166,11 +166,9 @@ class PipelineConfig:
     on_error: str = "IGNORE"  # or "RAISE" — reference OnError enum
     perform_entity_resolution: bool = True
     resolve_property: str = "name"
-    # partitioning knobs for 100TB scale (SURVEY.md §4: skew & salting)
-    extract_partitions: int | None = None  # default: spark.sql.shuffle.partitions
-    # docs longer than this leave the fused split+extract path for the
-    # staged one (salted per-chunk model calls) — whale-conversation skew
-    fuse_max_doc_chars: int | None = None  # default: 256 chunk-steps
+    # extraction partition count for 100TB scale (SURVEY.md §4: skew &
+    # salting); default max(defaultParallelism, spark.sql.shuffle.partitions)
+    extract_partitions: int | None = None
     checkpoint_dir: str | None = None  # per-stage parquet checkpoints + resume
     # populate KGResult.metrics (stage walls, chunk/error counts) and, with
     # a checkpoint_dir, append them to <ckpt>/metrics_log for monitoring;

@@ -71,9 +71,11 @@ def test_skewed_conversation_end_to_end(spark) -> None:
     from neo4j_graphrag_python_spark.operators.extractor import (
         demo_rules,
         extract_from_documents,
+        extract_graph_rows,
         regex_extractor,
         split_graph_rows,
     )
+    from neo4j_graphrag_python_spark.operators.splitter import split_fixed_size
     from neo4j_graphrag_python_spark.types import (
         TRANSCRIPTS_SCHEMA,
         SplitterConfig,
@@ -97,11 +99,13 @@ def test_skewed_conversation_end_to_end(spark) -> None:
     )
     assert mismatches == 0
 
+    # whale route above 256 chunk steps = 256 * (600 - 500) = 25,600 chars:
+    # the ~70k-char whale takes it, the one-turn pods stay fused
+    cfg = SplitterConfig(600, 500)
     graph_rows = extract_from_documents(
         docs,
         regex_extractor(demo_rules()),
-        splitter_config=SplitterConfig(600, 200),
-        fuse_max_doc_chars=20_000,  # force the whale onto the staged route
+        splitter_config=cfg,
         num_partitions=8,  # explicit → AQE won't coalesce the tiny shuffle
     )
     # the salted repartition must spread the whale's chunks, not pin them
@@ -119,15 +123,12 @@ def test_skewed_conversation_end_to_end(spark) -> None:
     n_whale_mentions = nodes.where(SF.col("conv_id") == "whale").count()
     assert n_whale_mentions > 100  # extraction saw the whole whale
 
-    # mixed routing (fused pods + staged whale) must equal the all-fused
-    # output row-for-row
-    all_fused = extract_from_documents(
-        docs,
-        regex_extractor(demo_rules()),
-        splitter_config=SplitterConfig(600, 200),
-        fuse_max_doc_chars=10**9,
+    # mixed routing (fused pods + whale route) must equal splitting and
+    # extracting every document in separate stages, row-for-row
+    all_staged = extract_graph_rows(
+        split_fixed_size(docs, cfg), regex_extractor(demo_rules())
     )
     cols = [c for c in graph_rows.columns]
     a = {tuple(str(r[c]) for c in cols) for r in graph_rows.collect()}
-    b = {tuple(str(r[c]) for c in cols) for r in all_fused.collect()}
+    b = {tuple(str(r[c]) for c in cols) for r in all_staged.collect()}
     assert a == b

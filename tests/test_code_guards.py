@@ -34,3 +34,20 @@ def test_no_broad_except_that_only_passes() -> None:
             ):
                 offenders.append(f"{path.relative_to(PACKAGE)}:{node.lineno}")
     assert not offenders, offenders
+
+
+def test_benchmark_trace_targets_resolve() -> None:
+    """Every ``module:attr`` a benchmark workload's traced run rebinds must
+    exist: a dropped import would otherwise only surface as an
+    AttributeError inside ``perfbench/run.py --trace 1``."""
+    import importlib
+
+    from perfbench.workloads import WORKLOADS
+
+    missing = []
+    for name, workload in sorted(WORKLOADS.items()):
+        for target in workload.traced:
+            mod_name, attr = target.split(":")
+            if not hasattr(importlib.import_module(mod_name), attr):
+                missing.append(f"{name}: {target}")
+    assert WORKLOADS and not missing, missing

@@ -104,7 +104,7 @@ def test_resolution_stats(kg) -> None:
     assert stats.number_of_nodes_to_resolve > stats.number_of_created_nodes > 0
 
 
-def test_checkpointed_run_and_resume(transcripts_df, tmp_path) -> None:
+def test_checkpointed_run_and_resume(kg, transcripts_df, tmp_path) -> None:
     ckpt = str(tmp_path / "ckpt")
     cfg = PipelineConfig(
         splitter=SplitterConfig(chunk_size=600, chunk_overlap=200),
@@ -118,6 +118,11 @@ def test_checkpointed_run_and_resume(transcripts_df, tmp_path) -> None:
         for r in triples_view(r1.nodes, r1.edges).collect()
     )
     assert (Path(ckpt) / "graph_rows" / "_SUCCESS").exists()
+    # checkpointing changes where stages live, not what they compute
+    assert t1 == sorted(
+        (r["subj"], r["pred"], r["obj"])
+        for r in triples_view(kg.nodes, kg.edges).collect()
+    )
     # second run reuses checkpoints (idempotent resume) → identical output
     r2 = run_kg_pipeline(
         transcripts_df, regex_extractor(demo_rules()), demo_schema(), cfg
@@ -156,15 +161,15 @@ def test_pipeline_killed_mid_run_resumes_byte_identical(
 ) -> None:
     """Full-pipeline kill-and-resume e2e (VERDICT r3 #7).
 
-    Phase 1 kills the pipeline AFTER the chunks checkpoint commits (the
-    extractor poisons every chunk under OnError.RAISE).  Phase 2 re-runs
-    with a working extractor: the committed chunks stage must be reused
-    (its _SUCCESS mtime does not move), and the output must equal an
-    uninterrupted run's.  Phase 3 crashes the resumable SINK between
-    bucket commits (manifests + files for two buckets removed): the
-    re-run must rewrite only those buckets, leave every completed
-    bucket's parquet files byte-identical, and read back equal to the
-    uninterrupted run.
+    Phase 1 kills the pipeline inside extraction (the extractor poisons
+    every chunk under OnError.RAISE), so ``graph_rows`` never commits.
+    Phase 2 re-runs with a working extractor: its output must equal an
+    uninterrupted run's, and a further run must reuse the committed
+    ``graph_rows`` (its _SUCCESS mtime does not move).  Phase 3 crashes
+    the resumable SINK between bucket commits (manifests + files for two
+    buckets removed): the re-run must rewrite only those buckets, leave
+    every completed bucket's parquet files byte-identical, and read back
+    equal to the uninterrupted run.
     """
     from neo4j_graphrag_python_spark.operators.writer import (
         read_resumable,
@@ -183,7 +188,7 @@ def test_pipeline_killed_mid_run_resumes_byte_identical(
     )
     expected_rows = _node_rows(r_ok.nodes)
 
-    # --- phase 1: die after the chunks stage commits ------------------
+    # --- phase 1: die inside extraction --------------------------------
     ckpt = tmp_path / "ckpt_crash"
 
     def poisoned(texts):
@@ -199,23 +204,23 @@ def test_pipeline_killed_mid_run_resumes_byte_identical(
             PipelineConfig(splitter=splitter, checkpoint_dir=str(ckpt),
                            on_error="RAISE"),
         )
-    chunks_marker = ckpt / "chunks" / "_SUCCESS"
-    assert chunks_marker.exists(), "chunks stage should have committed"
-    assert not (ckpt / "graph_rows" / "_SUCCESS").exists()
-    chunks_mtime = chunks_marker.stat().st_mtime_ns
+    rows_marker = ckpt / "graph_rows" / "_SUCCESS"
+    assert not rows_marker.exists()
 
     # --- phase 2: resume from the checkpoint with a good extractor ----
+    good = PipelineConfig(splitter=splitter, checkpoint_dir=str(ckpt))
     r_resumed = run_kg_pipeline(
-        transcripts_df,
-        regex_extractor(demo_rules()),
-        demo_schema(),
-        PipelineConfig(splitter=splitter, checkpoint_dir=str(ckpt)),
+        transcripts_df, regex_extractor(demo_rules()), demo_schema(), good
     )
-    assert chunks_marker.stat().st_mtime_ns == chunks_mtime, (
-        "resume must reuse the committed chunks stage, not resplit"
-    )
-    assert (ckpt / "graph_rows" / "_SUCCESS").exists()
+    assert rows_marker.exists()
     assert _node_rows(r_resumed.nodes) == expected_rows
+    rows_mtime = rows_marker.stat().st_mtime_ns
+    run_kg_pipeline(
+        transcripts_df, regex_extractor(demo_rules()), demo_schema(), good
+    )
+    assert rows_marker.stat().st_mtime_ns == rows_mtime, (
+        "a further run must reuse the committed graph_rows, not re-extract"
+    )
 
     # --- phase 3: crash the resumable sink between bucket commits -----
     out = tmp_path / "nodes_out"
@@ -259,6 +264,9 @@ def test_metrics_collection_and_log(spark, transcripts_df, tmp_path) -> None:
     assert m["n_chunks"] > 0
     graph_rows = spark.read.parquet(str(Path(ckpt) / "graph_rows"))
     assert m["edges_emitted"] == graph_rows.where("kind = 'edge'").count() > 0
+    assert m["rows_ok"] == graph_rows.where(
+        "kind != 'chunk' AND status = 'ok'"
+    ).count()
     assert m["nodes_to_resolve"] > m["nodes_created"] > 0
     log = spark.read.parquet(str(Path(ckpt) / "metrics_log"))
     assert log.columns == ["run_ts", "metric", "value"]
@@ -277,3 +285,62 @@ def test_metrics_collection_and_log(spark, transcripts_df, tmp_path) -> None:
 
 def test_metrics_off_by_default(kg) -> None:
     assert kg.metrics == {}
+
+
+def test_lexical_graph_off_leaves_no_dangling_edges(transcripts_df) -> None:
+    """FROM_CHUNK edges belong to the lexical graph (reference
+    LexicalGraphBuilder, under create_lexical_graph): with it off, no edge
+    may point at a chunk id that is not a node."""
+    r = run_kg_pipeline(
+        transcripts_df,
+        regex_extractor(demo_rules()),
+        demo_schema(),
+        PipelineConfig(
+            splitter=SplitterConfig(chunk_size=600, chunk_overlap=200),
+            create_lexical_graph=False,
+        ),
+    )
+    assert r.edges.where(F.col("type") == "FROM_CHUNK").count() == 0
+    ids = r.nodes.select(F.col("id").alias("_nid"))
+    endpoints = r.edges.select(F.col("start_node_id").alias("e")).unionByName(
+        r.edges.select(F.col("end_node_id").alias("e"))
+    )
+    assert endpoints.count() > 0
+    assert endpoints.join(ids, F.col("e") == F.col("_nid"), "left_anti").count() == 0
+
+
+def test_ship_path_script_resumes_from_checkpoint(
+    spark, sf_dir, tmp_path, monkeypatch
+) -> None:
+    """scripts/run_pipeline.py (the spark-submit entrypoint) twice on one
+    checkpoint dir: the second run reuses graph_rows and reports the same
+    canonical triple count."""
+    import importlib.util
+    import json
+    import sys
+
+    from pyspark.sql import SparkSession
+
+    spec = importlib.util.spec_from_file_location(
+        "run_pipeline", Path(__file__).parent.parent / "scripts" / "run_pipeline.py"
+    )
+    script = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(script)
+    # main() ends with spark.stop(); keep the shared test session alive
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+
+    ckpt = tmp_path / "ckpt"
+    marker = ckpt / "graph_rows" / "_SUCCESS"
+    triples, mtimes = [], []
+    for attempt in ("a", "b"):
+        out = tmp_path / f"out_{attempt}"
+        monkeypatch.setattr(sys, "argv", [
+            "run_pipeline.py", "--demo-extractor",
+            "--input", tr.ensure_transcripts(sf_dir),
+            "--output", str(out), "--checkpoint-dir", str(ckpt),
+        ])
+        script.main()
+        triples.append(json.loads((out / "metrics.json").read_text())["canonical_triples"])
+        mtimes.append(marker.stat().st_mtime_ns)
+    assert triples[0] == triples[1] > 0
+    assert mtimes[0] == mtimes[1], "second run must reuse graph_rows"

@@ -4,6 +4,7 @@ tests/unit/.../test_graph_pruning.py:47-330."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from neo4j_graphrag_python_spark.operators.pruning import (
     prune_edges,
@@ -26,10 +27,33 @@ def nodes_df(spark, rows):
     )
 
 
-def edges_df(spark, rows):
-    # rows: (start, end, type, properties)
-    return spark.createDataFrame(
-        [(s, e, t, p, "c1", "u1") for s, e, t, p in rows], EDGES_SCHEMA
+PERSON_LOCATION = [("1", "Person", {"name": "a"}), ("2", "Location", {"name": "b"})]
+
+# the extractor's edge shape (split_graph_rows): endpoint labels and
+# resolve-key names ride on every edge
+EXTRACTED_EDGES_SCHEMA = T.StructType(
+    list(EDGES_SCHEMA.fields)
+    + [
+        T.StructField(c, T.StringType())
+        for c in ("start_label", "end_label", "start_name", "end_name")
+    ]
+)
+
+
+def edges_df(spark, rows, node_rows=PERSON_LOCATION):
+    # rows: (start, end, type, properties); endpoint labels and names are
+    # looked up in node_rows — NULL for an id the chunk never declared
+    info = {i: (l, p.get("name")) for i, l, p in node_rows}
+    out = []
+    for s, e, t, p in rows:
+        (sl, sn), (el, en) = info.get(s, (None, None)), info.get(e, (None, None))
+        out.append((s, e, t, p, "c1", "u1", sl, el, sn, en))
+    return spark.createDataFrame(out, EXTRACTED_EDGES_SCHEMA)
+
+
+def no_pruned(spark):
+    return nodes_df(spark, []).withColumn(
+        "pruned_reason", F.lit(None).cast("string")
     )
 
 
@@ -133,16 +157,13 @@ def rel_schema(patterns, additional_patterns=None, additional_rel=None) -> Graph
 
 
 def person_location_nodes(spark):
-    return nodes_df(
-        spark,
-        [("1", "Person", {"name": "a"}), ("2", "Location", {"name": "b"})],
-    )
+    return nodes_df(spark, PERSON_LOCATION)
 
 
 def test_prune_edges_valid_pattern(spark) -> None:
     kept, pruned = prune_edges(
         edges_df(spark, [("1", "2", "REL", {})]),
-        person_location_nodes(spark),
+        no_pruned(spark),
         rel_schema((("Person", "REL", "Location"),)),
     )
     rows = kept.collect()
@@ -153,7 +174,7 @@ def test_prune_edges_valid_pattern(spark) -> None:
 def test_prune_edges_reversed_direction_swapped(spark) -> None:
     kept, _ = prune_edges(
         edges_df(spark, [("2", "1", "REL", {})]),  # Location → Person
-        person_location_nodes(spark),
+        no_pruned(spark),
         rel_schema((("Person", "REL", "Location"),)),
     )
     rows = kept.collect()
@@ -163,7 +184,7 @@ def test_prune_edges_reversed_direction_swapped(spark) -> None:
 def test_prune_edges_dangling_endpoint(spark) -> None:
     kept, pruned = prune_edges(
         edges_df(spark, [("1", "99", "REL", {})]),
-        person_location_nodes(spark),
+        no_pruned(spark),
         rel_schema((("Person", "REL", "Location"),)),
     )
     assert kept.count() == 0
@@ -174,7 +195,7 @@ def test_prune_edges_invalid_pattern(spark) -> None:
     strict = rel_schema((("Person", "REL", "Person"),), additional_patterns=False)
     kept, pruned = prune_edges(
         edges_df(spark, [("1", "2", "REL", {})]),
-        person_location_nodes(spark),
+        no_pruned(spark),
         strict,
     )
     assert kept.count() == 0
@@ -183,7 +204,7 @@ def test_prune_edges_invalid_pattern(spark) -> None:
     loose = rel_schema((("Person", "REL", "Person"),), additional_patterns=True)
     kept, pruned = prune_edges(
         edges_df(spark, [("1", "2", "REL", {})]),
-        person_location_nodes(spark),
+        no_pruned(spark),
         loose,
     )
     rows = kept.collect()
@@ -199,7 +220,7 @@ def test_prune_edges_undeclared_type(spark) -> None:
     )
     kept, _ = prune_edges(
         edges_df(spark, [("1", "2", "OTHER", {"x": "1"})]),
-        person_location_nodes(spark),
+        no_pruned(spark),
         schema_loose,
     )
     rows = kept.collect()
@@ -212,7 +233,7 @@ def test_prune_edges_undeclared_type(spark) -> None:
     )
     kept, pruned = prune_edges(
         edges_df(spark, [("1", "2", "OTHER", {})]),
-        person_location_nodes(spark),
+        no_pruned(spark),
         schema_strict,
     )
     assert kept.count() == 0
@@ -224,7 +245,7 @@ def test_prune_edges_lexical_types_skip_checks(spark) -> None:
     # _enforce_relationships:351-353 appends before any check)
     kept, pruned = prune_edges(
         edges_df(spark, [("nope", "nada", "FROM_CHUNK", {})]),
-        person_location_nodes(spark),
+        no_pruned(spark),
         rel_schema((("Person", "REL", "Location"),)),
     )
     assert kept.count() == 1 and pruned.count() == 0
@@ -239,11 +260,9 @@ def test_prune_graph_no_schema_passthrough(spark) -> None:
 
 
 def test_pruning_stats(spark) -> None:
-    nodes = nodes_df(
-        spark,
-        [("1", "Person", {"name": "x"}), ("2", "Ghost", {"name": "y"})],
-    )
-    edges = edges_df(spark, [("1", "9", "REL", {})])
+    node_rows = [("1", "Person", {"name": "x"}), ("2", "Ghost", {"name": "y"})]
+    nodes = nodes_df(spark, node_rows)
+    edges = edges_df(spark, [("1", "9", "REL", {})], node_rows)
     schema = GraphSchema(
         node_types=({"label": "Person", "properties": [{"name": "name"}]},),
         relationship_types=("REL",),
@@ -262,37 +281,36 @@ def test_pruning_stats(spark) -> None:
 
 
 def test_prune_edges_fast_path_with_carried_labels(spark) -> None:
-    """Label-carrying fast path: endpoint checks without a node join."""
-    from pyspark.sql import types as T
-
-    fields = list(EDGES_SCHEMA.fields) + [
-        T.StructField("start_label", T.StringType()),
-        T.StructField("end_label", T.StringType()),
-    ]
-    edges = spark.createDataFrame(
+    """Carried labels: endpoint checks without a node join."""
+    edges = edges_df(
+        spark,
         [
-            ("1", "2", "REL", {}, "c1", "u1", "Person", "Location"),
-            ("1", "99", "REL", {}, "c1", "u1", "Person", None),  # dangling
-            ("3", "2", "REL", {}, "c1", "u1", "Person", "Location"),  # pruned start
+            ("1", "2", "REL", {}),
+            ("1", "99", "REL", {}),  # dangling
+            ("3", "2", "REL", {}),  # pruned start
         ],
-        T.StructType(fields),
+        PERSON_LOCATION + [("3", "Person", {"name": "gone"})],
     )
-    kept_nodes = person_location_nodes(spark)
     pruned_nodes = nodes_df(spark, [("3", "Person", {"name": "gone"})]).withColumn(
         "pruned_reason", F.lit("NOT_IN_SCHEMA")
     )
-    kept, pruned = prune_edges(
-        edges,
-        kept_nodes,
-        rel_schema((("Person", "REL", "Location"),)),
-        pruned_nodes=pruned_nodes,
-    )
+    schema = rel_schema((("Person", "REL", "Location"),))
+    kept, pruned = prune_edges(edges, pruned_nodes, schema)
     rows = kept.collect()
     assert len(rows) == 1
     assert (rows[0]["start_node_id"], rows[0]["end_node_id"]) == ("1", "2")
-    assert "start_label" not in kept.columns  # canonical schema restored
+    # the carried columns leave with their endpoints ...
+    carried = ("start_label", "end_label", "start_name", "end_name")
+    assert tuple(rows[0][c] for c in carried) == ("Person", "Location", "a", "b")
     reasons = [r["pruned_reason"] for r in pruned.collect()]
     assert reasons == ["INVALID_START_OR_END_NODE"] * 2
+    # ... and are swapped with them when the direction is reversed
+    rev, _ = prune_edges(
+        edges_df(spark, [("2", "1", "REL", {})]), no_pruned(spark), schema
+    )
+    r = rev.collect()[0]
+    assert (r["start_node_id"], r["end_node_id"]) == ("1", "2")
+    assert tuple(r[c] for c in carried) == ("Person", "Location", "a", "b")
 
 
 def test_extractor_emits_null_label_for_unknown_endpoint(spark) -> None:
