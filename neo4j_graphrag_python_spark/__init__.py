@@ -2,18 +2,21 @@
 knowledge-graph-construction engine with the capabilities of
 ``neo4j-graphrag-python``'s ``SimpleKGPipeline``.
 
-The reference (read-only at /root/reference) is a single-process asyncio
-pipeline over in-memory pydantic objects; this package re-expresses the same
-*semantics* as a distributed DataFrame pipeline:
+The reference is a single-process asyncio pipeline over in-memory pydantic
+objects; this package re-expresses the same *semantics* as a distributed
+DataFrame pipeline (``plans/pipeline.py``, ``run_kg_pipeline``):
 
     transcripts (conv_id, turn_idx, role, text, tool, ts)
       → assemble_documents          (window-ordered concat, per-turn lineage)
-      → split_fixed_size            (FixedSizeSplitter semantics, applyInPandas)
+      → extract_from_documents      (fused FixedSizeSplitter split + schema-guided
+                                     triple extraction, one mapInPandas pass)
       → build_lexical_graph         (Document/Chunk nodes, FROM_DOCUMENT/NEXT_CHUNK)
-      → extract_entity_relations    (schema-guided triple extraction, mapInPandas)
       → prune_graph                 (GraphPruning semantics, built-in exprs)
       → materialize nodes/edges     (checkpointed, idempotent resume)
-      → resolve_exact / resolve_fuzzy (entity resolution, groupBy + LSH)
+      → resolve_exact               (exact entity resolution, one groupBy)
+
+``run_similarity_resolution`` adds the optional fuzzy/semantic pass
+(LSH blocking, ``resolve_similarity``).
 
 Everything is expressed with pyspark.sql DataFrame operators; Python is only
 entered through Arrow-vectorized pandas UDFs (mapInPandas / applyInPandas) —

@@ -46,7 +46,7 @@ GRAPH_ROWS_FIELDS = (
     "kind string, id string, label string, properties map<string,string>, "
     "start_node_id string, end_node_id string, type string, "
     "start_label string, end_label string, "
-    "start_name string, end_name string, "
+    "start_key string, end_key string, "
     "conv_id string, chunk_uid string, status string"
 )
 # start_label/end_label: the extractor knows endpoint labels at emission
@@ -56,12 +56,13 @@ GRAPH_ROWS_FIELDS = (
 # a dangling within-chunk reference surfaces as a NULL label here, and
 # global existence ≡ within-chunk existence ∧ endpoint-not-pruned.
 #
-# start_name/end_name: the endpoint nodes' resolve-key property ("name"),
-# carried for the same reason — exact entity resolution can then re-point
-# edges with an equi-join against the (label, name) → canonical-id map
-# (one row per canonical ENTITY, runtime-broadcastable) instead of two
-# shuffle joins against the mention-id mapping (one row per MENTION,
-# proportional to the corpus).  See resolver.resolve_exact fast path.
+# start_key/end_key: the endpoint nodes' value of the configured resolve
+# property (``resolve_property``, "name" by default), carried for the same
+# reason — exact entity resolution re-points edges with an equi-join
+# against the (label, key) → canonical-id map (one row per canonical
+# ENTITY, runtime-broadcastable) instead of two shuffle joins against a
+# mention-id mapping (one row per MENTION, proportional to the corpus).
+# The resolver must group on the same property (resolver.resolve_exact).
 
 
 class ExtractionError(RuntimeError):
@@ -258,8 +259,8 @@ _COLS = [
     "type",
     "start_label",
     "end_label",
-    "start_name",
-    "end_name",
+    "start_key",
+    "end_key",
     "conv_id",
     "chunk_uid",
     "status",
@@ -272,10 +273,13 @@ def _process_items(
     raise_on_error: bool,
     from_chunk_type: str,
     create_from_chunk_edges: bool,
-    chunk_node_label: str = "Chunk",
+    chunk_node_label: str,
+    resolve_property: str,
 ) -> dict[str, list]:
     """Shared extraction core: items = list of
     (conv_id, chunk_uid, chunk_index, model_input) → columnar graph rows.
+    Edge rows carry their endpoints' ``resolve_property`` values as
+    ``start_key``/``end_key``.
 
     Columnar accumulation is an order of magnitude cheaper to hand to
     Arrow than building a DataFrame from per-row tuples.
@@ -284,7 +288,7 @@ def _process_items(
     out: dict[str, list] = {c: [] for c in _COLS}
 
     def emit(kind, nid, label, props, start, end, etype, slabel, elabel,
-             conv, cuid, status, sname=None, ename=None):
+             conv, cuid, status, skey=None, ekey=None):
         out["kind"].append(kind)
         out["id"].append(nid)
         out["label"].append(label)
@@ -294,8 +298,8 @@ def _process_items(
         out["type"].append(etype)
         out["start_label"].append(slabel)
         out["end_label"].append(elabel)
-        out["start_name"].append(sname)
-        out["end_name"].append(ename)
+        out["start_key"].append(skey)
+        out["end_key"].append(ekey)
         out["conv_id"].append(conv)
         out["chunk_uid"].append(cuid)
         out["status"].append(status)
@@ -313,12 +317,12 @@ def _process_items(
         prefix = f"{chunk_uid}:"
         chunk_index_str = str(int(chunk_index))
         local_labels = {str(n["id"]): str(n["label"]) for n in graph["nodes"]}
-        local_names: dict[str, str] = {}
+        local_keys: dict[str, str] = {}
         for n in graph["nodes"]:
             props = _props_to_str_map(n.get("properties"))
             props["chunk_index"] = chunk_index_str
             node_id = prefix + str(n["id"])
-            local_names[str(n["id"])] = props.get("name")
+            local_keys[str(n["id"])] = props.get(resolve_property)
             emit(
                 "node", node_id, str(n["label"]), props,
                 None, None, None, None, None, conv_id, chunk_uid, status,
@@ -328,7 +332,7 @@ def _process_items(
                     "edge", None, None, {}, node_id, chunk_uid,
                     from_chunk_type, str(n["label"]), chunk_node_label,
                     conv_id, chunk_uid, status,
-                    sname=props.get("name"),
+                    skey=props.get(resolve_property),
                 )
         for r in graph["relationships"]:
             emit(
@@ -339,8 +343,8 @@ def _process_items(
                 local_labels.get(str(r["start_node_id"])),
                 local_labels.get(str(r["end_node_id"])),
                 conv_id, chunk_uid, status,
-                sname=local_names.get(str(r["start_node_id"])),
-                ename=local_names.get(str(r["end_node_id"])),
+                skey=local_keys.get(str(r["start_node_id"])),
+                ekey=local_keys.get(str(r["end_node_id"])),
             )
         if not graph["nodes"] and not graph["relationships"]:
             # keep an explicit per-chunk status row for lineage
@@ -384,11 +388,14 @@ def extract_graph_rows(
     lexical_config: LexicalGraphConfig | None = None,
     create_from_chunk_edges: bool = True,
     num_partitions: int | None = None,
+    resolve_property: str = "name",
 ) -> DataFrame:
     """chunks → combined graph rows (kind ∈ {'node','edge'}).
 
     Node rows: (id, label, properties);
-    edge rows: (start_node_id, end_node_id, type, properties).
+    edge rows: (start_node_id, end_node_id, type, properties), plus the
+    endpoints' labels and ``resolve_property`` values as
+    ``start_label``/``end_label`` and ``start_key``/``end_key``.
     Both carry (conv_id, chunk_uid) lineage and a per-chunk ``status``
     ('ok' | 'error:...') — the distributed replacement for OnError.IGNORE
     logging.  With on_error='RAISE' the task fails instead (reference
@@ -419,7 +426,7 @@ def extract_graph_rows(
             out = _process_items(
                 items, extractor_fn, raise_on_error,
                 from_chunk_type, create_from_chunk_edges,
-                cfg.chunk_node_label,
+                cfg.chunk_node_label, resolve_property,
             )
             yield _to_pdf(out)
 
@@ -444,6 +451,7 @@ def extract_from_documents(
     create_from_chunk_edges: bool = True,
     num_partitions: int | None = None,
     emit_chunk_rows: bool = False,
+    resolve_property: str = "name",
 ) -> DataFrame:
     """Fused split+extract: documents → graph rows in ONE Python pass.
 
@@ -453,7 +461,8 @@ def extract_from_documents(
     JVM operators (Python UDF boundaries block that fusion, so we fuse
     manually).  Same chunk uids and sentinel boundary-context semantics
     as ``split_fixed_size`` → ``extract_graph_rows``
-    (tests/test_fused_extract.py asserts equal rows).
+    (tests/test_fused_extract.py asserts equal rows); edge rows carry
+    the endpoints' ``resolve_property`` values as ``start_key``/``end_key``.
 
     With ``emit_chunk_rows=True`` the same pass also emits kind='chunk'
     rows (uid, index, char offsets and text in the properties map), so the
@@ -518,7 +527,7 @@ def extract_from_documents(
             out = _process_items(
                 items, extractor_fn, raise_on_error,
                 from_chunk_type, create_from_chunk_edges,
-                cfg.chunk_node_label,
+                cfg.chunk_node_label, resolve_property,
             )
             for uid, props, conv_id in chunk_rows:
                 out["kind"].append("chunk")
@@ -527,7 +536,7 @@ def extract_from_documents(
                 out["properties"].append(props)
                 for c in (
                     "start_node_id", "end_node_id", "type",
-                    "start_label", "end_label", "start_name", "end_name",
+                    "start_label", "end_label", "start_key", "end_key",
                 ):
                     out[c].append(None)
                 out["conv_id"].append(conv_id)
@@ -568,6 +577,7 @@ def extract_from_documents(
         lexical_config=lexical_config,
         create_from_chunk_edges=create_from_chunk_edges,
         num_partitions=num_partitions,
+        resolve_property=resolve_property,
     )
     if emit_chunk_rows:
         # whales' chunk rows come straight from their chunks table (JVM
@@ -596,8 +606,8 @@ def extract_from_documents(
                 F.lit(None).cast("string").alias("type"),
                 F.lit(None).cast("string").alias("start_label"),
                 F.lit(None).cast("string").alias("end_label"),
-                F.lit(None).cast("string").alias("start_name"),
-                F.lit(None).cast("string").alias("end_name"),
+                F.lit(None).cast("string").alias("start_key"),
+                F.lit(None).cast("string").alias("end_key"),
                 F.col("conv_id"),
                 F.col("chunk_uid"),
                 F.lit("ok").alias("status"),
@@ -643,8 +653,8 @@ def split_graph_rows(graph_rows: DataFrame) -> tuple[DataFrame, DataFrame]:
         "properties",
         "start_label",
         "end_label",
-        "start_name",
-        "end_name",
+        "start_key",
+        "end_key",
         "conv_id",
         "chunk_uid",
     )

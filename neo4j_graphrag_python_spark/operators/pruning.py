@@ -126,9 +126,10 @@ def prune_edges(
 
     ``edges`` has the extractor's edge shape (``split_graph_rows``):
     besides the canonical edge columns it carries ``start_label`` /
-    ``end_label`` and ``start_name`` / ``end_name`` — the extractor knows
-    them because endpoints can only reference same-chunk nodes.  Lexical
-    edges carry NULLs there (they skip every check).
+    ``end_label`` and ``start_key`` / ``end_key`` (the endpoints' resolve
+    key) — the extractor knows them because endpoints can only reference
+    same-chunk nodes.  Lexical edges carry NULLs there (they skip every
+    check).
 
     Endpoint validity needs NO join against the node set: a dangling
     within-chunk reference arrives as a NULL label, and "endpoint kept"
@@ -136,8 +137,8 @@ def prune_edges(
     tiny, so AQE broadcasts it.  The edge table is never shuffled.
 
     ``kept_edges`` has directions corrected per the pattern rules; the
-    carried label and name columns leave with their endpoints (swapped on
-    reversal), because resolution consumes the names (see
+    carried label and key columns leave with their endpoints (swapped on
+    reversal), because resolution consumes them (see
     ``resolver.resolve_exact``).  ``pruned_edges`` has the canonical edge
     columns plus ``pruned_reason``.
     """
@@ -219,7 +220,7 @@ def prune_edges(
 
     annotated = rest.withColumn("pruned_reason", reason)
     pruned = annotated.where(F.col("pruned_reason").isNotNull()).drop(
-        "start_label", "end_label", "start_name", "end_name"
+        "start_label", "end_label", "start_key", "end_key"
     )
     kept_rest = (
         annotated.where(F.col("pruned_reason").isNull())
@@ -241,12 +242,12 @@ def prune_edges(
             F.when(F.col("_swap"), F.col("start_label"))
             .otherwise(F.col("end_label"))
             .alias("end_label"),
-            F.when(F.col("_swap"), F.col("end_name"))
-            .otherwise(F.col("start_name"))
-            .alias("start_name"),
-            F.when(F.col("_swap"), F.col("start_name"))
-            .otherwise(F.col("end_name"))
-            .alias("end_name"),
+            F.when(F.col("_swap"), F.col("end_key"))
+            .otherwise(F.col("start_key"))
+            .alias("start_key"),
+            F.when(F.col("_swap"), F.col("start_key"))
+            .otherwise(F.col("end_key"))
+            .alias("end_key"),
         )
     )
     kept = lex_edges.unionByName(kept_rest)

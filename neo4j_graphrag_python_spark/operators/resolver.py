@@ -13,10 +13,13 @@ Reference semantics:
     a per-unique-text embedding cache.
 
 Spark-first re-design (SURVEY.md §2.3 A1-A4, §2.4 J3-J4):
-  * exact: one groupBy((label, name)) with ``min_by`` picking the canonical
-    node by (chunk_index, id) order — the deterministic analog of
-    "first node wins"; skew on mega-entities is handled by AQE (the
-    aggregation is partial/map-side combined by Catalyst automatically);
+  * exact: one strategy — one groupBy((label, resolve_property value))
+    with ``min_by`` picking the canonical node by (chunk_index, id)
+    order — the deterministic analog of "first node wins" — and edges
+    re-pointed by the endpoint (label, key) the extractor carries, so the
+    key is chosen once, upstream, from the same ``PipelineConfig``; skew
+    on mega-entities is handled by AQE (the aggregation is
+    partial/map-side combined by Catalyst automatically);
   * similarity: the reference's O(n²) ``combinations`` is replaced by
     candidate *blocking* (MinHash-LSH over character n-grams, or exact
     normalized-key prematch), pair scoring in an Arrow-batched pandas UDF,
@@ -27,7 +30,7 @@ Spark-first re-design (SURVEY.md §2.3 A1-A4, §2.4 J3-J4):
     :func:`fuzzy_merge_mapping` the only blocking → comparison →
     clustering chain (the caller's ``_ord`` picks each keeper), and
     :func:`merge_parallel_edges` the only mergeRels rule (behind the
-    writer's dedupe, :func:`repoint_edges` and the exact carried path).
+    writer's dedupe, :func:`repoint_edges` and :func:`resolve_exact`).
 """
 
 from __future__ import annotations
@@ -166,6 +169,9 @@ def _order_key() -> "Column":
 # ---------------------------------------------------------------------------
 
 
+_CARRIED_KEY_COLUMNS = ("start_label", "end_label", "start_key", "end_key")
+
+
 def resolve_exact(
     nodes: DataFrame,
     edges: DataFrame,
@@ -174,19 +180,21 @@ def resolve_exact(
 ) -> tuple[DataFrame, DataFrame, ResolutionStats]:
     """SinglePropertyExactMatchResolver.run (resolver.py:112-168).
 
-    Two physical strategies, identical semantics:
+    Canonical nodes come from ONE groupBy of the mention set on (label,
+    ``resolve_property`` value) — min_by chunk order keeps the first
+    node's row, the reference's first-wins merge.  Edges re-point via
+    equi-joins of their carried endpoint (label, key) against the
+    (label, key) → canonical-id map, which has one row per canonical
+    ENTITY (AQE broadcasts it when small) — never a join against a
+    mention-id mapping, which is proportional to the corpus.
 
-    * **carried-key fast path** — when edges carry the endpoints'
-      resolve key (``start_name``/``end_name`` from extraction, surviving
-      pruning) and the key is the resolve property: canonical nodes come
-      from ONE groupBy of the mention set (min_by chunk order keeps the
-      first node's row — the reference's first-wins merge), and edges
-      re-point via equi-joins against the (label, key) → canonical-id map,
-      which has one row per canonical ENTITY (AQE broadcasts it when
-      small) — never a join against the mention-id mapping, which is
-      proportional to the corpus.
-    * **mapping path** — the generic fallback (edges from storage, custom
-      resolve property): mention-id mapping + apply_merge_mapping.
+    Precondition: ``edges`` has the extractor's shape, carrying
+    ``start_label``/``end_label`` and ``start_key``/``end_key`` (kept
+    through pruning), and the extractor read the keys from the same
+    ``resolve_property`` — ``run_kg_pipeline`` passes both from one
+    ``PipelineConfig``.  A frame without the carried columns raises
+    ``ValueError`` before any Spark job.  Edges from the lexical graph
+    builder carry NULL keys, so they never re-point.
 
     Callers pass materialized ``nodes``/``edges``: resolution reads both
     frames several times (entity scope, canonical join-back, non-entity
@@ -195,50 +203,12 @@ def resolve_exact(
     consumer.  ``run_kg_pipeline`` materializes them at the
     pre-resolve stage boundary (``checkpoint_stage``) before calling in.
     """
-    carried = (
-        resolve_property == "name"
-        and "start_name" in edges.columns
-        and "end_name" in edges.columns
-    )
-    if carried:
-        return _resolve_exact_carried(
-            nodes, edges, resolve_property, untouched_edge_types
+    missing = [c for c in _CARRIED_KEY_COLUMNS if c not in edges.columns]
+    if missing:
+        raise ValueError(
+            "resolve_exact needs edges carrying their endpoints' label and "
+            f"resolve key (the extractor's shape); missing columns {missing}"
         )
-    # (id → canonical_id) over entities with a non-null property
-    # (resolver.py:137-139 'WHERE prop IS NOT NULL').  persist: the
-    # mapping feeds three joins (node anti-join + two edge re-pointings)
-    # plus the stats aggregate — without it the whole upstream
-    # extract/prune DAG re-executes per consumer.
-    key = F.col("properties").getItem(resolve_property)
-    scoped = nodes.where(F.col("is_entity") & key.isNotNull()).select(
-        "id", "label", key.alias("_prop"), _order_key().alias("_ord")
-    )
-    canon = scoped.groupBy("label", "_prop").agg(
-        F.min_by("id", "_ord").alias("canonical_id")
-    )
-    mapping = (
-        scoped.join(canon, ["label", "_prop"]).select("id", "canonical_id").persist()
-    )
-    stats_row = mapping.agg(
-        F.count("*").alias("n"),
-        F.countDistinct("canonical_id").alias("c"),
-    ).collect()[0]
-    new_nodes, new_edges = apply_merge_mapping(
-        nodes, edges, mapping, untouched_types=untouched_edge_types
-    )
-    stats = ResolutionStats(
-        number_of_nodes_to_resolve=stats_row["n"],
-        number_of_created_nodes=stats_row["c"],
-    )
-    return new_nodes, new_edges, stats
-
-
-def _resolve_exact_carried(
-    nodes: DataFrame,
-    edges: DataFrame,
-    resolve_property: str,
-    untouched_edge_types: tuple[str, ...] | None,
-) -> tuple[DataFrame, DataFrame, ResolutionStats]:
     key = F.col("properties").getItem(resolve_property)
     in_scope = F.col("is_entity") & key.isNotNull()
     scoped = nodes.where(in_scope)
@@ -271,8 +241,7 @@ def _resolve_exact_carried(
         .localCheckpoint(eager=False)
     )
     stats_row = winners.agg(
-        # sum over zero groups is NULL; the mapping path's count(*) gives
-        # 0 on an empty scope — keep the two paths' stats identical
+        # sum over zero groups is NULL; an empty scope reports 0
         F.coalesce(F.sum("_n_mentions"), F.lit(0)).alias("n"),
         F.count("*").alias("c"),
     ).collect()[0]
@@ -294,14 +263,15 @@ def _resolve_exact_carried(
     )
 
     def repoint(edges: DataFrame) -> DataFrame:
-        for endpoint, lab, nm in (
-            ("start_node_id", "start_label", "start_name"),
-            ("end_node_id", "end_label", "end_name"),
+        for endpoint, label_col, key_col in (
+            ("start_node_id", "start_label", "start_key"),
+            ("end_node_id", "end_label", "end_key"),
         ):
             edges = (
                 edges.join(
                     cmap,
-                    (F.col(lab) == F.col("_l")) & (F.col(nm) == F.col("_k")),
+                    (F.col(label_col) == F.col("_l"))
+                    & (F.col(key_col) == F.col("_k")),
                     "left",
                 )
                 .withColumn(endpoint, F.coalesce(F.col("_cid"), F.col(endpoint)))

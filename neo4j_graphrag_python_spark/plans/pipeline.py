@@ -94,6 +94,7 @@ def run_kg_pipeline(
         create_from_chunk_edges=cfg.create_lexical_graph,
         num_partitions=cfg.extract_partitions,
         emit_chunk_rows=need_chunks,
+        resolve_property=cfg.resolve_property,
     )
     graph_rows = checkpoint_stage(graph_rows, ckpt, "graph_rows")
     # checkpoint_stage is the eager boundary, so this wall covers
@@ -117,8 +118,10 @@ def run_kg_pipeline(
         # materialized copy of the unions costs more than it saves
         # (measured: ~1.5-3s of the sf0.1 tail)
         nodes = lex_nodes.unionByName(entity_nodes)
-        # entity edges carry resolve-key columns (start_name/end_name);
-        # lexical edges get NULLs — they are untouched by resolution
+        # entity edges carry their endpoints' labels and resolve keys
+        # (start_key/end_key, read from cfg.resolve_property at
+        # extraction); lexical edges get NULLs — resolution never
+        # re-points them
         edges = lex_edges.unionByName(entity_edges, allowMissingColumns=True)
     else:
         nodes, edges = entity_nodes, entity_edges

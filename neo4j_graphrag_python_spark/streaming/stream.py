@@ -13,11 +13,7 @@ Design:
   * ``foreachBatch`` runs the (batch) KG pipeline per micro-batch on the
     closed conversations and appends nodes/edges parquet — giving
     exactly-once-per-conversation semantics via the deterministic ids +
-    dedupe on write;
-  * alternative fully-streaming aggregation (append-mode window) is
-    provided for the chunk/document stages; extraction stays in
-    foreachBatch because mapInPandas over a streaming aggregation with
-    arbitrary state is better expressed per micro-batch.
+    dedupe on write.
 """
 
 from __future__ import annotations
@@ -34,7 +30,7 @@ from neo4j_graphrag_python_spark.types import (
     PipelineConfig,
 )
 
-_SINKS = ("parquet_append", "catalog_merge", "catalog_merge_incremental")
+_SINKS = ("parquet_append", "catalog_merge_incremental")
 
 
 def read_transcript_stream(
@@ -69,25 +65,23 @@ def stream_kg_pipeline(
       * ``parquet_append`` — raw batch_id-stamped parquet append (audit
         log shape; replays append identical rows distinguished by
         batch_id);
-      * ``catalog_merge`` — incremental KG *maintenance*: each batch's
-        nodes/edges are MERGE-upserted into ``{output_dir}_nodes`` /
-        ``_edges`` catalog tables keyed by graph identity (node ``id``;
-        edge ``(start, type, end)``), so a re-delivered or replayed
-        conversation REPLACES its earlier rows instead of duplicating
-        them — the Iceberg production shape (`sources/catalog.py`),
-        ``output_dir`` is then a table-name prefix, not a path.
-        Resolution stays within-batch: the same entity arriving in two
-        batches stays two nodes (counts drift with trigger size);
-      * ``catalog_merge_incremental`` — ``catalog_merge`` plus CROSS-batch
-        entity resolution against the persistent ``{output_dir}_canon``
-        map (streaming/incremental.py): stable content-hash canonical
-        ids, min-wins merges (trigger-size-invariant for the exact tier,
-        idempotent on replay), optional fuzzy adoption of new names
-        against stored canonicals at ``incremental_fuzzy_threshold``.
-        The pipeline's in-batch exact tier is skipped on this sink: the
-        cross-batch tier groups on the same (label, ``resolve_property``)
-        key and keeps the same min-order winner, so running both would
-        resolve every batch twice for identical tables.
+      * ``catalog_merge_incremental`` — incremental KG *maintenance*:
+        each batch's nodes/edges are MERGE-upserted into
+        ``{output_dir}_nodes`` / ``_edges`` catalog tables keyed by graph
+        identity (node ``id``; edge ``(start, type, end)``), so a
+        re-delivered or replayed conversation REPLACES its earlier rows
+        instead of duplicating them — the Iceberg production shape
+        (`sources/catalog.py`); ``output_dir`` is then a table-name
+        prefix, not a path.  Entities resolve ACROSS batches against the
+        persistent ``{output_dir}_canon`` map (streaming/incremental.py):
+        stable content-hash canonical ids, min-wins merges
+        (trigger-size-invariant for the exact tier, idempotent on
+        replay), optional fuzzy adoption of new names against stored
+        canonicals at ``incremental_fuzzy_threshold``.  The pipeline's
+        in-batch exact tier is skipped on this sink: the cross-batch tier
+        groups on the same (label, ``resolve_property``) key and keeps the
+        same min-order winner, so running both would resolve every batch
+        twice for identical tables.
 
     Raises ``ValueError`` for an unknown ``sink`` and for an
     ``incremental_fuzzy_threshold`` given with a sink that ignores it.
@@ -119,15 +113,6 @@ def stream_kg_pipeline(
                 output_dir,
                 resolve_property=cfg.resolve_property,
                 fuzzy_threshold=incremental_fuzzy_threshold,
-            )
-            return
-        if sink == "catalog_merge":
-            from neo4j_graphrag_python_spark.sources.catalog import (
-                materialize_graph,
-            )
-
-            materialize_graph(
-                result.nodes, result.edges, output_dir, mode="merge"
             )
             return
         (
@@ -171,18 +156,3 @@ def streaming_dedup_exact(
         ["_text_hash"]
     ).drop("_text_hash")
 
-
-def streaming_turn_counts(
-    stream: DataFrame, watermark: str = "10 minutes", window: str = "5 minutes"
-) -> DataFrame:
-    """Fully-streaming stage: windowed per-conversation turn counts with a
-    watermark for late turns — append-mode compatible (used for monitoring
-    feed health; also demonstrates the watermarked-agg operator)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), F.col("conv_id"))
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.max("turn_idx").alias("max_turn_idx"),
-        )
-    )

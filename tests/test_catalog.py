@@ -125,7 +125,7 @@ def test_streaming_catalog_merge_idempotent(spark, fresh_db, tmp_path):
         schema=demo_schema(),
         config=PipelineConfig(splitter=SplitterConfig(600, 200)),
         trigger_once=True,
-        sink="catalog_merge",
+        sink="catalog_merge_incremental",
     )
 
     stream = read_transcript_stream(spark, str(src))

@@ -379,7 +379,7 @@ def test_stream_rejects_fuzzy_threshold_without_incremental_sink(
     with pytest.raises(ValueError, match="incremental_fuzzy_threshold"):
         stream_kg_pipeline(
             spark.range(1), lambda text: "", output_dir=str(tmp_path / "o"),
-            checkpoint_dir=str(tmp_path / "c"), sink="catalog_merge",
+            checkpoint_dir=str(tmp_path / "c"), sink="parquet_append",
             incremental_fuzzy_threshold=0.8,
         )
 

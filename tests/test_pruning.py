@@ -30,12 +30,12 @@ def nodes_df(spark, rows):
 PERSON_LOCATION = [("1", "Person", {"name": "a"}), ("2", "Location", {"name": "b"})]
 
 # the extractor's edge shape (split_graph_rows): endpoint labels and
-# resolve-key names ride on every edge
+# resolve keys ride on every edge
 EXTRACTED_EDGES_SCHEMA = T.StructType(
     list(EDGES_SCHEMA.fields)
     + [
         T.StructField(c, T.StringType())
-        for c in ("start_label", "end_label", "start_name", "end_name")
+        for c in ("start_label", "end_label", "start_key", "end_key")
     ]
 )
 
@@ -300,7 +300,7 @@ def test_prune_edges_fast_path_with_carried_labels(spark) -> None:
     assert len(rows) == 1
     assert (rows[0]["start_node_id"], rows[0]["end_node_id"]) == ("1", "2")
     # the carried columns leave with their endpoints ...
-    carried = ("start_label", "end_label", "start_name", "end_name")
+    carried = ("start_label", "end_label", "start_key", "end_key")
     assert tuple(rows[0][c] for c in carried) == ("Person", "Location", "a", "b")
     reasons = [r["pruned_reason"] for r in pruned.collect()]
     assert reasons == ["INVALID_START_OR_END_NODE"] * 2

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from neo4j_graphrag_python_spark.functions.fuzz import default_process, similarity
 from neo4j_graphrag_python_spark.operators.resolver import (
@@ -13,6 +14,16 @@ from neo4j_graphrag_python_spark.operators.resolver import (
     resolve_similarity,
 )
 from neo4j_graphrag_python_spark.types import EDGES_SCHEMA, NODES_SCHEMA
+
+# the extractor's edge shape (split_graph_rows): endpoint labels and
+# resolve keys ride on every edge
+EXTRACTED_EDGES_SCHEMA = T.StructType(
+    list(EDGES_SCHEMA.fields)
+    + [
+        T.StructField(c, T.StringType())
+        for c in ("start_label", "end_label", "start_key", "end_key")
+    ]
+)
 
 
 def nodes_df(spark, rows):
@@ -26,29 +37,33 @@ def nodes_df(spark, rows):
     return spark.createDataFrame(data, NODES_SCHEMA)
 
 
-def edges_df(spark, rows):
-    return spark.createDataFrame(
-        [(s, e, t, {}, "c1", "u0") for s, e, t in rows], EDGES_SCHEMA
-    )
+def edges_df(spark, rows, node_rows=()):
+    # rows: (start, end, type); endpoint labels and names are looked up in
+    # node_rows (nodes_df's rows) — NULL for an id they do not declare
+    info = {i: (label, name) for i, label, name, _ in node_rows}
+    out = []
+    for s, e, t in rows:
+        (sl, sk), (el, ek) = info.get(s, (None, None)), info.get(e, (None, None))
+        out.append((s, e, t, {}, "c1", "u0", sl, el, sk, ek))
+    return spark.createDataFrame(out, EXTRACTED_EDGES_SCHEMA)
 
 
 def test_exact_match_merges_same_label_same_name(spark) -> None:
-    nodes = nodes_df(
-        spark,
-        [
-            ("a:0", "Person", "Alice", 0),
-            ("b:0", "Person", "Alice", 1),
-            ("c:0", "Person", "Bob", 0),
-            ("d:0", "Organization", "Alice", 0),  # different label — no merge
-            ("e:0", "Person", None, 0),  # null name — out of scope
-        ],
-    )
+    node_rows = [
+        ("a:0", "Person", "Alice", 0),
+        ("b:0", "Person", "Alice", 1),
+        ("c:0", "Person", "Bob", 0),
+        ("d:0", "Organization", "Alice", 0),  # different label — no merge
+        ("e:0", "Person", None, 0),  # null name — out of scope
+    ]
+    nodes = nodes_df(spark, node_rows)
     edges = edges_df(
         spark,
         [
             ("b:0", "c:0", "KNOWS"),  # re-pointed to a:0
             ("a:0", "c:0", "KNOWS"),  # parallel after merge → deduped
         ],
+        node_rows,
     )
     new_nodes, new_edges, stats = resolve_exact(nodes, edges)
     ids = {r["id"] for r in new_nodes.collect()}
@@ -87,15 +102,13 @@ def test_fuzzy_similarity_goldens() -> None:
 
 
 def test_resolve_similarity_fuzzy(spark) -> None:
-    nodes = nodes_df(
-        spark,
-        [
-            ("a:0", "Person", "John Smith", 0),
-            ("b:0", "Person", "Jon Smith", 1),
-            ("c:0", "Person", "Completely Different", 0),
-        ],
-    )
-    edges = edges_df(spark, [("b:0", "c:0", "KNOWS")])
+    node_rows = [
+        ("a:0", "Person", "John Smith", 0),
+        ("b:0", "Person", "Jon Smith", 1),
+        ("c:0", "Person", "Completely Different", 0),
+    ]
+    nodes = nodes_df(spark, node_rows)
+    edges = edges_df(spark, [("b:0", "c:0", "KNOWS")], node_rows)
     new_nodes, new_edges, stats = resolve_similarity(
         nodes, edges, method="fuzzy", similarity_threshold=0.8
     )
@@ -167,74 +180,158 @@ def test_connected_components_transitive(spark) -> None:
     assert comp["a"] != comp["x"]
 
 
-def test_carried_and_mapping_paths_equivalent(spark) -> None:
-    """resolve_exact's carried-key fast path and the generic mention-
-    mapping path must produce the same canonical graph on the same
-    input (the fast path drops to the generic one when edges lack the
-    carried columns)."""
+def _mention_mapping_reference(nodes, edges, resolve_property, untouched_types):
+    """Exact resolution in its mention-id mapping form: (id →
+    canonical_id) over the in-scope entities, the min-(chunk_index, id)
+    mention of each (label, key) group winning, then
+    ``apply_merge_mapping``.  Returns (nodes, edges, (n_scope, n_canonical))."""
+    from neo4j_graphrag_python_spark.operators.resolver import apply_merge_mapping
+
+    key = F.col("properties").getItem(resolve_property)
+    order = F.struct(
+        F.coalesce(
+            F.col("properties").getItem("chunk_index").cast("int"), F.lit(0)
+        ).alias("ci"),
+        F.col("id").alias("id"),
+    )
+    scoped = nodes.where(F.col("is_entity") & key.isNotNull()).select(
+        "id", "label", key.alias("_prop"), order.alias("_ord")
+    )
+    canon = scoped.groupBy("label", "_prop").agg(
+        F.min_by("id", "_ord").alias("canonical_id")
+    )
+    mapping = scoped.join(canon, ["label", "_prop"]).select("id", "canonical_id")
+    stats = mapping.agg(
+        F.count("*").alias("n"), F.countDistinct("canonical_id").alias("c")
+    ).collect()[0]
+    new_nodes, new_edges = apply_merge_mapping(
+        nodes, edges, mapping, untouched_types=untouched_types
+    )
+    return new_nodes, new_edges, (stats["n"], stats["c"])
+
+
+@pytest.mark.parametrize("resolve_property", ["name", "norm"])
+def test_resolve_exact_matches_mention_mapping_reference(
+    spark, sf_dir, resolve_property
+) -> None:
+    """run_kg_pipeline's exact resolution (the extractor carries the
+    configured key; resolve_exact re-points by it) equals the
+    mention-mapping reference applied to the same run's unresolved
+    output.  That output is already edge-deduped, which is harmless:
+    a min of per-(start, type, end) mins is the global min.
+
+    ``norm`` (the name's last token, added by wrapping the extractor)
+    groups some distinct names together, so it resolves differently
+    from ``name``."""
+    import dataclasses
+    import json
+
     from neo4j_graphrag_python_spark import transcripts as tr
     from neo4j_graphrag_python_spark.operators.extractor import (
         demo_rules,
-        extract_from_documents,
         regex_extractor,
-        split_graph_rows,
     )
-    from neo4j_graphrag_python_spark.operators.assemble import assemble_documents
-    from neo4j_graphrag_python_spark.operators.resolver import resolve_exact
-    from neo4j_graphrag_python_spark.types import SplitterConfig
+    from neo4j_graphrag_python_spark.plans.pipeline import run_kg_pipeline
+    from neo4j_graphrag_python_spark.schema import PropertyType, demo_schema
+    from neo4j_graphrag_python_spark.types import PipelineConfig, SplitterConfig
 
-    docs = assemble_documents(
-        spark.read.parquet(tr.ensure_transcripts("/root/testdata/sf0.001"))
-    )
-    rows = extract_from_documents(
-        docs, regex_extractor(demo_rules()), splitter_config=SplitterConfig(600, 200)
-    ).persist()
-    nodes, edges = split_graph_rows(rows)
-    assert "start_name" in edges.columns
+    extract = regex_extractor(demo_rules())
 
-    fast_n, fast_e, fast_s = resolve_exact(nodes, edges)
-    slow_n, slow_e, slow_s = resolve_exact(
-        nodes, edges.drop("start_name", "end_name")
+    def extract_with_norm(texts):
+        out = []
+        for raw in extract(texts):
+            graph = json.loads(raw)
+            for n in graph["nodes"]:
+                n["properties"]["norm"] = n["properties"]["name"].split()[-1]
+            out.append(json.dumps(graph))
+        return out
+
+    base = demo_schema()
+    schema = dataclasses.replace(
+        base,
+        node_types=tuple(
+            dataclasses.replace(nt, properties=nt.properties + (PropertyType("norm"),))
+            for nt in base.node_types
+        ),
     )
-    assert fast_s.number_of_nodes_to_resolve == slow_s.number_of_nodes_to_resolve
-    assert fast_s.number_of_created_nodes == slow_s.number_of_created_nodes
+    transcripts = spark.read.parquet(tr.ensure_transcripts(sf_dir))
+    cfg = PipelineConfig(
+        splitter=SplitterConfig(600, 200), resolve_property=resolve_property
+    )
+
+    def run(**overrides):
+        return run_kg_pipeline(
+            transcripts, extract_with_norm, schema,
+            dataclasses.replace(cfg, **overrides),
+        )
+
+    got = run()
+    raw = run(perform_entity_resolution=False)
+    raw_nodes = raw.nodes.persist()
+    raw_edges = raw.edges.persist()
+    ref_n, ref_e, (ref_scope, ref_created) = _mention_mapping_reference(
+        raw_nodes, raw_edges, resolve_property,
+        (cfg.lexical.next_chunk_relationship_type,
+         cfg.lexical.chunk_to_document_relationship_type),
+    )
+
+    if resolve_property == "norm":
+        # some (label, norm) group holds ≥2 distinct names: this case
+        # merges what resolving on name keeps apart
+        widest = (
+            raw_nodes.where(F.col("is_entity"))
+            .groupBy("label", F.col("properties")["norm"])
+            .agg(F.countDistinct(F.col("properties")["name"]).alias("k"))
+            .agg(F.max("k"))
+            .first()[0]
+        )
+        assert widest >= 2
 
     def node_set(df):
         return {
-            (r["id"], r["label"], r["properties"].get("name"))
+            (r["id"], r["label"], r["is_entity"],
+             tuple(sorted(r["properties"].items())), r["conv_id"], r["chunk_uid"])
             for r in df.collect()
         }
 
     def edge_set(df):
         return {
             (r["start_node_id"], r["type"], r["end_node_id"],
-             tuple(sorted(r["properties"].items())), r["chunk_uid"])
+             tuple(sorted(r["properties"].items())), r["conv_id"], r["chunk_uid"])
             for r in df.collect()
         }
 
-    assert node_set(fast_n) == node_set(slow_n)
-    assert edge_set(fast_e) == edge_set(slow_e)
-    rows.unpersist()
+    assert got.resolution_stats.number_of_nodes_to_resolve == ref_scope
+    assert got.resolution_stats.number_of_created_nodes == ref_created
+    assert ref_created < ref_scope
+    assert node_set(got.nodes) == node_set(ref_n)
+    assert edge_set(got.edges) == edge_set(ref_e)
+    raw_nodes.unpersist()
+    raw_edges.unpersist()
 
 
 def test_resolve_exact_empty_scope_stats_are_zero(spark) -> None:
-    """Both resolution paths must report 0 (not NULL) on a corpus with no
-    resolvable entities (review finding)."""
-    from neo4j_graphrag_python_spark.operators.resolver import resolve_exact
-    from neo4j_graphrag_python_spark.types import EDGES_SCHEMA, NODES_SCHEMA
-
+    """An empty resolution scope reports 0 (not NULL); canonical-schema
+    edges without the carried label/key columns are rejected before any
+    Spark job runs."""
     nodes = spark.createDataFrame(
         [("c1", "Chunk", False, {}, None, "c1", "u1")], NODES_SCHEMA
     )
-    edges = spark.createDataFrame([], EDGES_SCHEMA)
-    carried = edges.withColumn("start_name", F.lit(None).cast("string")) \
-        .withColumn("end_name", F.lit(None).cast("string")) \
-        .withColumn("start_label", F.lit(None).cast("string")) \
-        .withColumn("end_label", F.lit(None).cast("string"))
-    _, _, s_fast = resolve_exact(nodes, carried)
-    _, _, s_slow = resolve_exact(nodes, edges)
-    assert s_fast.number_of_nodes_to_resolve == 0
-    assert s_slow.number_of_nodes_to_resolve == 0
+    _, _, stats = resolve_exact(
+        nodes, spark.createDataFrame([], EXTRACTED_EDGES_SCHEMA)
+    )
+    assert stats.number_of_nodes_to_resolve == 0
+    assert stats.number_of_created_nodes == 0
+
+    canonical = spark.createDataFrame([], EDGES_SCHEMA)
+    sc = spark.sparkContext
+    sc.setJobGroup("exact-canonical-edges", "")
+    try:
+        with pytest.raises(ValueError, match="start_key"):
+            resolve_exact(nodes, canonical)
+        assert sc.statusTracker().getJobIdsForGroup("exact-canonical-edges") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_lsh_blocking_radius_covers_scorer_reach(spark) -> None:
