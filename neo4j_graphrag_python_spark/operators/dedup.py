@@ -17,8 +17,11 @@ duplicate pairs.  Design points for scale:
                 within Hamming distance k, blocked on 4 16-bit sub-bands
                 (exact-match blocking per Charikar/Manku et al.);
   * n-gram Jaccard: verification scorer for candidate pairs (pandas UDF);
-  * embedding near-dup: cosine over an embedding column — exact
-    (all-pairs within LSH buckets) or brute force for small dims.
+  * embedding near-dup: cosine over an embedding column — hyperplane
+    LSH where its pruning works, else a blocked exact GEMM or IVF cell
+    blocking.  The GEMM and per-cell drivers, the candidate rescore and
+    the vector normalizer are ``similarity.py``'s, shared with the k-NN
+    joins.
 """
 
 from __future__ import annotations
@@ -26,8 +29,19 @@ from __future__ import annotations
 import math
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from neo4j_graphrag_python_spark.operators.similarity import (
+    _id_vectors,
+    _ivf_cell_pairs,
+    _ivf_centroids,
+    _rescore_pairs,
+    _tile_pair_gemm,
+    cosine_col,
+)
+
 
 def widen_for_compute(df: DataFrame) -> DataFrame:
     """Widen a frame to the session's parallelism before a compute-dense
@@ -74,6 +88,34 @@ def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"):
 # ---------------------------------------------------------------------------
 
 
+# XXH64 — the hash behind Spark's ``xxhash64`` — as uint64 numpy ops,
+# shared by the shingle, signature and band kernels below;
+# functions/xxhash.py is the scalar reference whose JVM parity is
+# test-pinned
+_U = np.uint64
+_P1, _P2, _P3 = _U(0x9E3779B185EBCA87), _U(0xC2B2AE3D27D4EB4F), _U(0x165667B19E3779F9)
+_P4, _P5 = _U(0x85EBCA77C2B2AE63), _U(0x27D4EB2F165667C5)
+
+
+def _rotl(x, r):
+    return (x << _U(r)) | (x >> _U(64 - r))
+
+
+def _avalanche(h):
+    h = h ^ (h >> _U(33))
+    h = h * _P2
+    h = h ^ (h >> _U(29))
+    h = h * _P3
+    return h ^ (h >> _U(32))
+
+
+def _xxh64_long(u, seed):
+    """XXH64 of each long's 8 little-endian bytes under ``seed`` (a uint64
+    scalar or a per-row array)."""
+    h = (seed + _P5 + _U(8)) ^ (_rotl(u * _P2, 31) * _P1)
+    return _avalanche(_rotl(h, 27) * _P1 + _P4)
+
+
 def _ascii_window_hasher(k: int):
     """Returns ``f(norm: str) -> np.ndarray[uint64]``: Spark-compatible
     ``xxhash64`` (seed 42) of every sliding ``k``-char shingle of a
@@ -81,47 +123,31 @@ def _ascii_window_hasher(k: int):
     loop unrolled into one numpy pass per 8/4/1-byte chunk class, same
     op order as functions/xxhash.py (whose JVM parity is test-pinned).
     Requires ``len(norm) >= k`` and k < 32."""
-    import numpy as np
-
-    U = np.uint64
-    P1, P2, P3 = U(0x9E3779B185EBCA87), U(0xC2B2AE3D27D4EB4F), U(0x165667B19E3779F9)
-    P4, P5 = U(0x85EBCA77C2B2AE63), U(0x27D4EB2F165667C5)
-
-    def _rotl(x, r):
-        return (x << U(r)) | (x >> U(64 - r))
-
-    def _avalanche(h):
-        h = h ^ (h >> U(33))
-        h = h * P2
-        h = h ^ (h >> U(29))
-        h = h * P3
-        return h ^ (h >> U(32))
-
-    h_init = U((42 + 0x27D4EB2F165667C5 + k) & ((1 << 64) - 1))
+    h_init = _U((42 + 0x27D4EB2F165667C5 + k) & ((1 << 64) - 1))
 
     def hash_windows(norm: str) -> "np.ndarray":
         b = np.frombuffer(norm.encode("utf-8"), dtype=np.uint8)
         n_w = len(b) - k + 1
-        h = np.full(n_w, h_init, dtype=U)
+        h = np.full(n_w, h_init, dtype=_U)
         win = np.lib.stride_tricks.sliding_window_view(b, k)
         i = 0
         while i <= k - 8:  # full 8-byte chunks
-            word = np.zeros(n_w, dtype=U)
+            word = np.zeros(n_w, dtype=_U)
             for byte in range(8):
-                word |= win[:, i + byte].astype(U) << U(8 * byte)
-            h ^= _rotl(word * P2, 31) * P1
-            h = _rotl(h, 27) * P1 + P4
+                word |= win[:, i + byte].astype(_U) << _U(8 * byte)
+            h ^= _rotl(word * _P2, 31) * _P1
+            h = _rotl(h, 27) * _P1 + _P4
             i += 8
         if i <= k - 4:  # one 4-byte chunk
-            word = np.zeros(n_w, dtype=U)
+            word = np.zeros(n_w, dtype=_U)
             for byte in range(4):
-                word |= win[:, i + byte].astype(U) << U(8 * byte)
-            h ^= word * P1
-            h = _rotl(h, 23) * P2 + P3
+                word |= win[:, i + byte].astype(_U) << _U(8 * byte)
+            h ^= word * _P1
+            h = _rotl(h, 23) * _P2 + _P3
             i += 4
         while i < k:  # tail bytes
-            h ^= win[:, i].astype(U) * P5
-            h = _rotl(h, 11) * P1
+            h ^= win[:, i].astype(_U) * _P5
+            h = _rotl(h, 11) * _P1
             i += 1
         return _avalanche(h)
 
@@ -154,37 +180,15 @@ def _minhash_sig_udf(num_hashes: int, shingle_k: int):
     pure-Python replica per shingle — correctness identical, cost
     proportional to the non-ASCII share of the corpus.
     """
-    import numpy as np
     from pyspark.sql.types import ArrayType, LongType
 
     from neo4j_graphrag_python_spark.functions.xxhash import xxh64
 
-    U = np.uint64
-    P1, P2, P3 = U(0x9E3779B185EBCA87), U(0xC2B2AE3D27D4EB4F), U(0x165667B19E3779F9)
-    P4, P5 = U(0x85EBCA77C2B2AE63), U(0x27D4EB2F165667C5)
     MASK = (1 << 64) - 1
-
-    def _rotl(x, r):
-        return (x << U(r)) | (x >> U(64 - r))
-
-    def _avalanche(h):
-        h = h ^ (h >> U(33))
-        h = h * P2
-        h = h ^ (h >> U(29))
-        h = h * P3
-        return h ^ (h >> U(32))
-
-    def _hash_longs(u):
-        # xxh64(8 LE bytes of each long, seed=42): short-input path
-        h0 = U((42 + 0x27D4EB2F165667C5 + 8) & MASK)
-        h = h0 ^ (_rotl(u * P2, 31) * P1)
-        h = _rotl(h, 27) * P1 + P4
-        return _avalanche(h)
-
     # per-slot xor constants for the rehash tail:
     # (seed_literal_as_u32 * PRIME64_1) mod 2^64
-    xor_consts = [U((s * 0x9E3779B185EBCA87) & MASK) for s in range(num_hashes)]
-    p5_4 = U((0x27D4EB2F165667C5 + 4) & MASK)
+    xor_consts = [_U((s * 0x9E3779B185EBCA87) & MASK) for s in range(num_hashes)]
+    p5_4 = _U((0x27D4EB2F165667C5 + 4) & MASK)
 
     _base_hashes_ascii = _ascii_window_hasher(shingle_k)
 
@@ -200,7 +204,7 @@ def _minhash_sig_udf(num_hashes: int, shingle_k: int):
             }
         else:
             hs = {xxh64(norm.encode("utf-8"), 42)}
-        return np.array(sorted(hs), dtype=U)
+        return np.array(sorted(hs), dtype=_U)
 
     @F.pandas_udf(ArrayType(LongType()))
     def sig_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -213,12 +217,13 @@ def _minhash_sig_udf(num_hashes: int, shingle_k: int):
                 lens[i] = len(bh)
                 parts.append(bh)
             flat = np.concatenate(parts)
-            hbase = _hash_longs(flat) + p5_4
+            # xxh64(8 LE bytes of each base hash, seed=42)
+            hbase = _xxh64_long(flat, _U(42)) + p5_4
             starts = np.zeros(len(texts), dtype=np.intp)
             np.cumsum(lens[:-1], out=starts[1:])
             sig_mat = np.empty((len(texts), num_hashes), dtype=np.int64)
             for sd in range(num_hashes):
-                h2 = _avalanche(_rotl(hbase ^ xor_consts[sd], 23) * P2 + P3)
+                h2 = _avalanche(_rotl(hbase ^ xor_consts[sd], 23) * _P2 + _P3)
                 sig_mat[:, sd] = np.minimum.reduceat(h2.view(np.int64), starts)
             yield pd.Series(sig_mat.tolist())
 
@@ -282,30 +287,9 @@ def _band_buckets_udf(bands: int):
     executor time at sf0.1).  Hash collisions are ~2⁻⁶⁴ per bucket pair
     in either scheme and the fixture pins the pair set at test scale.
     """
-    import numpy as np
     from pyspark.sql.types import ArrayType, LongType
 
     from neo4j_graphrag_python_spark.functions.xxhash import spark_xxhash64, Long
-
-    U = np.uint64
-    P1, P2, P3 = U(0x9E3779B185EBCA87), U(0xC2B2AE3D27D4EB4F), U(0x165667B19E3779F9)
-    P4, P5 = U(0x85EBCA77C2B2AE63), U(0x27D4EB2F165667C5)
-
-    def _rotl(x, r):
-        return (x << U(r)) | (x >> U(64 - r))
-
-    def _avalanche(h):
-        h = h ^ (h >> U(33))
-        h = h * P2
-        h = h ^ (h >> U(29))
-        h = h * P3
-        return h ^ (h >> U(32))
-
-    def _chain_long(u, seed_vec):
-        # xxh64 of 8 LE bytes with a per-row running seed
-        h = (seed_vec + P5 + U(8)) ^ (_rotl(u * P2, 31) * P1)
-        h = _rotl(h, 27) * P1 + P4
-        return _avalanche(h)
 
     @F.pandas_udf(ArrayType(LongType()))
     def bucket_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -321,15 +305,16 @@ def _band_buckets_udf(bands: int):
             if regular:
                 mat = np.stack(
                     [np.asarray(sigs[i], dtype=np.int64) for i in regular]
-                ).view(U)
+                ).view(_U)
                 n_sig = mat.shape[1]
                 rpb = n_sig / bands  # same double division as the old form
                 res = np.empty((len(regular), bands), dtype=np.int64)
                 for b in range(bands):
                     start = int(b * rpb + 1) - 1  # (b*rpb + 1).cast(int), 0-based
-                    h = np.full(len(regular), U(42))
+                    h = np.full(len(regular), _U(42))
                     for j in range(start, start + int(rpb)):
-                        h = _chain_long(mat[:, j], h)
+                        # chained: each long hashed under the running seed
+                        h = _xxh64_long(mat[:, j], h)
                     res[:, b] = h.view(np.int64)
                 rows = res.tolist()
                 for k, i in enumerate(regular):
@@ -515,7 +500,6 @@ def minhash_dedup_pairs(
     # whole-stage codegen).  Signatures are always fully populated (the
     # signature kernel emits a value per slot), so the integer equality
     # count is exact.
-    import numpy as np
     from pyspark.sql.types import IntegerType
 
     @F.pandas_udf(IntegerType())
@@ -580,7 +564,6 @@ def score_pairs_jaccard(pairs: DataFrame, shingle_k: int = 5) -> DataFrame:
     text object so each document is shingled once per batch, not once
     per pair.
     """
-    import numpy as np
 
     def _shingle_hash_array(norm: str, base_fn) -> "np.ndarray":
         if len(norm) >= shingle_k:
@@ -730,8 +713,6 @@ def simhash64(text: str) -> int:
     fixture generation so both engines see identical fingerprints."""
     import hashlib
 
-    import numpy as np
-
     tokens = (text or "").lower().split()
     if not tokens:
         return 0
@@ -868,11 +849,7 @@ def embedding_neardup_exact(
     Correct at any n but quadratic; use :func:`embedding_neardup_lsh` at
     scale and assert its recall against this on a sample.
     """
-    from neo4j_graphrag_python_spark.operators.similarity import cosine_col
-
-    e = embeddings.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
+    e = _id_vectors(embeddings, id_col, vec_col)
     a, b = e.alias("a"), e.alias("b")
     pairs = a.join(b, F.col("a.id") < F.col("b.id")).select(
         F.col("a.id").alias("id_a"),
@@ -972,147 +949,54 @@ def embedding_neardup_ivf(
     dropping cells — unlike the band-bucket caps, a cell is a content
     cluster, so capping it would drop precisely the duplicates.
 
-    Plan shape mirrors the LSH path's vector-free discipline: one
-    widened projection computes the probe array (JVM HOFs over one
-    array-literal codebook), the explode carries ONLY (id, cell), vectors
-    join those rows for the per-cell GEMM below, and join back once per
-    side for the canonical rescore.  The codebook fit
+    Plan shape: the per-cell driver shared with ``knn_join_ivf``
+    (``similarity._ivf_cell_pairs``).  The probe explode carries ONLY
+    (id, cell) — the LSH path's vector-free discipline — and vectors
+    join those rows once for the per-cell GEMM.  Candidates are scored
+    per cell, never materialized as PAIR rows (measured 3× faster at
+    bench scale than a probe⋈primary candidate join with per-pair
+    interpreted cosine folds): each cell scores every member against its
+    residents — resident×resident and visitor×resident (visitor×visitor
+    pairs are NOT candidates: such a pair qualifies only through one
+    member's primary cell, where it is scored) — thresholded with a
+    margin INSIDE the kernel.  Only survivors (output-sized) reach a
+    shuffle; they are deduped (a pair can surface in ≤2 cells) and
+    rescored with the canonical fold-order :func:`cosine_col`, so the
+    output equals the candidate-join definition above (asserted by test
+    against a probe⋈primary reference).  The codebook fit
     (:func:`fit_kmeans_centroids`) is the one driver-side step —
     codebook-sized, seeded, shared with ``ann_topk_kmeans``.
 
     ``broadcast_rescore=True`` (default) broadcasts the (id, vector)
-    projections into the rescore joins: without the hint, Catalyst
-    sort-merges them, which means every CANDIDATE row is exchanged
-    carrying two full vectors — measured 10s of GB of shuffle spill at
-    60k×64 vectors with a 5·10⁷ candidate set, versus two 30 MB
-    broadcasts and a fully streaming rescore with it.  The hint is
-    right whenever the corpus's (id, vector) projection fits executor
-    memory (up to ~10⁷ vectors); beyond that pass
-    ``broadcast_rescore=False``.
-
-    Candidates are scored per cell, never materialized as PAIR rows
-    (measured 3× faster at bench scale than a probe⋈primary candidate
-    join with per-pair interpreted cosine folds): vectors are shipped to
-    their primary cell (residents) and ``nprobe−1`` probe cells (visitors),
-    and each cell group runs a tiled numpy GEMM over its members —
-    resident×resident and visitor×resident scores (visitor×visitor
-    pairs are NOT candidates: such a pair qualifies only through one
-    member's primary cell, where it is scored) — thresholded with a
-    margin INSIDE the kernel.  Only survivors (output-sized) reach
-    a shuffle; they are deduped (a pair can surface in ≤2 cells) and
-    rescored with the canonical fold-order :func:`cosine_col`, so the
-    output equals the candidate-join definition above (asserted by test
-    against a probe⋈primary reference).  Shuffle volume is nprobe·n
-    vector rows (linear), never the candidate pair count; per-task
-    memory is the largest cell × dim, bounded by the tile loop.
+    projections into the rescore joins (``similarity._rescore_pairs``
+    has the measurement); pass False when the corpus's projection does
+    not fit executor memory (beyond ~10⁷ vectors).
     """
-    from neo4j_graphrag_python_spark.operators.similarity import (
-        _centroid_topn,
-        cosine_col,
-        fit_kmeans_centroids,
-        sample_vectors,
-    )
-
-    if centroids is None:
-        sample = sample_vectors(embeddings, sample_n, id_col, vec_col)
-        if not sample:  # empty corpus → no pairs (don't fail the fit)
-            return embeddings.sparkSession.createDataFrame(
-                [], "id_a long, id_b long, cosine double"
-            )
-        centroids = fit_kmeans_centroids(
-            sample, num_centroids=num_centroids, seed=seed
-        )
-    v = F.col(vec_col).cast("array<double>")
-    # probes materialized before consumption: two consumers (primary cell
-    # + probe explode) would re-plan the centroid scoring per side, and
-    # the probe explode's inferred ``size(probes) > 0`` filter would be
-    # pushed below the widening exchange with the scoring inlined —
-    # running all num_centroids·dim dots again on the narrow scan side
-    assigned = widen_for_compute(embeddings).select(
-        F.col(id_col).alias("id"),
-        _centroid_topn(v, centroids, nprobe).alias("probes"),
-    ).localCheckpoint(eager=False)
-    base = embeddings.select(F.col(id_col).alias("id"), v.alias("v"))
-    cand = _ivf_cell_survivors(assigned, base, threshold)
-    va = base.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"))
-    vb = base.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"))
-    if broadcast_rescore:
-        va, vb = F.broadcast(va), F.broadcast(vb)
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a", "id_b", cosine_col(F.col("v_a"), F.col("v_b")).alias("cosine")
-        )
-        .where(F.col("cosine") >= threshold)
-    )
-
-
-def _ivf_cell_survivors(
-    assigned: DataFrame,
-    base: DataFrame,
-    threshold: float,
-    tile_rows: int = 4096,
-) -> DataFrame:
-    """Per-cell GEMM candidate survivors for :func:`embedding_neardup_ivf`.
-
-    One vector-carrying exchange (explode probes → repartition by cell:
-    nprobe·n rows, linear in the corpus), then ``applyInPandas`` per
-    cell: normalize members, tiled ``R @ M.T`` where R = resident rows
-    (primary == cell) and M = all members, keep scores ≥ threshold−1e-6,
-    drop visitor×visitor implicitly (rows of the GEMM are residents
-    only) and self/duplicate-orientation pairs by (id_a < id_b) OR
-    visitor×resident one-sidedness.  Emitted pairs are output-sized —
-    the candidate set never exists as rows anywhere."""
-    import numpy as np
-
-    member = (
-        assigned.select(
-            "id",
-            F.explode("probes").alias("cell"),
-            F.element_at("probes", 1).alias("prim"),
-        )
-        .join(base, "id")
-        .select("cell", "id", "v", (F.col("prim") == F.col("cell")).alias("resident"))
-    )
     # margin must cover BOTH float fold-order drift AND cosine_col's
     # round-to-6-decimals: a pair at raw cosine θ−4e-7 rounds UP to θ and
     # passes the exact rescore, so the prune may not drop it (measured: a
     # 1e-9 margin lost 5 boundary pairs of 370k at sf3)
     thr = float(threshold) - 1e-6
 
-    def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        res = pdf["resident"].to_numpy(dtype=bool)
-        mat = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-        nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-        mat = mat / np.where(nrm == 0, 1.0, nrm)
-        r_idx = np.nonzero(res)[0]
-        out_a, out_b = [], []
-        for t0 in range(0, len(r_idx), tile_rows):
-            rows = r_idx[t0 : t0 + tile_rows]
-            scores = mat[rows] @ mat.T
-            ii, jj = np.nonzero(scores >= thr)
-            gi = rows[ii]
-            # resident×resident counted once (gi < jj); visitor rows
-            # (jj not resident) pair with every resident
-            keep = np.where(res[jj], gi < jj, True)
-            # a visitor×resident pair also excludes self-pairing (a
-            # vector is never its own visitor, so gi != jj holds there)
-            gi, gj = gi[keep], jj[keep]
-            out_a.append(np.minimum(ids[gi], ids[gj]))
-            out_b.append(np.maximum(ids[gi], ids[gj]))
-        if not out_a:
-            return pd.DataFrame({"id_a": [], "id_b": []}).astype("int64")
-        return pd.DataFrame(
-            {"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)}
-        )
+    def above(scores, qids, rids, qres):
+        ii, jj = np.nonzero(scores >= thr)
+        x, y = qids[ii], rids[jj]
+        # resident×resident surfaces in both orientations (and as the
+        # self-pair): keep x < y; a visitor query pairs with every
+        # resident (it is never its own visitor)
+        keep = ~qres[ii] | (x < y)
+        x, y = x[keep], y[keep]
+        return np.minimum(x, y), np.maximum(x, y)
 
-    return (
-        member.groupBy("cell")
-        .applyInPandas(per_cell, "id_a long, id_b long")
-        .dropDuplicates(["id_a", "id_b"])
+    centroids = _ivf_centroids(
+        embeddings, centroids, num_centroids, sample_n, seed, id_col, vec_col
     )
+    cand = _ivf_cell_pairs(
+        embeddings, centroids, nprobe, above, ("id_a", "id_b"), id_col, vec_col
+    )
+    return _rescore_pairs(
+        cand, embeddings, ("id_a", "id_b"), id_col, vec_col, broadcast_rescore
+    ).where(F.col("cosine") >= threshold)
 
 
 def embedding_neardup_blocked_exact(
@@ -1137,11 +1021,11 @@ def embedding_neardup_blocked_exact(
     1.8e9 interpreted row comparisons and the LSH plan OOMs on its own
     candidate dedup.
 
-    Plan: the L2-normalized matrix is ONE Spark broadcast (n·dim
-    float64 — 30 MB at 60k×64); the work unit is a BLOCK PAIR (i ≤ j)
-    of ``block_rows``-row tiles, distributed as a tiny DataFrame and
-    expanded by ``mapInPandas`` running ``A @ B.T`` per tile pair.
-    The GEMM only PRUNES (threshold − 1e-6 margin); survivors are
+    Plan: the broadcast tile-pair GEMM shared with ``knn_join``
+    (``similarity._tile_pair_gemm``): the L2-normalized matrix is ONE
+    Spark broadcast (n·dim float64 — 30 MB at 60k×64) and the work unit
+    is a BLOCK PAIR (i ≤ j) of ``block_rows``-row tiles.  The GEMM only
+    PRUNES (threshold − 1e-6 margin); survivors are
     join-back rescored with the canonical fold-order
     :func:`cosine_col`, so the output is bit-identical to the
     all-pairs oracle — no float-reduction-order risk.  Ids are
@@ -1155,71 +1039,24 @@ def embedding_neardup_blocked_exact(
     are the two rungs of the documented tiering, dispatched by
     :func:`embedding_neardup` when the LSH noise model floods.
     """
-    import numpy as np
-
-    from neo4j_graphrag_python_spark.operators.similarity import cosine_col
-
-    pdf = (
-        embeddings.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .orderBy("id")
-        .toPandas()  # Arrow path: n·dim floats, no per-row Python objects
-    )
-    if pdf.empty:
-        return embeddings.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, cosine double"
-        )
-    ids = pdf["id"].to_numpy(dtype=np.int64)
-    mat = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-    nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-    mat = mat / np.where(nrm == 0, 1.0, nrm)
-    spark = embeddings.sparkSession
-    bc = spark.sparkContext.broadcast((ids, mat))
-
-    n = len(ids)
-    nblocks = (n + block_rows - 1) // block_rows
-    tile_pairs = [(i, j) for i in range(nblocks) for j in range(i, nblocks)]
-    tiles = spark.createDataFrame(tile_pairs, "bi int, bj int").repartition(
-        min(len(tile_pairs), 4 * (spark.sparkContext.defaultParallelism or 8))
-    )
-    # margin must cover BOTH float fold-order drift AND cosine_col's
-    # round-to-6-decimals: a pair at raw cosine θ−4e-7 rounds UP to θ and
-    # passes the exact rescore, so the prune may not drop it (measured: a
-    # 1e-9 margin lost 5 boundary pairs of 370k at sf3)
+    # the same rounding margin as embedding_neardup_ivf's prune
     thr = float(threshold) - 1e-6
 
-    def _gemm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bids, bmat = bc.value
-        for pdf in batches:
-            for bi, bj in zip(pdf["bi"], pdf["bj"]):
-                a0, a1 = bi * block_rows, min((bi + 1) * block_rows, len(bids))
-                b0, b1 = bj * block_rows, min((bj + 1) * block_rows, len(bids))
-                scores = bmat[a0:a1] @ bmat[b0:b1].T
-                ii, jj = np.nonzero(scores >= thr)
-                if bi == bj:
-                    keep = ii < jj
-                    ii, jj = ii[keep], jj[keep]
-                yield pd.DataFrame(
-                    {"id_a": bids[a0 + ii], "id_b": bids[b0 + jj]}
-                )
+    def above(scores, rows, cols, diag):
+        ii, jj = np.nonzero(scores >= thr)
+        if diag:
+            keep = ii < jj
+            ii, jj = ii[keep], jj[keep]
+        return rows[ii], cols[jj]
 
-    cand = tiles.mapInPandas(_gemm, "id_a long, id_b long")
-    v = F.col(vec_col).cast("array<double>")
-    base = embeddings.select(F.col(id_col).alias("id"), v.alias("v"))
+    cand = _tile_pair_gemm(
+        embeddings, block_rows, above, ("id_a", "id_b"), id_col, vec_col
+    )
     # survivors ≈ output size, but broadcasting the (id, vec) sides (the
     # same matrix the GEMM already broadcast) keeps the rescore streaming
     # — no survivor row is ever exchanged carrying vectors
-    va = F.broadcast(base.select(F.col("id").alias("id_a"), F.col("v").alias("v_a")))
-    vb = F.broadcast(base.select(F.col("id").alias("id_b"), F.col("v").alias("v_b")))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a", "id_b", cosine_col(F.col("v_a"), F.col("v_b")).alias("cosine")
-        )
-        .where(F.col("cosine") >= threshold)
+    return _rescore_pairs(cand, embeddings, ("id_a", "id_b"), id_col, vec_col).where(
+        F.col("cosine") >= threshold
     )
 
 
@@ -1353,8 +1190,6 @@ def embedding_neardup_lsh(
     import random
     import warnings
 
-    from neo4j_graphrag_python_spark.operators.similarity import cosine_col
-
     p_bit = 1.0 - math.acos(max(-1.0, min(1.0, threshold))) / math.pi
     if num_planes is None and num_tables is None:
         num_planes, num_tables = lsh_params_for(
@@ -1429,7 +1264,6 @@ def embedding_neardup_lsh(
     # Degenerate rows (null vector, length != dim, null/NaN elements)
     # produce bucket 0 in every table, exactly like the JVM expression
     # (null products poison the fold → every when() falls to 0).
-    import numpy as np
     from pyspark.sql.types import ArrayType, LongType
 
     n_planes_total = num_tables * num_planes
@@ -1499,16 +1333,8 @@ def embedding_neardup_lsh(
         .where(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    # fetch vectors once per side for the exact rescore (un-exploded frame)
-    v = F.col(vec_col).cast("array<double>")
-    base = embeddings.select(F.col(id_col).alias("id"), v.alias("v"))
-    va = base.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"))
-    vb = base.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a", "id_b", cosine_col(F.col("v_a"), F.col("v_b")).alias("cosine")
-        )
-        .where(F.col("cosine") >= threshold)
-    )
+    # fetch vectors once per side for the exact rescore (un-exploded
+    # frame); no broadcast hint, Catalyst picks the joins
+    return _rescore_pairs(
+        cand, embeddings, ("id_a", "id_b"), id_col, vec_col, broadcast=False
+    ).where(F.col("cosine") >= threshold)

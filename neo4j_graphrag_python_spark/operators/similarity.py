@@ -10,23 +10,88 @@ DataFrame operators, plus the scale paths a 100 TB corpus needs:
     hyperplane signs (LSH for cosine): probe only matching buckets, giving
     sub-linear candidate sets at the cost of recall; implemented with
     built-ins + one broadcast of the hyperplane matrix;
-  * batched multi-query search via a broadcast join of the query set.
+  * batched multi-query search via a broadcast join of the query set;
+  * k-means IVF, product quantization (PQ) and IVF-PQ indexes, whose
+    code assignment is one Arrow-batched numpy pass;
+  * k-NN joins in two tiers: a broadcast tile-pair GEMM and per-cell IVF
+    scoring.
+
+Each vector kernel is written once here and shared with the embedding
+near-dup operators in ``dedup.py``: the numpy unit-row normalizer, the
+PQ quantizer, the ``%.17e`` literal builder and fold-order dots, the
+candidate-pair rescore, the tile-pair GEMM driver and the IVF per-cell
+driver.
 """
 
 from __future__ import annotations
 
+import numbers
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
+def _fold_dot(a: Column, b: Column) -> Column:
+    """dot(a, b) of two array<double> columns as one left-to-right fold —
+    the summation order every JVM-side score here shares."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
+    )
+
+
 def cosine_col(a: Column, b: Column, round_to: int | None = 6) -> Column:
     """Cosine similarity of two array<double> columns, JVM-side."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
+    dot = _fold_dot(a, b)
     na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda s, x: s + x * x))
     nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda s, x: s + x * x))
     out = dot / (na * nb)
     return F.round(out, round_to) if round_to is not None else out
+
+
+def _double_literal(values) -> Column:
+    """A (nested) list of floats as ONE SQL array-literal expression.
+
+    Per-element ``F.lit`` is a py4j driver roundtrip each, and at
+    multi-table LSH sizes (L·m·dim ≈ 10⁵ literals) that burned MINUTES of
+    driver CPU just building the plan.  ``%.17e`` round-trips float64
+    exactly, and exponent-form literals parse as DOUBLE in Spark SQL
+    (plain decimals would parse as DECIMAL)."""
+
+    def sql(v) -> str:
+        if isinstance(v, numbers.Real):
+            return f"{float(v):.17e}"
+        return "array(" + ",".join(sql(x) for x in v) + ")"
+
+    return F.expr(sql(values))
+
+
+def _literal_dots(vec: Column, matrix: list[list[float]]) -> Column:
+    """Fold-order dot products of ``vec`` with every row of a literal
+    matrix (hyperplanes, centroids) → array<double>, JVM-side."""
+    return F.transform(_double_literal(matrix), lambda row: _fold_dot(vec, row))
+
+
+def _id_vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The (id, v array<double>) projection every vector operator reads."""
+    return df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+    )
+
+
+def _unit_rows(mat):
+    """Rows of a float64 numpy matrix scaled to unit L2 norm (zero rows
+    pass through) — the one normalizer of every numpy vector kernel."""
+    import numpy as np
+
+    nrm = np.linalg.norm(mat, axis=1, keepdims=True)
+    return mat / np.where(nrm == 0, 1.0, nrm)
+
+
+def _stack(vectors):
+    """An Arrow batch's array<double> column → (n, dim) float64 matrix."""
+    import numpy as np
+
+    return np.stack(vectors.to_numpy()).astype(np.float64)
 
 
 def topk_bruteforce(
@@ -50,26 +115,9 @@ def topk_bruteforce(
 
 
 def _hyperplane_signs(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign bits of <v, h_i> packed into a bigint bucket id.
-
-    The plane matrix is emitted as ONE SQL array-literal expression
-    (``F.expr``) instead of m×dim individual ``F.lit`` calls: every lit is
-    a py4j driver roundtrip, and at multi-table LSH sizes (L·m·dim ≈ 10⁵
-    literals) per-literal construction burned MINUTES of driver CPU just
-    building the plan.  ``%.17e`` round-trips float64 exactly, and
-    exponent-form literals parse as DOUBLE in Spark SQL (plain decimals
-    would parse as DECIMAL).
-    """
-    rows = ",".join(
-        "array(" + ",".join(f"{float(x):.17e}" for x in h) + ")" for h in planes
-    )
-    mat = F.expr(f"array({rows})")
-    dots = F.transform(
-        mat,
-        lambda h: F.aggregate(
-            F.zip_with(vec, h, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-        ),
-    )
+    """Sign bits of <v, h_i> packed into a bigint bucket id; the plane
+    matrix rides one :func:`_double_literal`."""
+    dots = _literal_dots(vec, planes)
     # 2^i via pow (shiftleft needs a literal bit count): exact in double
     # for i ≤ 52, and plane counts are capped at 32
     signed = F.transform(
@@ -223,9 +271,7 @@ def fit_kmeans_centroids(
         raise ValueError("cannot fit centroids on an empty sample")
     k = min(num_centroids, len(sample))
 
-    pts = np.asarray(sample, dtype=np.float64)
-    nrm = np.linalg.norm(pts, axis=1, keepdims=True)
-    pts = np.where(nrm > 0, pts / np.where(nrm == 0, 1.0, nrm), pts)
+    pts = _unit_rows(np.asarray(sample, dtype=np.float64))
     rng = random.Random(seed)
     centroids = pts[rng.sample(range(len(pts)), k)].copy()
     for _ in range(iters):
@@ -235,11 +281,7 @@ def fit_kmeans_centroids(
         sums = np.zeros_like(centroids)
         np.add.at(sums, assign, pts)
         nonempty = counts > 0
-        means = sums[nonempty] / counts[nonempty, None]
-        mnrm = np.linalg.norm(means, axis=1, keepdims=True)
-        centroids[nonempty] = np.where(
-            mnrm > 0, means / np.where(mnrm == 0, 1.0, mnrm), means
-        )
+        centroids[nonempty] = _unit_rows(sums[nonempty] / counts[nonempty, None])
     return [[float(x) for x in c] for c in centroids]
 
 
@@ -248,23 +290,10 @@ def _centroid_argmax(vec: Column, centroids: list[list[float]]) -> Column:
 
     Centroids are unit-norm, so argmax dot == argmax cosine (the |v|
     factor is constant across centroids).  The codebook rides ONE SQL
-    array literal (the %.17e lesson from _hyperplane_signs — per-element
-    F.lit is a py4j roundtrip each).  array_position returns the FIRST
-    position of the max — the same first-wins tie rule as the fitter and
-    the offline fixture."""
-    rows = ",".join(
-        "array(" + ",".join(f"{float(x):.17e}" for x in c) + ")"
-        for c in centroids
-    )
-    mat = F.expr(f"array({rows})")
-    dots = F.transform(
-        mat,
-        lambda c: F.aggregate(
-            F.zip_with(vec, c, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        ),
-    )
+    array literal (:func:`_double_literal`).  array_position returns the
+    FIRST position of the max — the same first-wins tie rule as the
+    fitter and the offline fixture."""
+    dots = _literal_dots(vec, centroids)
     return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
 
 
@@ -275,22 +304,9 @@ def _centroid_topn(
     ordered by (-dot, index) — the same first-wins tie rule as
     :func:`_centroid_argmax` / ``topk_ivf_kmeans``'s driver-side probe
     selection, so ``element_at(result, 1)`` IS the primary cell.  One
-    array-literal codebook (the %.17e lesson), one transform for the
-    dots, one bounded array_sort over k structs — no shuffle, no
-    Python."""
-    rows = ",".join(
-        "array(" + ",".join(f"{float(x):.17e}" for x in c) + ")"
-        for c in centroids
-    )
-    mat = F.expr(f"array({rows})")
-    dots = F.transform(
-        mat,
-        lambda c: F.aggregate(
-            F.zip_with(vec, c, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        ),
-    )
+    array-literal codebook, one transform for the dots, one bounded
+    array_sort over k structs — no shuffle, no Python."""
+    dots = _literal_dots(vec, centroids)
     idx = F.sequence(F.lit(0), F.lit(len(centroids) - 1))
     zipped = F.zip_with(
         dots, idx, lambda d, i: F.struct(d.alias("d"), i.alias("i"))
@@ -462,6 +478,217 @@ def hybrid_fusion(
     return fused.orderBy(F.desc("score"), "id").limit(k)
 
 
+def _rescore_pairs(
+    pairs: DataFrame,
+    embeddings: DataFrame,
+    cols: tuple[str, str],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    broadcast: bool = True,
+) -> DataFrame:
+    """Candidate id pairs (columns ``cols``) → (a, b, cosine): each
+    side's vector is joined once and scored with the canonical
+    fold-order :func:`cosine_col`, so a numpy prune upstream never
+    decides an output value.
+
+    ``broadcast`` hints both (id, vector) sides: without it Catalyst
+    sort-merges them, so every candidate row is exchanged carrying two
+    full vectors (measured 10s of GB of shuffle spill at 60k×64 with a
+    5·10⁷ candidate set, against two 30 MB broadcasts).  It is right
+    whenever the corpus's (id, vector) projection fits executor memory."""
+    a, b = cols
+    base = _id_vectors(embeddings, id_col, vec_col)
+    va = base.select(F.col("id").alias(a), F.col("v").alias("_va"))
+    vb = base.select(F.col("id").alias(b), F.col("v").alias("_vb"))
+    if broadcast:
+        va, vb = F.broadcast(va), F.broadcast(vb)
+    return (
+        pairs.join(va, a)
+        .join(vb, b)
+        .select(a, b, cosine_col(F.col("_va"), F.col("_vb")).alias("cosine"))
+    )
+
+
+def _within_topk(scores, row_ids, col_ids, k: int):
+    """(row id, col id) arrays of each score row's candidates within 1e-6
+    of its kth best finite score.
+
+    Every global top-k neighbor of a row lives in some tile, and within
+    that tile it outscores every non-top-k column, so the per-tile top-k
+    union ⊇ the global top-k.  The 1e-6 margin covers the final
+    6-decimal rounding: a candidate that ties the kth AFTER rounding may
+    trail it by <1e-6 raw.  ``isfinite``: when k spans the whole tile the
+    kth score IS a −inf self-pair, and −inf ≥ −inf−margin would emit it."""
+    import numpy as np
+
+    kk = min(k, scores.shape[1])
+    kth = np.partition(scores, scores.shape[1] - kk, axis=1)[
+        :, scores.shape[1] - kk
+    ]
+    ii, jj = np.nonzero((scores >= (kth[:, None] - 1e-6)) & np.isfinite(scores))
+    return row_ids[ii], col_ids[jj]
+
+
+def _rank_neighbors(
+    cand: DataFrame, embeddings: DataFrame, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, neighbor_id) candidates → each id's k best by (rounded cosine
+    desc, neighbor_id) on the fold-order :func:`cosine_col` values:
+    deterministic, and bit-equal to the windowed all-pairs SQL oracle
+    whenever the candidates hold the true neighbors."""
+    w = Window.partitionBy("id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        _rescore_pairs(cand, embeddings, ("id", "neighbor_id"), id_col, vec_col)
+        .withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= k)
+        .select("id", "neighbor_id", "cosine", "rnk")
+    )
+
+
+def _tile_pair_gemm(
+    embeddings: DataFrame,
+    block_rows: int,
+    select,
+    cols: tuple[str, str],
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Candidate id pairs from a distributed blocked GEMM — the broadcast
+    tier of :func:`knn_join` and ``embedding_neardup_blocked_exact``.
+
+    The id-sorted, unit-normalized matrix (n·dim float64, collected over
+    Arrow) rides ONE Spark broadcast; the work unit is a (i ≤ j) pair of
+    ``block_rows``-row tiles, distributed as a tiny DataFrame and
+    expanded by ``mapInPandas`` running ``A @ B.T`` once per pair.
+    ``select(scores, row_ids, col_ids, diag)`` turns one tile's scores
+    into (a, b) id arrays for the columns ``cols``; ``diag`` marks the
+    i == j tiles, which hold every pair twice plus the self-pairs.  An
+    empty corpus gives an empty frame."""
+    import numpy as np
+    import pandas as pd
+
+    a, b = cols
+    schema = f"{a} long, {b} long"
+    spark = embeddings.sparkSession
+    pdf = _id_vectors(embeddings, id_col, vec_col).orderBy("id").toPandas()
+    if pdf.empty:
+        return spark.createDataFrame([], schema)
+    ids = pdf["id"].to_numpy(dtype=np.int64)
+    bc = spark.sparkContext.broadcast((ids, _unit_rows(_stack(pdf["v"]))))
+    nblocks = (len(ids) + block_rows - 1) // block_rows
+    tile_pairs = [(i, j) for i in range(nblocks) for j in range(i, nblocks)]
+    tiles = spark.createDataFrame(tile_pairs, "bi int, bj int").repartition(
+        min(len(tile_pairs), 4 * (spark.sparkContext.defaultParallelism or 8))
+    )
+
+    def gemm(batches):
+        bids, bmat = bc.value
+        for part in batches:
+            for bi, bj in zip(part["bi"], part["bj"]):
+                r = slice(bi * block_rows, (bi + 1) * block_rows)
+                c = slice(bj * block_rows, (bj + 1) * block_rows)
+                x, y = select(bmat[r] @ bmat[c].T, bids[r], bids[c], bi == bj)
+                yield pd.DataFrame({a: x, b: y})
+
+    return tiles.mapInPandas(gemm, schema)
+
+
+def _ivf_centroids(
+    embeddings: DataFrame,
+    centroids: list[list[float]] | None,
+    num_centroids: int,
+    sample_n: int,
+    seed: int,
+    id_col: str,
+    vec_col: str,
+) -> list[list[float]] | None:
+    """The caller's k-means codebook, else one fitted on
+    :func:`sample_vectors`; None for an empty corpus (no pairs to find,
+    so :func:`_ivf_cell_pairs` returns an empty frame instead of failing
+    the fit)."""
+    if centroids is not None:
+        return centroids
+    sample = sample_vectors(embeddings, sample_n, id_col, vec_col)
+    if not sample:
+        return None
+    return fit_kmeans_centroids(sample, num_centroids=num_centroids, seed=seed)
+
+
+def _ivf_cell_pairs(
+    embeddings: DataFrame,
+    centroids: list[list[float]] | None,
+    nprobe: int,
+    select,
+    cols: tuple[str, str],
+    id_col: str,
+    vec_col: str,
+    tile_rows: int = 4096,
+) -> DataFrame:
+    """Candidate id pairs scored per k-means cell — the beyond-broadcast
+    tier of :func:`knn_join_ivf` and ``embedding_neardup_ivf``.
+
+    Every vector is a RESIDENT of its primary (nearest) cell and a
+    visitor of its other ``nprobe − 1`` probed cells.  One widened
+    projection computes the probe arrays (:func:`_centroid_topn`); the
+    explode carries only (id, cell, resident) and vectors join those
+    rows once, so the one vector-carrying exchange (group by cell) is
+    nprobe·n rows — linear in the corpus, never the pair count.  Per
+    cell, ``applyInPandas`` unit-normalizes the members and runs a tiled
+    ``Q @ R.T`` of every member (Q, ``tile_rows`` at a time) against the
+    residents (R); ``select(scores, q_ids, r_ids, q_resident)`` turns one
+    tile into (a, b) id arrays for the columns ``cols``.  Pairs found in
+    two cells are deduped.  ``centroids=None`` (an empty corpus, see
+    :func:`_ivf_centroids`) gives an empty frame."""
+    import numpy as np
+    import pandas as pd
+
+    from neo4j_graphrag_python_spark.operators.dedup import widen_for_compute
+
+    a, b = cols
+    schema = f"{a} long, {b} long"
+    if centroids is None:
+        return embeddings.sparkSession.createDataFrame([], schema)
+    v = F.col(vec_col).cast("array<double>")
+    # probes materialized before consumption: two consumers (primary cell
+    # + probe explode) would re-plan the centroid scoring per side, and
+    # the probe explode's inferred ``size(probes) > 0`` filter would be
+    # pushed below the widening exchange with the scoring inlined —
+    # running all num_centroids·dim dots again on the narrow scan side
+    assigned = widen_for_compute(embeddings).select(
+        F.col(id_col).alias("id"),
+        _centroid_topn(v, centroids, nprobe).alias("probes"),
+    ).localCheckpoint(eager=False)
+    member = (
+        assigned.select(
+            "id",
+            F.explode("probes").alias("cell"),
+            F.element_at("probes", 1).alias("prim"),
+        )
+        .join(_id_vectors(embeddings, id_col, vec_col), "id")
+        .select("cell", "id", "v", (F.col("prim") == F.col("cell")).alias("resident"))
+    )
+
+    def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = pdf["id"].to_numpy(dtype=np.int64)
+        res = pdf["resident"].to_numpy(dtype=bool)
+        mat = _unit_rows(_stack(pdf["v"]))
+        xs, ys = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+        if res.any():
+            rmat, rids = mat[res], ids[res]
+            for t0 in range(0, len(ids), tile_rows):
+                q = slice(t0, t0 + tile_rows)
+                x, y = select(mat[q] @ rmat.T, ids[q], rids, res[q])
+                xs.append(x)
+                ys.append(y)
+        return pd.DataFrame({a: np.concatenate(xs), b: np.concatenate(ys)})
+
+    return (
+        member.groupBy("cell")
+        .applyInPandas(per_cell, schema)
+        .dropDuplicates([a, b])
+    )
+
+
 def knn_join(
     embeddings: DataFrame,
     k: int = 5,
@@ -475,112 +702,34 @@ def knn_join(
     (hard-negative mining, cluster seeding, near-dup triage all consume
     all-rows neighborhoods, not single queries).
 
-    Same tiling as ``embedding_neardup_blocked_exact``: the L2-normalized
-    matrix rides ONE broadcast; work units are (i ≤ j) block-row tile
-    pairs expanded by ``mapInPandas``, each computing ``A @ B.T`` once
-    and emitting BOTH sides' per-row tile-local candidates.  Correctness
-    of the prune: every global top-k neighbor of a row lives in some
-    tile, and within that tile it outscores every non-top-k column, so
-    it is inside that tile's per-row top-k — per-tile top-k union ⊇
-    global top-k.  The kernel keeps everything within 1e-6 of the
-    tile-local kth score (covers the final 6-decimal rounding: a
-    candidate that ties the kth AFTER rounding may trail it by <1e-6
-    raw), so the rounded global ranking is computed over a complete
-    candidate set.  Candidates are ≈ k·(n/block_rows) per row — linear
-    in n with a tiny constant — then one window per id ranks by
-    (rounded cosine desc, neighbor_id) on the canonical fold-order
-    :func:`cosine_col` values, making the output deterministic and
+    Candidates come from the broadcast tile-pair GEMM
+    (:func:`_tile_pair_gemm`, shared with
+    ``embedding_neardup_blocked_exact``): each tile computes ``A @ B.T``
+    once and emits BOTH sides' per-row tile-local candidates
+    (:func:`_within_topk`).  Candidates are ≈ k·(n/block_rows) per row —
+    linear in n with a tiny constant — then one window per id ranks them
+    (:func:`_rank_neighbors`), making the output deterministic and
     bit-equal to the windowed all-pairs SQL oracle.
 
     Scale notes: broadcast tier (n·dim ≤ ~5·10⁷) like blocked-exact;
-    beyond it, block by IVF cell first and run this per cell — the same
+    beyond it, :func:`knn_join_ivf` blocks by IVF cell — the same
     two-rung tiering as ``embedding_neardup``.  Rows with fewer than k
     other vectors return what exists (rank ≤ available neighbors).
     """
     import numpy as np
-    import pandas as pd
 
-    pdf = (
-        embeddings.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .orderBy("id")
-        .toPandas()
-    )
-    spark = embeddings.sparkSession
-    if pdf.empty:
-        return spark.createDataFrame(
-            [], "id long, neighbor_id long, cosine double, rnk int"
-        )
-    ids = pdf["id"].to_numpy(dtype=np.int64)
-    mat = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-    nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-    mat = mat / np.where(nrm == 0, 1.0, nrm)
-    bc = spark.sparkContext.broadcast((ids, mat))
+    def nearest(scores, rows, cols, diag):
+        if diag:
+            np.fill_diagonal(scores, -np.inf)
+            return _within_topk(scores, rows, cols, k)
+        x1, y1 = _within_topk(scores, rows, cols, k)
+        x2, y2 = _within_topk(scores.T, cols, rows, k)
+        return np.concatenate([x1, x2]), np.concatenate([y1, y2])
 
-    n = len(ids)
-    nblocks = (n + block_rows - 1) // block_rows
-    tile_pairs = [(i, j) for i in range(nblocks) for j in range(i, nblocks)]
-    tiles = spark.createDataFrame(tile_pairs, "bi int, bj int").repartition(
-        min(len(tile_pairs), 4 * (spark.sparkContext.defaultParallelism or 8))
-    )
-
-    def _tile_topk(scores, row_ids, col_ids):
-        """Per-row candidates within 1e-6 of the tile-local kth score."""
-        kk = min(k, scores.shape[1])
-        kth = np.partition(scores, scores.shape[1] - kk, axis=1)[
-            :, scores.shape[1] - kk
-        ]
-        # isfinite: when kk spans the whole tile the kth score IS the
-        # −inf self-diagonal, and −inf ≥ −inf−margin would emit the
-        # self-pair
-        ii, jj = np.nonzero(
-            (scores >= (kth[:, None] - 1e-6)) & np.isfinite(scores)
-        )
-        return pd.DataFrame(
-            {"id": row_ids[ii], "neighbor_id": col_ids[jj]}
-        )
-
-    def _gemm(batches):
-        bids, bmat = bc.value
-        for pdfb in batches:
-            for bi, bj in zip(pdfb["bi"], pdfb["bj"]):
-                a0, a1 = bi * block_rows, min((bi + 1) * block_rows, len(bids))
-                b0, b1 = bj * block_rows, min((bj + 1) * block_rows, len(bids))
-                scores = bmat[a0:a1] @ bmat[b0:b1].T
-                if bi == bj:
-                    np.fill_diagonal(scores, -np.inf)
-                yield _tile_topk(scores, bids[a0:a1], bids[b0:b1])
-                if bi != bj:
-                    yield _tile_topk(
-                        scores.T, bids[b0:b1], bids[a0:a1]
-                    )
-
-    cand = tiles.mapInPandas(
-        _gemm, "id long, neighbor_id long"
+    cand = _tile_pair_gemm(
+        embeddings, block_rows, nearest, ("id", "neighbor_id"), id_col, vec_col
     ).dropDuplicates(["id", "neighbor_id"])
-    v = F.col(vec_col).cast("array<double>")
-    base = embeddings.select(F.col(id_col).alias("_bid"), v.alias("_bv"))
-    va = F.broadcast(base.withColumnsRenamed({"_bid": "id", "_bv": "v_a"}))
-    vb = F.broadcast(
-        base.withColumnsRenamed({"_bid": "neighbor_id", "_bv": "v_b"})
-    )
-    scored = (
-        cand.join(va, "id")
-        .join(vb, "neighbor_id")
-        .select(
-            "id",
-            "neighbor_id",
-            cosine_col(F.col("v_a"), F.col("v_b")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("id", "neighbor_id", "cosine", "rnk")
-    )
+    return _rank_neighbors(cand, embeddings, k, id_col, vec_col)
 
 
 def knn_join_ivf(
@@ -597,103 +746,33 @@ def knn_join_ivf(
 ) -> DataFrame:
     """Approximate k-NN join beyond the broadcast tier: each vector's
     candidate pool is the RESIDENTS of its ``nprobe`` nearest k-means
-    cells (standard IVF search semantics, batched).  One linear
-    vector-carrying exchange (explode probes → group by cell), then a
-    per-cell ``applyInPandas`` tiled GEMM scores every prober of the
-    cell against the cell's residents, keeping per-query tile-local
-    top-k with the 1e-6 rounding margin; global ranking reuses
-    :func:`knn_join`'s windowed rounded ordering, so at equal candidate
-    sets the output is bit-equal to the exact join.  Recall is
+    cells (standard IVF search semantics, batched).  The per-cell driver
+    (:func:`_ivf_cell_pairs`, shared with ``embedding_neardup_ivf``)
+    scores every prober of a cell against the cell's residents, keeping
+    per-query tile-local top-k with the 1e-6 rounding margin; global
+    ranking is :func:`knn_join`'s windowed rounded ordering, so at equal
+    candidate sets the output is bit-equal to the exact join.  Recall is
     data-dependent (clustered corpora: high at small nprobe; diffuse:
     raise nprobe) and asserted against :func:`knn_join` in tests.
     Candidates ≈ nprobe·(n/num_centroids) per vector — independent of
     corpus size at fixed cell occupancy, the property that makes this
     the 10⁸⁺-vector rung where the exact join's broadcast is
-    impossible."""
+    impossible.  An empty corpus gives an empty frame."""
     import numpy as np
-    import pandas as pd
 
-    from neo4j_graphrag_python_spark.operators.dedup import widen_for_compute
+    def nearest(scores, qids, rids, qres):
+        # self-exclusion: a resident query sees itself in the pool
+        scores = np.where(qids[:, None] == rids[None, :], -np.inf, scores)
+        return _within_topk(scores, qids, rids, k)
 
-    if centroids is None:
-        sample = sample_vectors(embeddings, sample_n, id_col, vec_col)
-        if not sample:
-            return embeddings.sparkSession.createDataFrame(
-                [], "id long, neighbor_id long, cosine double, rnk int"
-            )
-        centroids = fit_kmeans_centroids(
-            sample, num_centroids=num_centroids, seed=seed
-        )
-    v = F.col(vec_col).cast("array<double>")
-    assigned = widen_for_compute(embeddings).select(
-        F.col(id_col).alias("id"),
-        v.alias("v"),
-        _centroid_topn(v, centroids, nprobe).alias("probes"),
+    centroids = _ivf_centroids(
+        embeddings, centroids, num_centroids, sample_n, seed, id_col, vec_col
     )
-    member = assigned.select(
-        "id",
-        "v",
-        F.explode("probes").alias("cell"),
-        F.element_at("probes", 1).alias("prim"),
-    ).select(
-        "cell", "id", "v", (F.col("prim") == F.col("cell")).alias("resident")
+    cand = _ivf_cell_pairs(
+        embeddings, centroids, nprobe, nearest, ("id", "neighbor_id"),
+        id_col, vec_col, tile_rows,
     )
-
-    def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        res = pdf["resident"].to_numpy(dtype=bool)
-        mat = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-        nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-        mat = mat / np.where(nrm == 0, 1.0, nrm)
-        r_idx = np.nonzero(res)[0]
-        if len(r_idx) == 0:
-            return pd.DataFrame({"id": [], "neighbor_id": []}).astype("int64")
-        rmat, rids = mat[r_idx], ids[r_idx]
-        out = []
-        for t0 in range(0, len(ids), tile_rows):
-            q = slice(t0, min(t0 + tile_rows, len(ids)))
-            scores = mat[q] @ rmat.T
-            # self-exclusion: a resident query sees itself in the pool
-            qi = ids[q]
-            self_mask = qi[:, None] == rids[None, :]
-            scores = np.where(self_mask, -np.inf, scores)
-            kk = min(k, scores.shape[1])
-            kth = np.partition(scores, scores.shape[1] - kk, axis=1)[
-                :, scores.shape[1] - kk
-            ]
-            ii, jj = np.nonzero(
-                (scores >= (kth[:, None] - 1e-6)) & np.isfinite(scores)
-            )
-            out.append(
-                pd.DataFrame({"id": qi[ii], "neighbor_id": rids[jj]})
-            )
-        return pd.concat(out, ignore_index=True)
-
-    cand = (
-        member.groupBy("cell")
-        .applyInPandas(per_cell, "id long, neighbor_id long")
-        .dropDuplicates(["id", "neighbor_id"])
-    )
-    base = embeddings.select(F.col(id_col).alias("_bid"), v.alias("_bv"))
-    va = F.broadcast(base.withColumnsRenamed({"_bid": "id", "_bv": "v_a"}))
-    vb = F.broadcast(
-        base.withColumnsRenamed({"_bid": "neighbor_id", "_bv": "v_b"})
-    )
-    scored = (
-        cand.join(va, "id")
-        .join(vb, "neighbor_id")
-        .select(
-            "id",
-            "neighbor_id",
-            cosine_col(F.col("v_a"), F.col("v_b")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("id", "neighbor_id", "cosine", "rnk")
-    )
+    return _rank_neighbors(cand, embeddings, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -722,9 +801,9 @@ def fit_pq_codebooks(
     seeded ``random.Random(seed + s)`` init per subspace, fixed iteration
     count, first-wins argmax assignment, empty cells keep their previous
     centroid.  The assignment criterion is ``argmax(dot(x_sub, c) −
-    ½·|c|²)`` — algebraically argmin L2 — the SAME adjusted-dot form the
-    Spark-side :func:`assign_pq_codes` evaluates, so fit and assignment
-    share one tie rule.  numpy-vectorized; driver-side on a bounded
+    ½·|c|²)`` — algebraically argmin L2 — the SAME adjusted-dot form
+    :func:`_pq_quantizer` evaluates, so fit and assignment share one tie
+    rule.  numpy-vectorized; driver-side on a bounded
     sample (the FAISS-style train-on-subsample posture of
     :func:`sample_vectors`).
 
@@ -746,8 +825,7 @@ def fit_pq_codebooks(
 
     pts = np.asarray(sample, dtype=np.float64)
     if normalize:
-        nrm = np.linalg.norm(pts, axis=1, keepdims=True)
-        pts = np.where(nrm > 0, pts / np.where(nrm == 0, 1.0, nrm), pts)
+        pts = _unit_rows(pts)
 
     books: list[list[list[float]]] = []
     for s in range(m):
@@ -767,18 +845,27 @@ def fit_pq_codebooks(
     return books
 
 
-def _unit_norm_col(vec: Column) -> Column:
-    """Unit-normalize an array<double> column (zero vectors pass through)."""
-    n = F.sqrt(F.aggregate(vec, F.lit(0.0), lambda s, x: s + x * x))
-    return F.when(n > 0, F.transform(vec, lambda x: x / n)).otherwise(vec)
+def _pq_quantizer(codebooks: list[list[list[float]]]):
+    """Returns ``codes(pts) -> int32 (n, m)``: per subspace, the
+    first-wins ``argmax(dot − ½|c|²)`` over its codebook (the fitter's
+    exact rule) as one (rows × centroids) GEMM — the one PQ quantizer of
+    :func:`assign_pq_codes` and :func:`build_ivfpq_index`."""
+    import numpy as np
 
+    sub = len(codebooks[0][0])
+    mats = [np.asarray(b, dtype=np.float64) for b in codebooks]
+    halves = [0.5 * np.sum(c * c, axis=1) for c in mats]
 
-def _codebook_literal(book: list[list[float]]) -> Column:
-    """One codebook as ONE SQL array literal (the %.17e py4j lesson)."""
-    rows = ",".join(
-        "array(" + ",".join(f"{float(x):.17e}" for x in c) + ")" for c in book
-    )
-    return F.expr(f"array({rows})")
+    def codes(pts):
+        return np.stack(
+            [
+                np.argmax(pts[:, s * sub : (s + 1) * sub] @ c.T - h, axis=1)
+                for s, (c, h) in enumerate(zip(mats, halves))
+            ],
+            axis=1,
+        ).astype("int32")
+
+    return codes
 
 
 def assign_pq_codes(
@@ -786,118 +873,33 @@ def assign_pq_codes(
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    engine: str = "pandas",
-    normalize: bool = True,
-    carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Quantize every vector → (id, codes array<int>, one code per
-    subspace).  No shuffle either way; the criterion is first-wins
-    ``argmax(dot − ½|c|²)`` (the fitter's exact rule) in both engines.
+    subspace), with no shuffle: Arrow-batched numpy unit-normalizes each
+    batch and runs :func:`_pq_quantizer`.
 
-    ``engine="pandas"`` (default): Arrow-batched numpy — one (batch ×
-    centroids) GEMM per subspace.  This is the scale path: the
-    equivalent built-in expression is a tree of higher-order functions
-    (transform/aggregate/zip_with), which Spark evaluates INTERPRETED
-    (HOFs are excluded from whole-stage codegen) — measured 186 s for
-    60k×64 at (m=16, k=16) vs ~2 s for the numpy GEMM.  The 10-100×
-    pandas-UDF-over-interpreted-expression rule applies exactly here
-    because the per-row work is m·k·subdim flops.
-
-    ``engine="sql"``: the pure-JVM expression path — array-literal
-    codebooks, fold-order dots — kept as the reference semantics the
-    unit tests replicate bit-for-bit.  The engines agree everywhere
-    except exact floating ties between centroids (measure-zero on real
-    data; asserted equal on random corpora in tests).
+    The per-row work is m·k·subdim flops, which is why this is a numpy
+    kernel: the equivalent built-in expression is a tree of higher-order
+    functions (transform/aggregate/zip_with), which Spark evaluates
+    INTERPRETED (HOFs are excluded from whole-stage codegen) — measured
+    186 s for 60k×64 at (m=16, k=16) vs ~2 s for the numpy GEMM.
 
     Store the result columnar and the ADC scan needs ~m·4 bytes per
-    vector instead of dim·4.
+    vector instead of dim·4."""
+    import pandas as pd
 
-    ``normalize=False`` quantizes the RAW input vectors (the IVF-PQ
-    residual path — residuals must not be re-normalized).  ``carry_cols``
-    names extra input columns to pass through unchanged (e.g. the coarse
-    ``bucket``), so composition doesn't need a join back."""
     from neo4j_graphrag_python_spark.operators.dedup import widen_for_compute
 
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    carry = list(carry_cols)
+    quantize = _pq_quantizer(codebooks)
 
-    if engine == "pandas":
-        import numpy as np
-        import pandas as pd
+    def codes(batches):
+        for pdf in batches:
+            if len(pdf):
+                pts = _unit_rows(_stack(pdf["v"]))
+                yield pd.DataFrame({"id": pdf["id"], "codes": list(quantize(pts))})
 
-        mats = [np.asarray(b, dtype=np.float64) for b in codebooks]
-        halves = [0.5 * np.sum(c * c, axis=1) for c in mats]
-
-        def quantize(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                pts = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["v"]]
-                )
-                if normalize:
-                    nrm = np.linalg.norm(pts, axis=1, keepdims=True)
-                    pts = np.where(
-                        nrm > 0, pts / np.where(nrm == 0, 1, nrm), pts
-                    )
-                cols = []
-                for s in range(m):
-                    block = pts[:, s * sub : (s + 1) * sub]
-                    cols.append(
-                        np.argmax(block @ mats[s].T - halves[s], axis=1)
-                    )
-                codes = np.stack(cols, axis=1).astype("int32")
-                out = {"id": pdf["id"], "codes": list(codes)}
-                for c in carry:
-                    out[c] = pdf[c]
-                yield pd.DataFrame(out)
-
-        narrow = widen_for_compute(embeddings).select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-            *[F.col(c) for c in carry],
-        )
-        carry_schema = "".join(
-            f", {f.name} {f.dataType.simpleString()}"
-            for f in narrow.schema.fields
-            if f.name in carry
-        )
-        return narrow.mapInPandas(
-            quantize, f"id long, codes array<int>{carry_schema}"
-        )
-
-    if engine != "sql":
-        raise ValueError(f"unknown engine: {engine!r}")
-    raw = F.col(vec_col).cast("array<double>")
-    vn = _unit_norm_col(raw) if normalize else raw
-
-    def code_for(s: int, v: Column) -> Column:
-        mat = _codebook_literal(codebooks[s])
-        half = F.expr(
-            "array("
-            + ",".join(
-                f"{0.5 * sum(float(x) * float(x) for x in c):.17e}"
-                for c in codebooks[s]
-            )
-            + ")"
-        )
-        block = F.slice(v, s * sub + 1, sub)
-        dots = F.transform(
-            mat,
-            lambda c: F.aggregate(
-                F.zip_with(block, c, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-        adj = F.zip_with(dots, half, lambda d, h: d - h)
-        return (F.array_position(adj, F.array_max(adj)) - 1).cast("int")
-
-    return widen_for_compute(embeddings).select(
-        F.col(id_col).alias("id"),
-        F.array(*[code_for(s, vn) for s in range(m)]).alias("codes"),
-        *[F.col(c) for c in carry],
+    return _id_vectors(widen_for_compute(embeddings), id_col, vec_col).mapInPandas(
+        codes, "id long, codes array<int>"
     )
 
 
@@ -910,7 +912,6 @@ def build_pq_index(
     codebooks: list[list[list[float]]] | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    engine: str = "pandas",
 ):
     """Fit (or accept) PQ codebooks and quantize the corpus.
     Returns (codes_df(id, codes), codebooks)."""
@@ -922,7 +923,7 @@ def build_pq_index(
             seed=seed,
         )
     return (
-        assign_pq_codes(embeddings, codebooks, id_col, vec_col, engine),
+        assign_pq_codes(embeddings, codebooks, id_col, vec_col),
         codebooks,
     )
 
@@ -987,30 +988,15 @@ def _adc_estimate(
         ]
         for s in range(m)
     ]
-    lut_lit = F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{x:.17e}" for x in row) + ")" for row in lut
-        )
-        + ")"
-    )
     return F.aggregate(
         F.zip_with(
-            lut_lit,
+            _double_literal(lut),
             F.col("codes"),
             lambda row, c: F.element_at(row, c + 1),
         ),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-
-
-def _centroid_matrix_literal(centroids: list[list[float]]) -> Column:
-    rows = ",".join(
-        "array(" + ",".join(f"{float(x):.17e}" for x in c) + ")"
-        for c in centroids
-    )
-    return F.expr(f"array({rows})")
 
 
 def build_ivfpq_index(
@@ -1024,7 +1010,6 @@ def build_ivfpq_index(
     codebooks: list[list[list[float]]] | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    engine: str = "pandas",
 ):
     """IVF-PQ (Jégou et al. 2011 §IV): coarse k-means cells + product
     quantization of the RESIDUAL (v_unit − cell_centroid) — the true
@@ -1038,19 +1023,21 @@ def build_ivfpq_index(
     dot(q, c_cell) + dot(q, residual)``, the first term exact (driver-
     side per cell), only the second quantized.
 
-    Plan shape: the whole build is ONE pass with no shuffle.  The default
-    ``engine="pandas"`` does normalize → coarse argmax → residual → codes
-    inside a single Arrow-batched numpy stage (two GEMMs per batch) —
-    measured at 60k×64/64 cells: the JVM-HOF composition took 820 s
-    (interpreted fold-dots against the cell codebook, the same
-    excluded-from-codegen trap as flat PQ's 30×), the fused numpy pass
-    seconds.  ``engine="sql"`` keeps the pure-JVM fold-order composition
-    as the reference semantics (engine equality asserted in tests; the
-    two can differ only on exact floating ties between cells/codewords,
-    measure-zero on real data).  Write partitioned by ``bucket``
-    (:func:`write_ann_index`) and probes read only probed cells'
-    (id, codes) — ~m·4 B/row of only nprobe/k of the corpus.
+    Plan shape: the whole build is ONE pass with no shuffle: normalize →
+    coarse argmax → residual → :func:`_pq_quantizer` inside a single
+    Arrow-batched numpy stage (two GEMMs per batch).  Measured at
+    60k×64/64 cells, a JVM higher-order-function composition took 820 s
+    (interpreted fold-dots against the cell codebook, excluded from
+    codegen) against seconds for the fused numpy pass.  Write
+    partitioned by ``bucket`` (:func:`write_ann_index`) and probes read
+    only probed cells' (id, codes) — ~m·4 B/row of only nprobe/k of the
+    corpus.  An empty corpus raises ``ValueError`` (nothing to fit).
     """
+    import numpy as np
+    import pandas as pd
+
+    from neo4j_graphrag_python_spark.operators.dedup import widen_for_compute
+
     if centroids is None or codebooks is None:
         sample = sample_vectors(embeddings, sample_n, id_col, vec_col)
         if centroids is None:
@@ -1058,91 +1045,35 @@ def build_ivfpq_index(
                 sample, num_centroids=num_centroids, seed=seed
             )
         if codebooks is None:
-            import numpy as np
-
-            pts = np.asarray(sample, dtype=np.float64)
-            nrm = np.linalg.norm(pts, axis=1, keepdims=True)
-            pts = np.where(nrm > 0, pts / np.where(nrm == 0, 1.0, nrm), pts)
+            pts = _unit_rows(np.asarray(sample, dtype=np.float64))
             cmat = np.asarray(centroids, dtype=np.float64)
             res = pts - cmat[np.argmax(pts @ cmat.T, axis=1)]
             codebooks = fit_pq_codebooks(
-                [[float(x) for x in r] for r in res],
+                res.tolist(),
                 m=m,
                 num_centroids=pq_centroids,
                 seed=seed,
                 normalize=False,
             )
 
-    if engine == "pandas":
-        import numpy as np
-        import pandas as pd
+    cmat = np.asarray(centroids, dtype=np.float64)
+    quantize = _pq_quantizer(codebooks)
 
-        from neo4j_graphrag_python_spark.operators.dedup import (
-            widen_for_compute,
-        )
-
-        cmat = np.asarray(centroids, dtype=np.float64)
-        m_ = len(codebooks)
-        sub = len(codebooks[0][0])
-        mats = [np.asarray(b, dtype=np.float64) for b in codebooks]
-        halves = [0.5 * np.sum(c * c, axis=1) for c in mats]
-
-        def fused(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                pts = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["v"]]
-                )
-                nrm = np.linalg.norm(pts, axis=1, keepdims=True)
-                pts = np.where(nrm > 0, pts / np.where(nrm == 0, 1, nrm), pts)
+    def fused(batches):
+        for pdf in batches:
+            if len(pdf):
+                pts = _unit_rows(_stack(pdf["v"]))
                 bucket = np.argmax(pts @ cmat.T, axis=1)
-                res = pts - cmat[bucket]
-                cols = []
-                for s in range(m_):
-                    block = res[:, s * sub : (s + 1) * sub]
-                    cols.append(
-                        np.argmax(block @ mats[s].T - halves[s], axis=1)
-                    )
-                codes = np.stack(cols, axis=1).astype("int32")
                 yield pd.DataFrame(
                     {
                         "id": pdf["id"],
-                        "codes": list(codes),
+                        "codes": list(quantize(pts - cmat[bucket])),
                         "bucket": bucket.astype("int32"),
                     }
                 )
 
-        narrow = widen_for_compute(embeddings).select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        coded = narrow.mapInPandas(
-            fused, "id long, codes array<int>, bucket int"
-        )
-        return coded, centroids, codebooks
-
-    if engine != "sql":
-        raise ValueError(f"unknown engine: {engine!r}")
-    vu = _unit_norm_col(F.col(vec_col).cast("array<double>"))
-    mat = _centroid_matrix_literal(centroids)
-    base = embeddings.select(
-        F.col(id_col).alias("id"),
-        vu.alias("vu"),
-        _centroid_argmax(vu, centroids).alias("bucket"),
-    ).withColumn(
-        "residual",
-        F.zip_with(F.col("vu"), F.element_at(mat, F.col("bucket") + 1),
-                   lambda x, c: x - c),
-    )
-    coded = assign_pq_codes(
-        base,
-        codebooks,
-        id_col="id",
-        vec_col="residual",
-        engine=engine,
-        normalize=False,
-        carry_cols=("bucket",),
+    coded = _id_vectors(widen_for_compute(embeddings), id_col, vec_col).mapInPandas(
+        fused, "id long, codes array<int>, bucket int"
     )
     return coded, centroids, codebooks
 
@@ -1179,10 +1110,7 @@ def topk_ivfpq(
     probes = sorted(
         range(len(centroids)), key=lambda j: (-cell_dots[j], j)
     )[:nprobe]
-    dots_lit = F.expr(
-        "array(" + ",".join(f"{x:.17e}" for x in cell_dots) + ")"
-    )
-    est = F.element_at(dots_lit, F.col("bucket") + 1) + _adc_estimate(
+    est = F.element_at(_double_literal(cell_dots), F.col("bucket") + 1) + _adc_estimate(
         qu, codebooks
     )
     cand = (

@@ -26,6 +26,7 @@ from __future__ import annotations
 import json
 import time
 from pathlib import Path
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -158,23 +159,25 @@ def read_resumable(spark: SparkSession, path: str) -> DataFrame:
 
 
 def checkpoint_stage(
-    df: DataFrame, checkpoint_dir: str | None, stage: str
+    build: Callable[[], DataFrame], checkpoint_dir: str | None, stage: str
 ) -> DataFrame:
-    """Persist a stage boundary.
+    """Persist a stage boundary; ``build`` makes the stage's frame.
 
     With a checkpoint_dir: write parquet once, read back (re-runs and
     downstream branching reuse the files — extraction runs exactly once
-    even though nodes and edges both consume it).  Without: Spark
-    persist(), eagerly materialized — downstream consumers are submitted
-    concurrently by AQE, and a lazy cache would be computed redundantly by
-    each of them.
+    even though nodes and edges both consume it).  A committed stage is
+    read back without calling ``build``, so a resumed run plans nothing
+    (and submits no eager probe) for it.  Without: Spark persist(),
+    eagerly materialized — downstream consumers are submitted
+    concurrently by AQE, and a lazy cache would be computed redundantly
+    by each of them.  The caller owns that cache (``is_cached`` is True)
+    and unpersists it when done.
     """
     if checkpoint_dir:
         path = str(Path(checkpoint_dir) / stage)
-        marker = Path(path) / "_SUCCESS"
-        if not marker.exists():
-            df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
-    df = df.persist()
+        if not (Path(path) / "_SUCCESS").exists():
+            build().write.mode("overwrite").parquet(path)
+        return SparkSession.active().read.parquet(path)
+    df = build().persist()
     df.count()
     return df

@@ -56,6 +56,9 @@ class KGResult:
     pruned_edges: DataFrame
     resolution_stats: ResolutionStats | None = None
     metrics: dict = field(default_factory=dict)
+    #: stage frames the run cached (no checkpoint_dir); the caller
+    #: unpersists them once done with the result
+    persisted: list[DataFrame] = field(default_factory=list)
 
 
 def run_kg_pipeline(
@@ -81,22 +84,34 @@ def run_kg_pipeline(
     documents = assemble_documents(transcripts)
     chunks = None
     need_chunks = bool(ckpt or cfg.create_lexical_graph or embed_chunks)
+    persisted: list[DataFrame] = []
+
+    def stage(build, checkpoint_dir, name):
+        df = checkpoint_stage(build, checkpoint_dir, name)
+        if df.is_cached:
+            persisted.append(df)
+        return df
 
     # extraction — the expensive stage: one fused split+extract pass that
     # also emits the chunk rows (kind='chunk' → chunks_view), so the corpus
-    # is split exactly once; checkpointed, then split into nodes/edges
-    graph_rows = extract_from_documents(
-        documents,
-        extractor_fn,
-        splitter_config=cfg.splitter,
-        on_error=cfg.on_error,
-        lexical_config=cfg.lexical,
-        create_from_chunk_edges=cfg.create_lexical_graph,
-        num_partitions=cfg.extract_partitions,
-        emit_chunk_rows=need_chunks,
-        resolve_property=cfg.resolve_property,
+    # is split exactly once; checkpointed, then split into nodes/edges.
+    # Built only when graph_rows is not committed: the extractor's whale
+    # probe is eager, and a resumed run reads the stage back instead
+    graph_rows = stage(
+        lambda: extract_from_documents(
+            documents,
+            extractor_fn,
+            splitter_config=cfg.splitter,
+            on_error=cfg.on_error,
+            lexical_config=cfg.lexical,
+            create_from_chunk_edges=cfg.create_lexical_graph,
+            num_partitions=cfg.extract_partitions,
+            emit_chunk_rows=need_chunks,
+            resolve_property=cfg.resolve_property,
+        ),
+        ckpt,
+        "graph_rows",
     )
-    graph_rows = checkpoint_stage(graph_rows, ckpt, "graph_rows")
     # checkpoint_stage is the eager boundary, so this wall covers
     # everything up to and including split+extract
     walls["extract_s"] = round(time.monotonic() - t_start, 3)
@@ -105,7 +120,7 @@ def run_kg_pipeline(
         # three times (nodes, FROM_DOCUMENT, NEXT_CHUNK window) and
         # re-deriving from the map-typed graph_rows cache per consumer
         # costs more than one small materialization
-        chunks = checkpoint_stage(chunks_view(graph_rows), None, "chunks")
+        chunks = stage(lambda: chunks_view(graph_rows), None, "chunks")
         if embed_chunks:
             chunks = embed_column(chunks)
     entity_nodes, entity_edges = split_graph_rows(graph_rows)
@@ -147,8 +162,8 @@ def run_kg_pipeline(
 
     stats = None
     if cfg.perform_entity_resolution:
-        nodes = checkpoint_stage(nodes, ckpt, "nodes_pre_resolve")
-        edges = checkpoint_stage(edges, ckpt, "edges_pre_resolve")
+        nodes = stage(lambda: nodes, ckpt, "nodes_pre_resolve")
+        edges = stage(lambda: edges, ckpt, "edges_pre_resolve")
         walls["prune_s"] = round(
             time.monotonic() - t_start - walls["extract_s"], 3
         )
@@ -171,6 +186,7 @@ def run_kg_pipeline(
         pruned_edges=pruned_edges,
         resolution_stats=stats,
         metrics=metrics,
+        persisted=persisted,
     )
 
 
@@ -249,6 +265,7 @@ def run_similarity_resolution(
         pruned_nodes=result.pruned_nodes,
         pruned_edges=result.pruned_edges,
         resolution_stats=stats,
+        persisted=result.persisted,
     )
 
 

@@ -114,17 +114,21 @@ def stream_kg_pipeline(
                 resolve_property=cfg.resolve_property,
                 fuzzy_threshold=incremental_fuzzy_threshold,
             )
-            return
-        (
-            result.nodes.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(f"{output_dir}/nodes")
-        )
-        (
-            result.edges.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(f"{output_dir}/edges")
-        )
+        else:
+            (
+                result.nodes.withColumn("batch_id", F.lit(batch_id))
+                .write.mode("append")
+                .parquet(f"{output_dir}/nodes")
+            )
+            (
+                result.edges.withColumn("batch_id", F.lit(batch_id))
+                .write.mode("append")
+                .parquet(f"{output_dir}/edges")
+            )
+        # the batch's stage caches are dead once its output is written;
+        # left persisted they would pile up in executor storage per trigger
+        for df in result.persisted:
+            df.unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

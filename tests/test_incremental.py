@@ -361,6 +361,116 @@ def test_incremental_subsumes_in_batch_exact_tier(spark, fresh_db, tmp_path):
         ), suffix
 
 
+def _sf_feed(spark, tmp_path, n):
+    """sf0.0001 transcripts split by conversation into ``n`` parquet files."""
+    import pandas as pd
+
+    from neo4j_graphrag_python_spark import transcripts as tr
+
+    whole = tmp_path / "all.parquet"
+    tr.write_transcripts(whole, 0.0001)
+    pdf = pd.read_parquet(whole)
+    convs = sorted(pdf["conv_id"].unique())
+    src = tmp_path / "feed"
+    src.mkdir()
+    for i in range(n):
+        part = pdf[pdf["conv_id"].isin(convs[i::n])]
+        part.to_parquet(src / f"f{i}.parquet", index=False)
+    return src
+
+
+#: Spark jobs one incremental trigger submits on the local[4],
+#: 4-shuffle-partition test session: ``run_kg_pipeline`` without the
+#: in-batch exact tier, then ``resolve_batch_incremental`` with the fuzzy
+#: tier, on a second sf0.0001 batch against an existing canonical map.
+#: It reads 60 or 61 on identical runs (one asynchronous AQE job is
+#: timing-dependent), so the budget is the higher reading.  Lower it in
+#: the change that cuts jobs; raise it only with a CHANGES.md entry that
+#: names the phase that needs more.
+INCREMENTAL_JOB_BUDGET = 61
+
+
+def test_incremental_trigger_job_count_within_budget(spark, fresh_db, tmp_path):
+    """Job count is the load-proof cost signal of a stream trigger: wall
+    time swings with host load, but the jobs depend only on the plan."""
+    from neo4j_graphrag_python_spark.operators.extractor import (
+        demo_rules,
+        regex_extractor,
+    )
+    from neo4j_graphrag_python_spark.plans.pipeline import run_kg_pipeline
+    from neo4j_graphrag_python_spark.schema import demo_schema
+    from neo4j_graphrag_python_spark.types import (
+        TRANSCRIPTS_SCHEMA,
+        PipelineConfig,
+        SplitterConfig,
+    )
+
+    src = _sf_feed(spark, tmp_path, 2)
+    cfg = PipelineConfig(
+        splitter=SplitterConfig(600, 200), perform_entity_resolution=False
+    )
+    target = f"{fresh_db}.kg_jobs"
+
+    def trigger(i):
+        batch = spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(
+            str(src / f"f{i}.parquet")
+        )
+        res = run_kg_pipeline(
+            batch, regex_extractor(demo_rules()), demo_schema(), cfg
+        )
+        resolve_batch_incremental(
+            res.nodes, res.edges, target, fuzzy_threshold=0.8
+        )
+
+    trigger(0)
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    group = "incremental-job-budget"
+    sc.setJobGroup(group, "run_kg_pipeline + resolve_batch_incremental")
+    try:
+        trigger(1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= INCREMENTAL_JOB_BUDGET, jobs
+
+
+def test_incremental_stream_releases_batch_caches(spark, fresh_db, tmp_path):
+    """Each micro-batch's persisted stage frames are unpersisted once the
+    batch is merged: nothing stays in the cache manager across triggers."""
+    from neo4j_graphrag_python_spark.operators.extractor import (
+        demo_rules,
+        regex_extractor,
+    )
+    from neo4j_graphrag_python_spark.schema import demo_schema
+    from neo4j_graphrag_python_spark.streaming.stream import (
+        read_transcript_stream,
+        stream_kg_pipeline,
+    )
+    from neo4j_graphrag_python_spark.types import (
+        PipelineConfig,
+        SplitterConfig,
+    )
+
+    src = _sf_feed(spark, tmp_path, 3)
+    spark.catalog.clearCache()
+    q = stream_kg_pipeline(
+        read_transcript_stream(spark, str(src), max_files_per_trigger=1),
+        extractor_fn=regex_extractor(demo_rules()),
+        output_dir=f"{fresh_db}.kg_cache",
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        schema=demo_schema(),
+        config=PipelineConfig(splitter=SplitterConfig(600, 200)),
+        trigger_once=True,
+        sink="catalog_merge_incremental",
+        incremental_fuzzy_threshold=0.8,
+    )
+    q.awaitTermination(300)
+    assert q.lastProgress["batchId"] == 2  # three triggers ran
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_stream_rejects_unknown_sink(spark, tmp_path):
     from neo4j_graphrag_python_spark.streaming.stream import stream_kg_pipeline
 

@@ -378,3 +378,38 @@ def test_pipeline_job_count_within_budget(spark, sf_dir) -> None:
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < jobs <= PIPELINE_JOB_BUDGET, jobs
+
+
+#: Spark jobs a resumed sf0.001 run submits when every checkpointed stage
+#: is already committed: the chunks cache and the resolve phase over the
+#: read-back stages.  Building the extraction frame again would add 3
+#: (its eager whale probe and the assemble shuffle under it).
+RESUME_JOB_BUDGET = 10
+
+
+def test_resumed_run_skips_extraction(spark, sf_dir, tmp_path) -> None:
+    """A run that finds ``graph_rows`` committed reads it back and never
+    builds the extraction frame, so the extractor's eager whale probe
+    (and the assemble shuffle under it) is not submitted again."""
+    transcripts = spark.read.parquet(tr.ensure_transcripts(sf_dir))
+    cfg = PipelineConfig(
+        splitter=SplitterConfig(600, 200), checkpoint_dir=str(tmp_path / "ckpt")
+    )
+
+    def run():
+        return run_kg_pipeline(
+            transcripts, regex_extractor(demo_rules()), demo_schema(), cfg
+        )
+
+    run()
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    group = "pipeline-resume-jobs"
+    sc.setJobGroup(group, "resumed run_kg_pipeline")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= RESUME_JOB_BUDGET, jobs

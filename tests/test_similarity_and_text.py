@@ -920,6 +920,40 @@ def test_pq_fit_is_deterministic_and_shaped() -> None:
         fit_pq_codebooks(sample, m=5)
 
 
+def _fold_norm(v):
+    """Unit-normalize with a left-to-right sum of squares (zero vectors
+    pass through)."""
+    n = 0.0
+    for x in v:
+        n += x * x
+    n = n**0.5
+    return [x / n for x in v] if n > 0 else list(v)
+
+
+def _fold_argmax(v, rows, offsets=None):
+    """First-wins argmax of fold-order dot(v, row) − offset."""
+    best, best_adj = 0, None
+    for j, c in enumerate(rows):
+        d = 0.0
+        for x, y in zip(v, c):
+            d += x * y
+        adj = d - (offsets[j] if offsets else 0.0)
+        if best_adj is None or adj > best_adj:
+            best, best_adj = j, adj
+    return best
+
+
+def _pq_replica(vn, books):
+    """Per-subspace PQ codes of an already-prepared vector: first-wins
+    argmax(fold-order dot − ½|c|²), straight-line Python."""
+    out = []
+    for s, book in enumerate(books):
+        sub = len(book[0])
+        half = [0.5 * sum(float(y) * float(y) for y in c) for c in book]
+        out.append(_fold_argmax(vn[s * sub : (s + 1) * sub], book, half))
+    return out
+
+
 def test_pq_codes_match_fold_order_replication(spark) -> None:
     import random as _r
 
@@ -936,31 +970,9 @@ def test_pq_codes_match_fold_order_replication(spark) -> None:
     )
     got = {
         r["id"]: list(r["codes"])
-        for r in assign_pq_codes(df, books, engine="sql").collect()
+        for r in assign_pq_codes(df, books).collect()
     }
-
-    def replicate(v):
-        n = 0.0
-        for x in v:
-            n += x * x
-        n = n**0.5
-        vn = [x / n for x in v] if n > 0 else list(v)
-        out = []
-        for s, book in enumerate(books):
-            sub = len(book[0])
-            block = vn[s * sub : (s + 1) * sub]
-            best, best_adj = 0, None
-            for j, c in enumerate(book):
-                d = 0.0
-                for x, y in zip(block, c):
-                    d += x * y
-                adj = d - 0.5 * sum(float(y) * float(y) for y in c)
-                if best_adj is None or adj > best_adj:
-                    best, best_adj = j, adj
-            out.append(best)
-        return out
-
-    assert got == {i: replicate(v) for i, v in vecs.items()}
+    assert got == {i: _pq_replica(_fold_norm(v), books) for i, v in vecs.items()}
 
 
 def test_pq_code_tie_is_first_wins(spark) -> None:
@@ -968,12 +980,11 @@ def test_pq_code_tie_is_first_wins(spark) -> None:
         assign_pq_codes,
     )
 
-    # duplicate centroids → exact tie → both engines pick the FIRST
+    # duplicate centroids → exact tie → the quantizer picks the FIRST
     books = [[[1.0, 0.0], [1.0, 0.0], [0.0, 1.0]]]
     df = spark.createDataFrame([(1, [1.0, 0.0])], ["vec_id", "embedding"])
-    for engine in ("sql", "pandas"):
-        out = assign_pq_codes(df, books, engine=engine).collect()
-        assert list(out[0]["codes"]) == [0], engine
+    out = assign_pq_codes(df, books).collect()
+    assert list(out[0]["codes"]) == [0]
 
 
 def test_pq_topk_lossless_at_rescore_on_clustered(spark) -> None:
@@ -1066,10 +1077,11 @@ def test_ivfpq_recall_with_narrow_probe_on_clustered(spark) -> None:
     assert len(got & true) >= 8  # ≥0.8 recall on a cleanly clustered corpus
 
 
-def test_ivfpq_engines_agree_and_carry_bucket(spark) -> None:
-    """pandas (Arrow GEMM) and sql (fold-order HOF) residual quantizers
-    must emit identical (id, bucket, codes) given shared centroids and
-    codebooks — same engine-equality contract as flat PQ."""
+def test_ivfpq_codes_match_replica_and_carry_bucket(spark) -> None:
+    """The fused numpy pass (normalize → cell argmax → residual → PQ
+    codes) must emit the (id, bucket, codes) a straight-line Python
+    replica gives with fold-order dots, given shared centroids and
+    codebooks."""
     import random as _r
 
     from neo4j_graphrag_python_spark.operators.similarity import (
@@ -1084,19 +1096,17 @@ def test_ivfpq_engines_agree_and_carry_bucket(spark) -> None:
     _, cents, books = build_ivfpq_index(
         df, num_centroids=3, m=4, pq_centroids=6, sample_n=80
     )
+    coded, _, _ = build_ivfpq_index(df, centroids=cents, codebooks=books)
+    got = {r["id"]: (r["bucket"], list(r["codes"])) for r in coded.collect()}
 
-    def snap(engine):
-        coded, _, _ = build_ivfpq_index(
-            df, centroids=cents, codebooks=books, engine=engine
-        )
-        return {
-            r["id"]: (r["bucket"], list(r["codes"]))
-            for r in coded.collect()
-        }
+    def replicate(v):
+        vn = _fold_norm(v)
+        cell = _fold_argmax(vn, cents)
+        res = [x - c for x, c in zip(vn, cents[cell])]
+        return cell, _pq_replica(res, books)
 
-    a, b = snap("pandas"), snap("sql")
-    assert a == b
-    assert set(v[0] for v in a.values()) <= {0, 1, 2}
+    assert got == {i: replicate(v) for i, v in rows}
+    assert set(v[0] for v in got.values()) <= {0, 1, 2}
 
 
 def test_pq_topk_rescore_smaller_than_k(spark) -> None:
@@ -1136,9 +1146,9 @@ def test_pq_rescore_pushes_in_filter_to_scan(spark, tmp_path) -> None:
     assert len(out.collect()) == 5
 
 
-def test_pq_pandas_engine_matches_sql_engine(spark) -> None:
-    """The Arrow/numpy scale path and the JVM reference path agree on
-    every code (they share the argmax(dot − ½|c|²) criterion; float ties
+def test_pq_codes_match_replica_on_random_corpus(spark) -> None:
+    """The Arrow/numpy quantizer agrees with the straight-line fold-order
+    replica on every code of a 200-vector random corpus (float ties
     between distinct centroids are measure-zero on random data)."""
     import random as _r
 
@@ -1153,17 +1163,11 @@ def test_pq_pandas_engine_matches_sql_engine(spark) -> None:
     ]
     books = fit_pq_codebooks([v for _, v in rows], m=4, num_centroids=8)
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    a = {
+    got = {
         r["id"]: list(r["codes"])
-        for r in assign_pq_codes(df, books, engine="pandas").collect()
+        for r in assign_pq_codes(df, books).collect()
     }
-    b = {
-        r["id"]: list(r["codes"])
-        for r in assign_pq_codes(df, books, engine="sql").collect()
-    }
-    assert a == b
-    with pytest.raises(ValueError):
-        assign_pq_codes(df, books, engine="nope").collect()
+    assert got == {i: _pq_replica(_fold_norm(v), books) for i, v in rows}
 
 
 def test_linear_quality_classifier_matches_straightline(spark) -> None:
