@@ -7,7 +7,9 @@ queries at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 Output: {"metric": "kg_pipeline_sec", "value": <sec>, "unit": "sec",
          "queries": {...per-query sec...}, "sf": <sf>,
          "parallelism": <cores>, "triples_emitted": N,
-         "triples_per_sec": N, "canonical_triples": N}
+         "triples_per_sec": N, "canonical_triples": N,
+         "attempts": [<sec>, ...], "codegen_compiles": [N, ...],
+         "loadavg_1m": [...]}
 
 The pipeline rows time the library entry points a user calls —
 ``run_kg_pipeline`` (``collect_metrics=True``), then
@@ -24,7 +26,11 @@ read the rest from ``KGResult.metrics``:
   the extraction stage produced (entity rels + FROM_CHUNK lineage edges);
   ``triples_per_sec`` = ``edges_emitted / extract_s``;
 * ``canonical_triples``: distinct (subj, pred, obj) after pruning and
-  resolution.
+  resolution;
+* ``codegen_compiles``: per timed attempt, the generated classes Spark
+  compiled with Janino (``CodegenMetrics``) from the pipeline through
+  the fuzzy pass.  The first attempt compiles the plan's classes; a
+  repeat should find them in the session's codegen cache and read near 0.
 
 With ``BENCH_SKIP_RESOLVE=1`` the pipeline runs with
 ``create_lexical_graph=False`` and ``perform_entity_resolution=False``
@@ -96,7 +102,15 @@ def main() -> None:
         perform_entity_resolution=not skip_resolve,
     )
 
-    def one_attempt() -> tuple[dict, int, int | None]:
+    # Janino compilations per attempt: a repeat that finds its generated
+    # classes in the session's codegen cache compiles almost none
+    compiles = (
+        spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+
+    def one_attempt() -> tuple[dict, int, int | None, int]:
+        compiled0 = compiles.getCount()
         t0 = time.perf_counter()
         result = run_kg_pipeline(
             transcripts, regex_extractor(demo_rules()), demo_schema(), config
@@ -121,15 +135,16 @@ def main() -> None:
                 result, method="fuzzy", similarity_threshold=0.9
             ).nodes.where(F.col("is_entity")).count()
             timings["kg_fuzzy_resolve"] = round(time.perf_counter() - t0, 3)
+        compiled = compiles.getCount() - compiled0
         spark.catalog.clearCache()
-        return timings, result.metrics["edges_emitted"], canon
+        return timings, result.metrics["edges_emitted"], canon, compiled
 
     loadavgs = []
     attempts = []
     for _ in range(max(1, repeats)):
         loadavgs.append(round(os.getloadavg()[0], 2))
         attempts.append(one_attempt())
-    timings, n_emitted, canonical_triples = min(
+    timings, n_emitted, canonical_triples, _ = min(
         attempts, key=lambda a: a[0]["kg_pipeline_total"]
     )
     pipeline_sec = timings["kg_pipeline_total"]
@@ -211,6 +226,7 @@ def main() -> None:
         "triples_per_sec": round(n_emitted / extract_sec, 1) if extract_sec else None,
         "canonical_triples": canonical_triples,
         "attempts": [a[0]["kg_pipeline_total"] for a in attempts],
+        "codegen_compiles": [a[3] for a in attempts],
         "loadavg_1m": loadavgs,
     }
     spark.stop()

@@ -102,33 +102,36 @@ def stream_kg_pipeline(
         if batch_df.isEmpty():
             return
         result = run_kg_pipeline(batch_df, extractor_fn, schema, cfg)
-        if incremental:
-            from neo4j_graphrag_python_spark.streaming.incremental import (
-                resolve_batch_incremental,
-            )
+        try:
+            if incremental:
+                from neo4j_graphrag_python_spark.streaming.incremental import (
+                    resolve_batch_incremental,
+                )
 
-            resolve_batch_incremental(
-                result.nodes,
-                result.edges,
-                output_dir,
-                resolve_property=cfg.resolve_property,
-                fuzzy_threshold=incremental_fuzzy_threshold,
-            )
-        else:
-            (
-                result.nodes.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("append")
-                .parquet(f"{output_dir}/nodes")
-            )
-            (
-                result.edges.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("append")
-                .parquet(f"{output_dir}/edges")
-            )
-        # the batch's stage caches are dead once its output is written;
-        # left persisted they would pile up in executor storage per trigger
-        for df in result.persisted:
-            df.unpersist()
+                resolve_batch_incremental(
+                    result.nodes,
+                    result.edges,
+                    output_dir,
+                    resolve_property=cfg.resolve_property,
+                    fuzzy_threshold=incremental_fuzzy_threshold,
+                )
+            else:
+                (
+                    result.nodes.withColumn("batch_id", F.lit(batch_id))
+                    .write.mode("append")
+                    .parquet(f"{output_dir}/nodes")
+                )
+                (
+                    result.edges.withColumn("batch_id", F.lit(batch_id))
+                    .write.mode("append")
+                    .parquet(f"{output_dir}/edges")
+                )
+        finally:
+            # the batch's stage caches are dead once its output is written
+            # or the write has failed; left persisted they would pile up in
+            # executor storage per trigger, or per restart of a failed query
+            for df in result.persisted:
+                df.unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

@@ -471,6 +471,50 @@ def test_incremental_stream_releases_batch_caches(spark, fresh_db, tmp_path):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_incremental_stream_failed_batch_releases_caches(
+    spark, fresh_db, tmp_path, monkeypatch
+):
+    """A batch whose merge raises still unpersists its stage frames: a
+    supervisor that restarts the failed query in the same session must
+    not inherit them."""
+    from pyspark.errors import StreamingQueryException
+
+    from neo4j_graphrag_python_spark.operators.extractor import (
+        demo_rules,
+        regex_extractor,
+    )
+    from neo4j_graphrag_python_spark.schema import demo_schema
+    from neo4j_graphrag_python_spark.streaming import incremental
+    from neo4j_graphrag_python_spark.streaming.stream import (
+        read_transcript_stream,
+        stream_kg_pipeline,
+    )
+    from neo4j_graphrag_python_spark.types import (
+        PipelineConfig,
+        SplitterConfig,
+    )
+
+    def failing_merge(*args, **kwargs):
+        raise RuntimeError("merge failed")
+
+    monkeypatch.setattr(incremental, "resolve_batch_incremental", failing_merge)
+    src = _sf_feed(spark, tmp_path, 1)
+    spark.catalog.clearCache()
+    q = stream_kg_pipeline(
+        read_transcript_stream(spark, str(src)),
+        extractor_fn=regex_extractor(demo_rules()),
+        output_dir=f"{fresh_db}.kg_failed",
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        schema=demo_schema(),
+        config=PipelineConfig(splitter=SplitterConfig(600, 200)),
+        trigger_once=True,
+        sink="catalog_merge_incremental",
+    )
+    with pytest.raises(StreamingQueryException, match="merge failed"):
+        q.awaitTermination(300)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_stream_rejects_unknown_sink(spark, tmp_path):
     from neo4j_graphrag_python_spark.streaming.stream import stream_kg_pipeline
 

@@ -12,6 +12,7 @@ from neo4j_graphrag_python_spark import transcripts as tr
 from neo4j_graphrag_python_spark.operators.extractor import demo_rules, regex_extractor
 from neo4j_graphrag_python_spark.plans.pipeline import (
     run_kg_pipeline,
+    run_similarity_resolution,
     triples_view,
 )
 from neo4j_graphrag_python_spark.schema import demo_schema
@@ -413,3 +414,44 @@ def test_resumed_run_skips_extraction(spark, sf_dir, tmp_path) -> None:
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < jobs <= RESUME_JOB_BUDGET, jobs
+
+
+#: Janino compilations a repeated sf0.001 operation (pipeline, triples
+#: collect, fuzzy resolve) submits once an identical run has warmed the
+#: session's codegen cache; the first run compiles ~205.  Repeats read
+#: 4-20 on the local[4] test session: AQE re-plans some query stages, and
+#: a whole-stage class whose codegen stage id moved is new code to the
+#: cache, so the budget is the highest reading.  Raise it only with a
+#: CHANGES.md entry that names the phase that needs more.
+CODEGEN_COMPILE_BUDGET = 20
+
+
+def test_repeated_run_reuses_generated_code(spark, sf_dir) -> None:
+    """An operation repeated in one session compiles (almost) no new
+    generated code: the codegen cache ``build_spark`` sizes holds every
+    class the first run compiled.  Under Spark's default of 100 entries
+    the LRU evicts each class before its next use, and every repeat
+    recompiles them all."""
+    transcripts = spark.read.parquet(tr.ensure_transcripts(sf_dir))
+    cfg = PipelineConfig(splitter=SplitterConfig(600, 200))
+
+    def operation():
+        kg = run_kg_pipeline(
+            transcripts, regex_extractor(demo_rules()), demo_schema(), cfg
+        )
+        assert triples_view(kg.nodes, kg.edges).collect()
+        fuzzy = run_similarity_resolution(
+            kg, method="fuzzy", similarity_threshold=0.9
+        )
+        assert fuzzy.nodes.where(F.col("is_entity")).collect()
+
+    compiles = (
+        spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    operation()
+    spark.catalog.clearCache()
+    before = compiles.getCount()
+    operation()
+    new = compiles.getCount() - before
+    assert new <= CODEGEN_COMPILE_BUDGET, new
